@@ -401,7 +401,8 @@ object Bench {
     println(s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec","n_queries":${driftDefended.size},"drift_1p5x":$drift,"slowest":$slow20,"slowest_jobs":$slow20Jobs,"floor_job_shuffle":${fmt(floorShuffle)},"sf":"$sfDir"}""")
     // stop Spark BEFORE the contract line: anything the JVM/Spark shutdown
     // path might still print must not land after it
-    spark.stop()
+    // a throwing stop() (shutdown race) must not suppress the contract line
+    try spark.stop() catch { case scala.util.control.NonFatal(_) => }
     System.err.flush()
     // FINAL LINE = THE DRIVER CONTRACT (header comment, lines 5-6), exactly
     // {"metric","value","unit","queries","sf"} with the COMPLETE per-query

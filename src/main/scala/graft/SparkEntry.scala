@@ -184,7 +184,7 @@ object SparkEntry {
 
   /** q223 oracle: token drift between two STORE VERSIONS of a maintained
     * profile — version 1 summarizes snapshot A (doc_id even), version 2
-    * the accumulated A ∪ B (a merge-ADD append, the ingestTokenProfile
+    * the accumulated A ∪ B (a `mergeAdd`, the ingestTokenProfile
     * shape) — so the reference answer is [[sqlTokenDrift]] with side B
     * replaced by the WHOLE corpus. */
   private lazy val sqlTokenDriftStoreVersions: String = """
@@ -1143,8 +1143,8 @@ object SparkEntry {
         FROM g ORDER BY source"""
 
   /** Build-once token-profile STORE for q223: version 1 = snapshot A's
-    * profile, version 2 = the accumulated A ∪ B via a merge-ADD append
-    * (the `ingestTokenProfile` maintenance shape in batch form). The
+    * profile, version 2 = the accumulated A ∪ B via `mergeAdd` (the
+    * `ingestTokenProfile` maintenance shape in batch form). The
     * query then answers "what drifted between any two historical corpus
     * states" by time-traveling the profile store — zero corpus scans,
     * the monitoring dashboard's retrospective read. */
@@ -1153,23 +1153,15 @@ object SparkEntry {
     val store = new core.BucketedStore(root, numBuckets = 16)(s)
     if (store.latestVersion("tprof").isEmpty) {
       val docs = T(s, dir, "documents")
-      store.write(ops.TextOps.tokenProfile(
-        docs.filter(col("doc_id") % 2 === 0), "text"), "tprof", Seq("token"))
-      val b = ops.TextOps.tokenProfile(
-        docs.filter(col("doc_id") % 2 === 1), "text")
-      val merged = store.read("tprof", Seq("token"))
-        .select(col("token"), col("n").as("__n0"))
-        .join(b, Seq("token"), "full_outer")
-        .select(col("token"),
-          (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"))
-      store.merge("tprof", merged, Seq("token"))
+      Seq(0, 1).foreach(r => store.mergeAdd("tprof", ops.TextOps.tokenProfile(
+        docs.filter(col("doc_id") % 2 === r), "text"), Seq("token")))
     }
     root
   }
 
   /** Build-once VERSIONED (bucket_start, token, n) profile store for
     * q294 — the retrospective novelty-timeline fixture: v1 holds the
-    * first two weeks' bucketed token counts, v2 merge-ADDs the rest
+    * first two weeks' bucketed token counts, v2 `mergeAdd`s the rest
     * (the additive maintenance write), so reading v_head vs v_last
     * replays "what the timeline store looked like then vs now". */
   private def bucketTokenProfileStoreFixture(s: SparkSession, dir: String): String = {
@@ -1185,14 +1177,8 @@ object SparkEntry {
       }
       val docs = T(s, dir, "documents")
       val keys = Seq("bucket_start", "token")
-      store.write(prof(docs.filter(col("doc_id") < 336)), "btprof", keys)
-      val b = prof(docs.filter(col("doc_id") >= 336))
-      val merged = store.read("btprof", keys)
-        .select(col("bucket_start"), col("token"), col("n").as("__n0"))
-        .join(b, keys, "full_outer")
-        .select(col("bucket_start"), col("token"),
-          (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"))
-      store.merge("btprof", merged, keys)
+      store.mergeAdd("btprof", prof(docs.filter(col("doc_id") < 336)), keys)
+      store.mergeAdd("btprof", prof(docs.filter(col("doc_id") >= 336)), keys)
     }
     root
   }
@@ -1231,9 +1217,9 @@ object SparkEntry {
 
   /** Build-once embedding-profile STORE for q224 — the embedding twin of
     * [[tokenProfileStoreFixture]]: version 1 = snapshot A's additive
-    * (pos, bin) profile, version 2 = the accumulated A ∪ B via a
-    * merge-ADD append (the `ingestEmbeddingProfile` maintenance shape in
-    * batch form; n and s both sum, the profile's additivity contract).
+    * (pos, bin) profile, version 2 = the accumulated A ∪ B via
+    * `mergeAdd` (the `ingestEmbeddingProfile` maintenance shape in batch
+    * form; n and s both sum, the profile's additivity contract).
     * Time-traveling the store then answers "which dimensions drifted
     * since version N" with two profile reads and zero corpus scans. */
   private def embeddingProfileStoreFixture(s: SparkSession, dir: String): String = {
@@ -1241,69 +1227,42 @@ object SparkEntry {
     val store = new core.BucketedStore(root, numBuckets = 16)(s)
     if (store.latestVersion("eprof").isEmpty) {
       val emb = T(s, dir, "embeddings")
-      store.write(ops.Similarity.embeddingProfile(
-        emb.filter(col("vec_id") % 2 === 0), "embedding"), "eprof",
-        Seq("pos", "bin"))
-      val b = ops.Similarity.embeddingProfile(
-        emb.filter(col("vec_id") % 2 === 1), "embedding")
-      val merged = store.read("eprof", Seq("pos", "bin"))
-        .select(col("pos"), col("bin"), col("n").as("__n0"), col("s").as("__s0"))
-        .join(b, Seq("pos", "bin"), "full_outer")
-        .select(col("pos"), col("bin"),
-          (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-          (coalesce(col("__s0"), lit(0L)) + coalesce(col("s"), lit(0L))).as("s"))
-      store.merge("eprof", merged, Seq("pos", "bin"))
+      Seq(0, 1).foreach(r => store.mergeAdd("eprof", ops.Similarity.embeddingProfile(
+        emb.filter(col("vec_id") % 2 === r), "embedding"), Seq("pos", "bin")))
     }
     root
   }
 
   /** Build-once SEGMENTED token-profile STORE for q243 — the grouped twin
     * of [[tokenProfileStoreFixture]]: version 1 = snapshot A's per-(source,
-    * token) profile, version 2 = the accumulated A ∪ B via a merge-ADD
-    * append (the `ingestTokenProfileByGroup` maintenance shape in batch
-    * form). Time-traveling the store answers "which SOURCE drifted since
+    * token) profile, version 2 = the accumulated A ∪ B via `mergeAdd`
+    * (the `ingestTokenProfileByGroup` maintenance shape in batch form).
+    * Time-traveling the store answers "which SOURCE drifted since
     * version N" with two profile reads and zero corpus scans. */
   private def groupedTokenProfileStoreFixture(s: SparkSession, dir: String): String = {
     val root = storeFixtureRoot(s, dir, "gtprofstore", "documents")
     val store = new core.BucketedStore(root, numBuckets = 16)(s)
     if (store.latestVersion("gtprof").isEmpty) {
       val docs = T(s, dir, "documents")
-      store.write(ops.TextOps.tokenProfileByGroup(
-        docs.filter(col("doc_id") % 40 < 20), "text", "source"), "gtprof",
-        Seq("source", "token"))
-      val b = ops.TextOps.tokenProfileByGroup(
-        docs.filter(col("doc_id") % 40 >= 20), "text", "source")
-      val merged = store.read("gtprof", Seq("source", "token"))
-        .select(col("source"), col("token"), col("n").as("__n0"))
-        .join(b, Seq("source", "token"), "full_outer")
-        .select(col("source"), col("token"),
-          (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"))
-      store.merge("gtprof", merged, Seq("source", "token"))
+      Seq(col("doc_id") % 40 < 20, col("doc_id") % 40 >= 20).foreach(half =>
+        store.mergeAdd("gtprof", ops.TextOps.tokenProfileByGroup(
+          docs.filter(half), "text", "source"), Seq("source", "token")))
     }
     root
   }
 
   /** Build-once SEGMENTED embedding-profile STORE for q244 — version 1 =
-    * snapshot A's (label, pos, bin) profile, version 2 = the merge-ADDed
-    * accumulation (n and s both sum). */
+    * snapshot A's (label, pos, bin) profile, version 2 = the accumulation
+    * via `mergeAdd` (n and s both sum). */
   private def groupedEmbeddingProfileStoreFixture(s: SparkSession, dir: String): String = {
     val root = storeFixtureRoot(s, dir, "geprofstore", "embeddings")
     val store = new core.BucketedStore(root, numBuckets = 16)(s)
     if (store.latestVersion("geprof").isEmpty) {
       val emb = T(s, dir, "embeddings")
-      store.write(ops.Similarity.embeddingProfileByGroup(
-        emb.filter(col("vec_id") % 2 === 0), "embedding", "label"), "geprof",
-        Seq("label", "pos", "bin"))
-      val b = ops.Similarity.embeddingProfileByGroup(
-        emb.filter(col("vec_id") % 2 === 1), "embedding", "label")
-      val merged = store.read("geprof", Seq("label", "pos", "bin"))
-        .select(col("label"), col("pos"), col("bin"),
-          col("n").as("__n0"), col("s").as("__s0"))
-        .join(b, Seq("label", "pos", "bin"), "full_outer")
-        .select(col("label"), col("pos"), col("bin"),
-          (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-          (coalesce(col("__s0"), lit(0L)) + coalesce(col("s"), lit(0L))).as("s"))
-      store.merge("geprof", merged, Seq("label", "pos", "bin"))
+      Seq(0, 1).foreach(r => store.mergeAdd("geprof",
+        ops.Similarity.embeddingProfileByGroup(
+          emb.filter(col("vec_id") % 2 === r), "embedding", "label"),
+        Seq("label", "pos", "bin")))
     }
     root
   }
@@ -3234,7 +3193,7 @@ object SparkEntry {
 
   /** q224 oracle: embedding drift between two STORE VERSIONS of a
     * maintained profile — version 1 summarizes snapshot A (vec_id even),
-    * version 2 the accumulated A ∪ B (merge-ADD append, the
+    * version 2 the accumulated A ∪ B (`mergeAdd`, the
     * ingestEmbeddingProfile shape) — so the reference answer is
     * [[sqlEmbeddingDrift]] with side B replaced by the WHOLE table. */
   private lazy val sqlEmbeddingDriftStoreVersions: String = s"""
@@ -3581,7 +3540,7 @@ object SparkEntry {
         FROM r ORDER BY label, rank"""
 
   /** q243 oracle: SEGMENTED token drift between two STORE VERSIONS — v1
-    * summarizes snapshot A per source, v2 the merge-ADDed A ∪ B, so the
+    * summarizes snapshot A per source, v2 the `mergeAdd`ed A ∪ B, so the
     * reference is [[sqlTokenDriftByGroup]] with side B = the WHOLE
     * corpus. */
   private lazy val sqlTokenDriftByGroupStoreVersions: String = """

@@ -626,12 +626,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   def merge(feature: String, updates: DataFrame, entityKeys: Seq[String]): Long = {
     val prev = latestVersion(feature)
       .getOrElse(throw new IllegalArgumentException(s"merge into empty feature $feature; write() first"))
-    // a clustered version's manifest keys are z-ranges, not hash buckets —
-    // hash-routing updates into it would silently corrupt; fail loudly
-    require(clusteredBy(feature, prev).isEmpty,
-      s"feature $feature v$prev is Z-order clustered; merge needs a hash-bucketed version (re-write, then merge)")
-    val manifest = readManifest(feature, prev)
-    val v = prev + 1
+    val manifest = hashManifest(feature, prev, "merge")
 
     // persisted: the dup-key check, the touched-bucket collect, and the
     // merged write are all actions over this frame — without the persist an
@@ -654,43 +649,102 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
 
     // current rows of ONLY the touched buckets
     val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
-    val currentTouched =
-      if (touchedRels.isEmpty) None
-      else Some(readPaths(feature, prev, touchedRels))
+    val merged =
+      if (touchedRels.isEmpty) upd
+      else readPaths(feature, prev, touchedRels).withColumn("__b", bucketCol(entityKeys))
+        .join(upd.select(entityKeys.map(col): _*), entityKeys, "left_anti")
+        .unionByName(upd, allowMissingColumns = true)
+    commitTouched(feature, prev, manifest, touched, merged)
+    } finally upd.unpersist(false)
+  }
 
-    val merged = currentTouched match {
-      case None => upd
-      case Some(cur) =>
-        cur.withColumn("__b", bucketCol(entityKeys))
-          .join(upd.select(entityKeys.map(col): _*), entityKeys, "left_anti")
-          .unionByName(upd, allowMissingColumns = true)
+  /** FILE-LEVEL MERGE-ADD for additive profiles: every non-key column of
+    * `batch` is an exact additive sum, and the new version holds
+    * stored + batch per entity key. Reads ONLY the buckets the batch hashes
+    * into and rewrites them as
+    * `union(stored touched rows, batch).groupBy(keys).agg(sum(coalesce(c, 0)))`
+    * — keys present on either side appear once, rows of other keys in a
+    * touched bucket pass through with +0, duplicate keys inside the batch
+    * are summed too. Untouched buckets carry by manifest reference. One
+    * version per call; the first call on a fresh feature writes the summed
+    * batch.
+    *
+    * NULL keys add as ONE group (SQL `GROUP BY` semantics, the same rule
+    * as the profile-served drift reads), unlike [[merge]], whose equi-join
+    * never matches a NULL key and so accumulates NULL-key rows. */
+  def mergeAdd(feature: String, batch: DataFrame, entityKeys: Seq[String]): Long = {
+    def summed(rows: DataFrame): DataFrame = {
+      val adds = rows.schema.fields.filterNot(f => entityKeys.contains(f.name))
+      require(adds.nonEmpty &&
+        adds.forall(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]),
+        s"mergeAdd into $feature: needs numeric non-key sum columns, got " +
+          adds.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
+      val sums = adds.map(f =>
+        sum(coalesce(col(f.name), lit(0))).cast(f.dataType).as(f.name))
+      rows.groupBy(entityKeys.map(col): _*)
+        .agg(sums.head, sums.tail: _*)
+        .select(rows.columns.map(col): _*)
     }
-    merged.write.mode(SaveMode.Overwrite)
+    latestVersion(feature) match {
+      case None => write(summed(batch), feature, entityKeys)
+      case Some(prev) =>
+        val manifest = hashManifest(feature, prev, "mergeAdd")
+        // persisted: the touched-bucket collect and the summed write both
+        // act on the batch — its builder pipeline runs once
+        val bp = batch.withColumn("__b", bucketCol(entityKeys))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val touched = bp.select("__b").distinct().collect().map(_.getInt(0)).toSet
+          val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
+          val rows =
+            if (touchedRels.isEmpty) bp.drop("__b")
+            else readPaths(feature, prev, touchedRels)
+              .unionByName(bp.drop("__b"), allowMissingColumns = true)
+          commitTouched(feature, prev, manifest, touched,
+            summed(rows).withColumn("__b", bucketCol(entityKeys)))
+        } finally bp.unpersist(false)
+    }
+  }
+
+  /** Manifest of `prev`, refusing a Z-order clustered version: its manifest
+    * keys are z-ranges, not hash buckets, and hash-routing rows into it
+    * would silently corrupt. */
+  private def hashManifest(feature: String, prev: Long, op: String): Map[Int, Seq[String]] = {
+    require(clusteredBy(feature, prev).isEmpty,
+      s"feature $feature v$prev is Z-order clustered; $op needs a hash-bucketed version (re-write, then $op)")
+    readManifest(feature, prev)
+  }
+
+  /** Commit tail of [[merge]] and [[mergeAdd]]: `rewritten` (with `__b`) is
+    * the COMPLETE new content of the `touched` buckets. It becomes version
+    * prev+1, whose manifest references the untouched buckets' existing
+    * files. Every touched bucket holds at least one batch row, so the
+    * rewritten bucket set IS `touched` — no collect needed. */
+  private def commitTouched(feature: String, prev: Long,
+      manifest: Map[Int, Seq[String]], touched: Set[Int], rewritten: DataFrame): Long = {
+    val v = prev + 1
+    rewritten.write.mode(SaveMode.Overwrite)
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
-    val newBuckets = merged.select("__b").distinct().collect().map(_.getInt(0))
-    val newManifest = (manifest -- touched) ++
-      newBuckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap
-    writeManifest(feature, v, newManifest)
+    val newRels = touched.toSeq.sorted.map(b => b -> s"files_v$v/__b=$b")
+    writeManifest(feature, v, (manifest -- touched) ++ newRels.map { case (b, r) => b -> Seq(r) })
     // stats: untouched buckets carry forward by reference (their files didn't
     // change); rewritten buckets recompute over the same columns the previous
     // version tracked — one narrow agg over only the rewritten slice
     val prevStats = readStats(feature, prev)
     val trackedCols = prevStats.values.flatMap(_.keys).toSeq.distinct
-    val mergedStats =
+    val stats =
       if (trackedCols.isEmpty) Map.empty[Int, Map[String, (Double, Double)]]
       else {
-        val recomputed = computeStats(merged, trackedCols.filter(merged.columns.contains))
+        val recomputed = computeStats(rewritten, trackedCols.filter(rewritten.columns.contains))
         val st = (prevStats -- touched) ++ recomputed
         writeStats(feature, v, st)
         st
       }
-    // Delta view of the merge: rewritten buckets' new files are added, the
-    // replaced files removed; untouched buckets carry implicitly
-    writeDeltaLog(feature, v, merged.schema.json,
-      newBuckets.map(b => s"files_v$v/__b=$b").toSeq,
-      manifest.filter(t => touched(t._1)).values.flatten.toSeq, mergedStats)
+    // Delta view: rewritten buckets' new files are added, the replaced files
+    // removed; untouched buckets carry implicitly
+    writeDeltaLog(feature, v, rewritten.schema.json, newRels.map(_._2),
+      manifest.filter(t => touched(t._1)).values.flatten.toSeq, stats)
     v
-    } finally upd.unpersist(false)
   }
 
   /** O(batch) APPEND: route `rows` to their buckets and ADD the new file
@@ -705,9 +759,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   def appendBucketed(feature: String, rows: DataFrame, entityKeys: Seq[String]): Long = {
     val prev = latestVersion(feature)
       .getOrElse(throw new IllegalArgumentException(s"append into empty feature $feature; write() first"))
-    require(clusteredBy(feature, prev).isEmpty,
-      s"feature $feature v$prev is Z-order clustered; append needs hash routing")
-    val manifest = readManifest(feature, prev)
+    val manifest = hashManifest(feature, prev, "append")
     val v = prev + 1
     val bucketed = rows.withColumn("__b", bucketCol(entityKeys))
     bucketed.write.mode(SaveMode.Overwrite)
@@ -749,9 +801,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   def compactBuckets(feature: String, entityKeys: Seq[String]): Long = {
     val prev = latestVersion(feature)
       .getOrElse(throw new IllegalArgumentException(s"feature $feature has no versions"))
-    require(clusteredBy(feature, prev).isEmpty,
-      s"feature $feature v$prev is Z-order clustered; compact needs hash routing")
-    val manifest = readManifest(feature, prev)
+    val manifest = hashManifest(feature, prev, "compact")
     val multi = manifest.filter(_._2.size > 1)
     if (multi.isEmpty) return prev
     val v = prev + 1

@@ -568,11 +568,11 @@ object Similarity {
     // aggregations + a dim-keyed full-outer join. Row-identical: n was
     // count(*) (rows incl. padded-null components) = sum of a 1-indicator;
     // s was sum(q) null-skipping = sum of coalesce(q, 0).
-    def side(df: DataFrame, isA: Boolean) = df
+    def side(df: DataFrame) = df
       .select(posexplode(quantize(col(vecCol), dim)).as(Seq("pos", "__q")))
       .select(col("pos"), lit(1L).as("__n"),
         coalesce(col("__q"), lit(0L)).as("__s"))
-    meanDriftFromJoined(sideSumsBoth(side(dfA, true), side(dfB, false), Seq("pos")))
+    meanDriftFromJoined(sideSumsBoth(side(dfA), side(dfB), Seq("pos")))
   }
 
   /** ONE tagged-union aggregation producing BOTH sides' (n, s) sums keyed

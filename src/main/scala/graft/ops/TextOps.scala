@@ -1905,11 +1905,12 @@ object TextOps {
     * append-cycle contract the vector indexes already carry: the batch's
     * postings append to their term buckets only (no existing postings file
     * is read or rewritten), while the VOCAB-sized term-df table and the
-    * one-row stats table rewrite as new versions from (stored + batch) —
-    * so per-batch IO is independent of corpus size everywhere the corpus
-    * is big. EXACT, not approximate: a grown index answers identically to
-    * one rebuilt from the full corpus (postings union is row-identical,
-    * df and stats are additive) — spec-asserted. Fold appended dirs on a
+    * one-row stats table add the batch's counts through
+    * [[graft.core.BucketedStore.mergeAdd]] (only the batch's term buckets
+    * are rewritten) — so per-batch IO is independent of corpus size
+    * everywhere the corpus is big. EXACT, not approximate: a grown index
+    * answers identically to one rebuilt from the full corpus (postings
+    * union is row-identical, df and stats are additive) — spec-asserted. Fold appended dirs on a
     * cadence with `store.compactBuckets(s"${feature}_postings",
     * Seq("term"))`; old df/stats versions fall to `store.vacuum`. */
   def appendToBm25Index(newDocs: DataFrame, idCol: String, textCol: String,
@@ -1917,22 +1918,10 @@ object TextOps {
     val docTerms = bm25DocTerms(newDocs, idCol, textCol).persistTracked()
     val pv = store.appendBucketed(s"${feature}_postings",
       docTerms.select("term", "doc_id", "tf", "dl"), Seq("term"))
-    val batchDf = docTerms.groupBy("term").agg(count(lit(1)).as("__bdf"))
-    val merged = store.read(s"${feature}_termdf", Seq("term"))
-      .join(batchDf, Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("__bdf"), lit(0L))).as("df"))
-    val tv = store.write(merged, s"${feature}_termdf", Seq("term"))
-    val batchSt = bm25Stats(newDocs, textCol)
-      .select(col("n_docs").as("__bn"), col("l_tokens").as("__bl"))
-    val st = store.read(s"${feature}_stats", Seq("__sk"))
-      .select("n_docs", "l_tokens")
-      .crossJoin(batchSt)
-      .select(
-        (col("n_docs") + col("__bn")).as("n_docs"),
-        (coalesce(col("l_tokens"), lit(0L)) + coalesce(col("__bl"), lit(0L))).as("l_tokens"))
-      .withColumn("__sk", lit(0))
-    val sv = store.write(st, s"${feature}_stats", Seq("__sk"))
+    val tv = store.mergeAdd(s"${feature}_termdf",
+      docTerms.groupBy("term").agg(count(lit(1)).as("df")), Seq("term"))
+    val sv = store.mergeAdd(s"${feature}_stats",
+      bm25Stats(newDocs, textCol).withColumn("__sk", lit(0)), Seq("__sk"))
     commitBm25Trio(store, feature, pv, tv, sv)
     docTerms.unpersist()
   }

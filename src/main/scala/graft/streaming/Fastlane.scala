@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, lit, max}
+import org.apache.spark.sql.functions.{col, count, count_distinct, lit, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.Path
 import graft.core.{FeatureDef, FeatureStore, Versioning}
@@ -236,78 +236,24 @@ object Fastlane {
       }
       .start()
 
-  /** Shared body of every ADDITIVE-COUNT profile-maintenance loop
-    * (token/categorical/numeric, global and segmented, flat and
-    * time-bucketed): per micro-batch, `builder` counts ONLY the batch's
-    * own (keys…, n) rows, and the counts merge-ADD into the stored
-    * profile under the lineage fence, touching only the hash buckets
-    * carrying the batch's keys (`readTouched` — rows of OTHER keys
-    * sharing a touched bucket ride the full-outer join with a +0 add and
-    * merge back unchanged; the merge rewrites whole touched buckets
-    * anyway). ONE code path so the eight loops cannot drift on the
-    * merge-add mechanics — the first version bootstraps with a plain
-    * write. The embedding loops ride [[ingestAdditiveNS]], the same body
-    * with TWO additive columns (n, s). */
-  private def ingestAdditiveCounts(
+  /** Shared body of the twelve additive profile-maintenance loops (token,
+    * categorical, numeric and embedding; global and segmented; flat and
+    * time-bucketed): per micro-batch, `builder` profiles ONLY the batch's
+    * own rows and [[graft.core.BucketedStore.mergeAdd]] adds them into the
+    * stored profile under the lineage fence — reading and rewriting only
+    * the hash buckets carrying the batch's keys, one store version per
+    * batch, the first batch writing the profile. ONE code path so the
+    * loops cannot drift on the merge-add mechanics. */
+  private def ingestAdditive(
       stream: DataFrame, checkpointDir: String, trigger: Trigger,
       store: graft.core.BucketedStore, feature: String, keys: Seq[String])(
       builder: DataFrame => DataFrame)
       (implicit spark: SparkSession): StreamingQuery =
     ingestLoop(stream, checkpointDir, trigger) { (batch, batchId) =>
       fencedApply(store, feature, checkpointDir, batchId) {
-        // persisted: read by the touched-bucket probe AND the merge add
-        val bp = builder(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (store.latestVersion(feature).isEmpty)
-          store.write(bp, feature, keys)
-        else {
-          val keyCols = keys.map(col)
-          val touched = store.readTouched(feature, keys,
-            bp.select(keyCols: _*), None)
-          val merged = touched.select(keyCols :+ col("n").as("__n0"): _*)
-            .join(bp, keys, "full_outer")
-            .select(keyCols :+
-              (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"): _*)
-          store.merge(feature, merged, keys)
-        }
-        bp.unpersist()
+        store.mergeAdd(feature, builder(batch), keys)
+        ()
       }
-      ()
-    }
-
-  /** [[ingestAdditiveCounts]] for the EMBEDDING-profile loops: identical
-    * fence/readTouched/full-outer-add mechanics with TWO additive columns
-    * — the count `n` AND the exact micro component sum `s` (both additive
-    * integers, so the merge-add is the same full-outer +0 fold twice).
-    * ONE code path for every (n, s) loop (segmented monitor profile,
-    * global and segmented timeline profiles) so they cannot drift. */
-  private def ingestAdditiveNS(
-      stream: DataFrame, checkpointDir: String, trigger: Trigger,
-      store: graft.core.BucketedStore, feature: String, keys: Seq[String])(
-      builder: DataFrame => DataFrame)
-      (implicit spark: SparkSession): StreamingQuery =
-    ingestLoop(stream, checkpointDir, trigger) { (batch, batchId) =>
-      fencedApply(store, feature, checkpointDir, batchId) {
-        // persisted: read by the touched-bucket probe AND the merge add
-        val bp = builder(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (store.latestVersion(feature).isEmpty)
-          store.write(bp, feature, keys)
-        else {
-          val keyCols = keys.map(col)
-          val touched = store.readTouched(feature, keys,
-            bp.select(keyCols: _*), None)
-          val merged = touched.select(
-              keyCols ++ Seq(col("n").as("__n0"), col("s").as("__s0")): _*)
-            .join(bp, keys, "full_outer")
-            .select(keyCols ++ Seq(
-              (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-              (coalesce(col("__s0"), lit(0L)) + coalesce(col("s"), lit(0L))).as("s")): _*)
-          store.merge(feature, merged, keys)
-        }
-        bp.unpersist()
-      }
-      ()
     }
 
   /** Streaming retrieval-index maintenance — keep a persisted BM25
@@ -366,10 +312,11 @@ object Fastlane {
     }
 
   /** Lineage-scoped at-least-once fence shared by the NON-IDEMPOTENT
-    * ingest loops ([[ingestBm25Indexed]], [[ingestEmbeddingProfile]] —
-    * their applies add counts, so a blind foreachBatch re-apply
-    * double-counts). Runs `body` iff `batchId` is above this lineage's
-    * fence, then advances the fence; a replayed batch is skipped.
+    * ingest loops ([[ingestBm25Indexed]] and the twelve profile loops
+    * through [[ingestAdditive]] — their applies add counts, so a blind
+    * foreachBatch re-apply double-counts). Runs `body` iff `batchId` is
+    * above this lineage's fence, then advances the fence; a replayed
+    * batch is skipped.
     *
     * The fence is scoped to the CHECKPOINT LINEAGE: batchIds restart at 0
     * under a fresh checkpointDir, and an unscoped cursor would then
@@ -418,13 +365,13 @@ object Fastlane {
   /** Streaming TOKEN-profile maintenance — the text-side twin of
     * [[ingestEmbeddingProfile]]: each micro-batch counts ONLY its own
     * tokens ([[graft.ops.TextOps.tokenProfile]] — one batch-sized keyed
-    * aggregation) and merge-ADDS them into the stored vocab profile.
-    * Per-batch IO is O(batch + touched buckets): the stored profile is
-    * read through `readTouched` (only the hash buckets containing the
-    * batch's tokens), counts add as exact integers, and the file-level
-    * merge rewrites those buckets only — a 10⁸-token vocabulary costs a
-    * batch only its own token set. The stream-grown profile is
-    * BIT-IDENTICAL to one counted over the accumulated corpus
+    * aggregation) and adds them into the stored vocab profile through
+    * [[graft.core.BucketedStore.mergeAdd]]. Per-batch IO is O(batch +
+    * touched buckets): only the hash buckets containing the batch's
+    * tokens are read and rewritten, counts add as exact integers — a
+    * 10⁸-token vocabulary costs a batch only its own token set. The
+    * stream-grown profile is BIT-IDENTICAL to one counted over the
+    * accumulated corpus
     * (spec-asserted), and [[graft.ops.TextOps.tokenDriftFromProfiles]]
     * serves the drift monitor against a reference profile without
     * re-touching the corpora. Adds are not idempotent → the shared
@@ -437,7 +384,7 @@ object Fastlane {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq("token"))(b => graft.ops.TextOps.tokenProfile(b, textCol))
 
   /** Streaming DRIFT-MONITOR maintenance — keep a persisted
@@ -451,8 +398,8 @@ object Fastlane {
     * [[graft.ops.Similarity.embeddingDriftFromProfiles]] /
     * [[graft.ops.Similarity.embeddingShapeDriftFromProfiles]] answer both
     * monitors against a reference profile without ever re-touching the
-    * corpora. Per-batch cost: O(batch) + a ≤ dim·bins-row merge,
-    * independent of corpus size.
+    * corpora. Per-batch cost: O(batch) + a ≤ dim·bins-row
+    * [[graft.core.BucketedStore.mergeAdd]], independent of corpus size.
     *
     * Replay contract: adds are not idempotent, so batches run under the
     * shared lineage fence ([[fencedApply]]) — same residual windows and
@@ -465,23 +412,9 @@ object Fastlane {
       dim: Int = 64, bins: Int = 16, binWidthMicro: Long = 31250L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestLoop(stream, checkpointDir, trigger) { (batch, batchId) =>
-      fencedApply(store, feature, checkpointDir, batchId) {
-        val bp = graft.ops.Similarity.embeddingProfile(
-          batch, vecCol, dim, bins, binWidthMicro)
-        val merged =
-          if (store.latestVersion(feature).isEmpty) bp
-          else store.read(feature, Seq("pos", "bin"))
-            .select(col("pos"), col("bin"),
-              col("n").as("__n0"), col("s").as("__s0"))
-            .join(bp, Seq("pos", "bin"), "full_outer")
-            .select(col("pos"), col("bin"),
-              (coalesce(col("__n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-              (coalesce(col("__s0"), lit(0L)) + coalesce(col("s"), lit(0L))).as("s"))
-        store.write(merged, feature, Seq("pos", "bin"))
-      }
-      ()
-    }
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
+      Seq("pos", "bin"))(b =>
+      graft.ops.Similarity.embeddingProfile(b, vecCol, dim, bins, binWidthMicro))
 
   /** SEGMENTED streaming token-profile maintenance —
     * [[ingestTokenProfile]] keyed (group, token): each micro-batch counts
@@ -491,18 +424,19 @@ object Fastlane {
     * ([[graft.ops.TextOps.tokenDriftByGroupFromProfiles]]) reads stored
     * profiles instead of re-scanning both corpora per refresh — the r15
     * asymmetry where only the GLOBAL monitors were profile-servable is
-    * closed. Per-batch IO stays O(batch + touched buckets): `readTouched`
-    * pulls only the hash buckets containing the batch's (group, token)
-    * keys. Stream-grown ≡ batch-built over the accumulated corpus
-    * (spec-asserted); adds are not idempotent → the shared lineage fence
-    * ([[fencedApply]]); Σn == total tokens ingested is the cheap audit. */
+    * closed. Per-batch IO stays O(batch + touched buckets): `mergeAdd`
+    * reads only the hash buckets containing the batch's (group, token)
+    * keys, and NULL groups add as one group. Stream-grown ≡ batch-built
+    * over the accumulated corpus (spec-asserted); adds are not idempotent
+    * → the shared lineage fence ([[fencedApply]]); Σn == total tokens
+    * ingested is the cheap audit. */
   def ingestTokenProfileByGroup(
       stream: DataFrame, textCol: String, groupCol: String,
       store: graft.core.BucketedStore, feature: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq(groupCol, "token"))(b =>
       graft.ops.TextOps.tokenProfileByGroup(b, textCol, groupCol))
 
@@ -515,8 +449,7 @@ object Fastlane {
     * in a single batch (spec-asserted), and
     * [[graft.ops.Stats.numericShapeDriftFromProfiles]] serves the scalar
     * drift monitor against a reference profile without re-touching the
-    * corpora. The profile is ≤ bins rows — a full rewrite per batch is
-    * cheap, the global-embedding-profile shape.
+    * corpora.
     *
     * Replay contract: adds are not idempotent → the shared lineage fence
     * ([[fencedApply]]); Σn == values ingested is the cheap audit. */
@@ -527,7 +460,7 @@ object Fastlane {
       bins: Int = 16, binWidthMicro: Long = 31250000L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq("bin"))(b =>
       graft.ops.Stats.numericProfile(b, valueCol, bins, binWidthMicro))
 
@@ -539,13 +472,12 @@ object Fastlane {
     * dashboard ([[graft.ops.Stats.numericShapeDriftByGroupFromProfiles]])
     * reads stored profiles instead of re-scanning both corpora per
     * refresh — the r16 verdict's last monitoring-matrix asymmetry closed.
-    * Unlike the global loop (≤ bins rows — a full rewrite per batch is
-    * cheap), the segmented profile is groups·bins-sized, so the merge
-    * goes through `readTouched` and rewrites only the buckets carrying
-    * the batch's own groups' keys — O(batch + touched buckets), the
-    * token-loop shape. Stream-grown ≡ batch-built (spec-asserted); adds
-    * are not idempotent → the shared lineage fence ([[fencedApply]]);
-    * Σn == values ingested is the cheap audit. */
+    * Like every profile loop, `mergeAdd` rewrites only the buckets
+    * carrying the batch's own (group, bin) keys — O(batch + touched
+    * buckets) for a groups·bins-sized profile. Stream-grown ≡
+    * batch-built (spec-asserted); adds are not idempotent → the shared
+    * lineage fence ([[fencedApply]]); Σn == values ingested is the cheap
+    * audit. */
   def ingestNumericProfileByGroup(
       stream: DataFrame, valueCol: String, groupCol: String,
       store: graft.core.BucketedStore, feature: String,
@@ -553,7 +485,7 @@ object Fastlane {
       bins: Int = 16, binWidthMicro: Long = 31250000L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq(groupCol, "bin"))(b =>
       graft.ops.Stats.numericProfileByGroup(b, valueCol, groupCol, bins,
         binWidthMicro))
@@ -570,7 +502,7 @@ object Fastlane {
     * single batch (spec-asserted).
     * [[graft.ops.Events.categoryDriftTimelineFromProfiles]] then serves
     * the drift dashboard without re-touching the events. Per-batch cost:
-    * O(batch + touched buckets) via `readTouched` — a year-long stored
+    * O(batch + touched buckets) via `mergeAdd` — a year-long stored
     * timeline costs a batch only the time buckets the batch itself spans.
     *
     * Replay contract: adds are not idempotent → the shared lineage fence
@@ -581,7 +513,7 @@ object Fastlane {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq("bucket_start", catCol))(b =>
       graft.ops.Events.bucketCategoryProfile(b, catCol, tsCol, bucketSec))
 
@@ -594,7 +526,7 @@ object Fastlane {
     * ([[graft.ops.Events.categoryDriftTimelineByGroupFromProfiles]])
     * reads storage instead of re-scanning the events per refresh. Late
     * events fold into their TRUE (group, bucket); per-batch cost is
-    * O(batch + touched buckets) via `readTouched`. Stream-grown ≡
+    * O(batch + touched buckets) via `mergeAdd`. Stream-grown ≡
     * batch-built (spec-asserted); adds are not idempotent → the shared
     * lineage fence ([[fencedApply]]); Σn == events ingested is the cheap
     * audit. */
@@ -605,7 +537,7 @@ object Fastlane {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq(groupCol, "bucket_start", catCol))(b =>
       graft.ops.Events.bucketCategoryProfileByGroup(b, catCol, tsCol,
         groupCol, bucketSec))
@@ -620,7 +552,7 @@ object Fastlane {
     * accumulated events in a single batch (spec-asserted).
     * [[graft.ops.Events.numericDriftTimelineFromProfiles]] then serves
     * the scalar drift dashboard without re-touching the events. Per-batch
-    * cost: O(batch + touched buckets) via `readTouched` — the
+    * cost: O(batch + touched buckets) via `mergeAdd` — the
     * bucket-category loop's shape with bins as the categories.
     *
     * Replay contract: adds are not idempotent → the shared lineage fence
@@ -632,7 +564,7 @@ object Fastlane {
       bins: Int = 16, binWidthMicro: Long = 31250000L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq("bucket_start", "bin"))(b =>
       graft.ops.Events.bucketNumericProfile(b, valueCol, tsCol, bucketSec,
         bins, binWidthMicro))
@@ -646,7 +578,7 @@ object Fastlane {
     * serves with zero event scans — "when did source X's value
     * distribution shift" reads storage. Late values fold into their TRUE
     * (group, bucket); per-batch cost O(batch + touched buckets) via
-    * `readTouched`. Stream-grown ≡ batch-built (spec-asserted); adds are
+    * `mergeAdd`. Stream-grown ≡ batch-built (spec-asserted); adds are
     * not idempotent → the shared lineage fence; Σn == values ingested is
     * the cheap audit. */
   def ingestBucketNumericProfileByGroup(
@@ -657,7 +589,7 @@ object Fastlane {
       bins: Int = 16, binWidthMicro: Long = 31250000L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveCounts(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq(groupCol, "bucket_start", "bin"))(b =>
       graft.ops.Events.bucketNumericProfileByGroup(b, valueCol, tsCol,
         groupCol, bucketSec, bins, binWidthMicro))
@@ -670,11 +602,10 @@ object Fastlane {
     * serves BOTH per-group monitors
     * ([[graft.ops.Similarity.embeddingDriftByGroupFromProfiles]] /
     * [[graft.ops.Similarity.embeddingShapeDriftByGroupFromProfiles]])
-    * without re-touching the corpora. Unlike the global loop (≤ dim·bins
-    * rows — a full rewrite per batch is cheap), the segmented profile is
-    * groups·dim·bins-sized, so the merge goes through `readTouched` and
-    * rewrites only the buckets carrying the batch's own groups' keys —
-    * O(batch + touched buckets), the token-loop shape. Stream-grown ≡
+    * without re-touching the corpora. Like every profile loop,
+    * `mergeAdd` rewrites only the buckets carrying the batch's own keys —
+    * O(batch + touched buckets) for a groups·dim·bins-sized profile.
+    * Stream-grown ≡
     * batch-built (spec-asserted); adds are not idempotent → the shared
     * lineage fence; Σn == dim · (vectors ingested) is the cheap audit. */
   def ingestEmbeddingProfileByGroup(
@@ -684,7 +615,7 @@ object Fastlane {
       dim: Int = 64, bins: Int = 16, binWidthMicro: Long = 31250L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveNS(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq(groupCol, "pos", "bin"))(b =>
       graft.ops.Similarity.embeddingProfileByGroup(b, vecCol, groupCol,
         dim, bins, binWidthMicro))
@@ -700,7 +631,7 @@ object Fastlane {
     * single batch (spec-asserted).
     * [[graft.ops.Events.embeddingDriftTimelineFromProfiles]] then serves
     * the representation dashboard with zero corpus scans. Per-batch cost:
-    * O(batch + touched buckets) via `readTouched`.
+    * O(batch + touched buckets) via `mergeAdd`.
     *
     * Replay contract: adds are not idempotent → the shared lineage fence
     * ([[fencedApply]]); Σn == dim · (vectors ingested) is the cheap
@@ -712,7 +643,7 @@ object Fastlane {
       dim: Int = 64, bins: Int = 16, binWidthMicro: Long = 31250L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveNS(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq("bucket_start", "pos", "bin"))(b =>
       graft.ops.Events.bucketEmbeddingProfile(b, vecCol, tsCol, bucketSec,
         dim, bins, binWidthMicro))
@@ -731,7 +662,7 @@ object Fastlane {
       dim: Int = 64, bins: Int = 16, binWidthMicro: Long = 31250L,
       trigger: Trigger = Trigger.AvailableNow())
       (implicit spark: SparkSession): StreamingQuery =
-    ingestAdditiveNS(stream, checkpointDir, trigger, store, feature,
+    ingestAdditive(stream, checkpointDir, trigger, store, feature,
       Seq(groupCol, "bucket_start", "pos", "bin"))(b =>
       graft.ops.Events.bucketEmbeddingProfileByGroup(b, vecCol, tsCol,
         groupCol, bucketSec, dim, bins, binWidthMicro))

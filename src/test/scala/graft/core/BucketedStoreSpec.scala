@@ -249,6 +249,55 @@ class BucketedStoreSpec extends SparkSpec {
     assert(dirs.length == expectDirs, s"read ${dirs.toSeq}, wanted $expectDirs")
   }
 
+  test("mergeAdd: sums every additive column per key in the touched buckets only; one version per call; Delta log and CDF follow") {
+    val store = new BucketedStore(tmpDir("bmadd"), numBuckets = 8)
+    val base = (1L to 400L).map(i => (i, i, 10 * i)).toDF("id", "n", "s")
+    assert(store.mergeAdd("f", base, Seq("id")) == 0L)   // fresh feature: a write
+    // key 5 twice in ONE batch (summed too), key 900 new
+    val batch = Seq((5L, 2L, 10L), (5L, 3L, 1L), (900L, 1L, 7L)).toDF("id", "n", "s")
+    assert(store.mergeAdd("f", batch, Seq("id")) == 1L)
+    assert(store.versions("f") == Seq(0L, 1L), "exactly one version per call")
+
+    val cur = store.read("f", Seq("id")).select("id", "n", "s")
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(cur.size == 401)
+    assert(cur(5L) == ((10L, 61L)), "existing key: both n and s summed, in-batch duplicates too")
+    assert(cur(900L) == ((1L, 7L)), "new key inserted")
+    assert((1L to 400L).filterNot(_ == 5L).forall(i => cur(i) == ((i, 10 * i))),
+      "every other key keeps its row")
+
+    // untouched buckets keep their v0 file dirs by manifest reference
+    def manifest(v: Long) = "\"([0-9]+)\": \"([^\"]+)\"".r
+      .findAllMatchIn(scala.io.Source.fromFile(s"${store.root}/f/_graft_log/$v.json").mkString)
+      .map(m => m.group(1).toInt -> m.group(2)).toMap
+    val (m0, m1) = (manifest(0), manifest(1))
+    val rewritten = m1.filter { case (b, p) => !m0.get(b).contains(p) }
+    assert(rewritten.size <= 2 && rewritten.values.forall(_.startsWith("files_v1/")),
+      s"only the batch's buckets are rewritten: $rewritten")
+    assert(m1.keySet == m0.keySet && m1.size - rewritten.size >= 6)
+
+    // the Delta mirror replays to exactly the manifest's file set
+    val live = m1.values.flatMap { rel =>
+      new java.io.File(s"${store.root}/f/$rel").listFiles()
+        .filter(_.getName.startsWith("part-")).map(f => s"$rel/${f.getName}")
+    }.toSet
+    assert(store.deltaLiveFiles("f")._1 == live)
+
+    // CDF: summed keys are updates, new keys inserts; the +0 pass-through
+    // rows sharing a touched bucket do not appear
+    val cdf = store.changes("f", Seq("id"), 0L, 1L)
+      .select("id", "n", "s", "_change_type").as[(Long, Long, Long, String)].collect().toSet
+    assert(cdf == Set((5L, 5L, 50L, "update_preimage"), (5L, 10L, 61L, "update_postimage"),
+      (900L, 1L, 7L, "insert")), s"unexpected feed: $cdf")
+
+    // NULL keys add as ONE group (merge would accumulate them)
+    val nul = Seq((None: Option[Long], 1L, 2L)).toDF("id", "n", "s")
+    store.mergeAdd("g", nul, Seq("id"))
+    store.mergeAdd("g", nul.union(nul), Seq("id"))
+    assert(store.read("g", Seq("id")).select("id", "n", "s")
+      .as[(Option[Long], Long, Long)].collect().toSeq == Seq((None, 3L, 6L)))
+  }
+
   test("appendBucketed + compactBuckets: O(batch) growth, widened stats, fold-back, vacuum") {
     val store = new BucketedStore(tmpDir("bappend"), numBuckets = 8)
     val base = spark.range(800).select(col("id"), (col("id") % 100).cast("double").as("v"))

@@ -762,6 +762,49 @@ class FastlaneSpec extends SparkSpec {
     assert(storedRows() == grown, "compaction must be answer-stable")
   }
 
+  test("ingestTokenProfileByGroup: NULL-source rows add as ONE group across micro-batches; served per-group drift == direct") {
+    import graft.ops.TextOps
+    val srcDir = tmpDir("ntprof_src")
+    val store = new graft.core.BucketedStore(tmpDir("ntprof_store"), numBuckets = 8)
+    val ckpt = tmpDir("ntprof_ckpt")
+    def stream() = spark.readStream
+      .schema("source STRING, text STRING").json(s"$srcDir/*")
+    // both batches carry NULL-source rows, and token x is in the NULL group
+    // of both: the second batch must ADD into the stored NULL-group row
+    val b1 = Seq(("s1", "x x y"), (null, "x z"))
+    val b2 = Seq((null, "x y"), ("s2", "z"), (null, "w x"))
+    b1.toDF("source", "text").write.mode("overwrite").json(s"$srcDir/b1")
+    Fastlane.ingestTokenProfileByGroup(stream(), "text", "source", store,
+      "ntprof", ckpt).awaitTermination(60000)
+    b2.toDF("source", "text").write.mode("overwrite").json(s"$srcDir/b2")
+    Fastlane.ingestTokenProfileByGroup(stream(), "text", "source", store,
+      "ntprof", ckpt).awaitTermination(60000)
+    val grown = store.read("ntprof", Seq("source", "token"))
+      .select("source", "token", "n").as[(Option[String], String, Long)]
+      .collect().toSeq
+    val union = (b1 ++ b2).toDF("source", "text")
+    val oneShot = TextOps.tokenProfileByGroup(union, "text", "source")
+      .select("source", "token", "n").as[(Option[String], String, Long)]
+      .collect().toSeq
+    assert(grown.sortBy(_.toString) == oneShot.sortBy(_.toString),
+      s"stream-grown profile must equal a one-shot count: $grown vs $oneShot")
+    // one NULL-group row per token, counts summed across the batches
+    assert(grown.filter(_._1.isEmpty).map(r => r._2 -> r._3).sorted ==
+      Seq("w" -> 1L, "x" -> 3L, "y" -> 1L, "z" -> 1L))
+    // the dashboard read over the stored profile == the direct scan, with
+    // NULL groups on both sides (the per-group scoring tail's totals join
+    // leaves the NULL group out of both routes alike)
+    val ref = Seq(("s1", "y y z"), (null, "x x"), ("s3", "r")).toDF("source", "text")
+    val served = TextOps.tokenDriftByGroupFromProfiles(
+        store.read("ntprof", Seq("source", "token")),
+        TextOps.tokenProfileByGroup(ref, "text", "source"), "source", topM = 10)
+      .orderBy("source", "rank").collect().toSeq
+    val direct = TextOps.tokenDriftByGroup(union, ref, "text", "source", topM = 10)
+      .orderBy("source", "rank").collect().toSeq
+    assert(served.nonEmpty && served == direct,
+      "profile-served per-group drift must equal the direct route")
+  }
+
   test("ingestEmbeddingProfileByGroup: stream-grown segmented profile bit-identical to one-shot; BOTH per-group monitors served from storage == direct") {
     import graft.ops.Similarity
     val srcDir = tmpDir("geprof_src")
