@@ -1,8 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumn, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import java.nio.charset.StandardCharsets
 
 /** Bucketed versioned store with FILE-LEVEL incremental MERGE — the
@@ -190,13 +193,23 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     // committing v through THIS JVM refreshes every cache entry the new
     // version touches — covers the root-recreated-in-place edge (a fresh
     // store at a previously-used root restarts at v=0 and overwrites any
-    // stale entries as it commits)
+    // stale entries as it commits; [[seedSchema]] does the same for the
+    // dirs the commit wrote)
     BucketedStore.manifestCache.put((root, feature, v), manifest)
     BucketedStore.statsCache.remove((root, feature, v))
-    BucketedStore.mergedSchemaCache.keySet
-      .filter(k => k._1 == root && k._2 == feature && k._3 == v)
-      .foreach(BucketedStore.mergedSchemaCache.remove)
     ()
+  }
+
+  /** Record `written` (minus `__b`, nullable as a parquet read reports it)
+    * as the schema of the dirs `files_v<v>/__b=<b>` a commit just wrote for
+    * `buckets`, and drop the merged sets that name one of them — a root
+    * recreated in place through this JVM reuses dir names. */
+  private def seedSchema(feature: String, v: Long, buckets: Iterable[Int],
+      written: StructType): Unit = {
+    val schema = GraftColumn.asNullable(StructType(written.filterNot(_.name == "__b")))
+    val fresh = buckets.map(b => s"files_v$v/__b=$b").toSet
+    BucketedStore.dropSchemas(root, feature, fresh)
+    fresh.foreach(r => BucketedStore.dirSchemaCache.put((root, feature, r), schema))
   }
 
   // ---- per-bucket column stats (file-skipping, Delta/Z-order-style) --------
@@ -302,6 +315,20 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith("part-"))
       .map(f => (s"$rel/${f.getPath.getName}", f.getLen, f.getModificationTime))
+  }
+
+  /** The part files of a bucket dir a manifest references, for a driver
+    * read. A dir that is gone or holds none fails loudly — lost files, or a
+    * vacuum that ran after the version was resolved — as Spark's scan of a
+    * missing path does. */
+  private def dataFiles(feature: String, rel: String): Seq[FileStatus] = {
+    val files = try fs.listStatus(new Path(s"$root/$feature/$rel")).toSeq
+      .filter(_.getPath.getName.startsWith("part-"))
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+    if (files.isEmpty)
+      throw new IllegalStateException(
+        s"feature $feature: bucket dir $rel is missing or holds no part files")
+    files
   }
 
   private def jsonEsc(s: String): String = s.flatMap {
@@ -472,6 +499,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     bucketed.write.mode(SaveMode.Overwrite)
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val buckets = bucketed.select("__b").distinct().collect().map(_.getInt(0))
+    seedSchema(feature, v, buckets, bucketed.schema)
     writeManifest(feature, v, buckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap)
     val st = computeStats(bucketed, statsCols)
     writeStats(feature, v, st)
@@ -570,6 +598,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     bucketed.write.mode(SaveMode.Overwrite)
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val buckets = bucketed.select("__b").distinct().collect().map(_.getInt(0))
+    seedSchema(feature, v, buckets, bucketed.schema)
     writeManifest(feature, v, buckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap)
     val st = computeStats(bucketed, (clusterCols ++ statsCols).distinct)
     writeStats(feature, v, st)
@@ -582,34 +611,67 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     v
   }
 
-  /** All manifest-driven reads go through here: mergeSchema reconciles
+  /** All manifest-driven reads go through here: the merged schema reconciles
     * files written before/after a schema-widening merge or append (Spark
     * otherwise infers from one arbitrary footer, silently dropping the new
     * columns — and a compaction after that would make the loss permanent).
     * Empty path lists fail LOUDLY: an empty write leaves no footer to
     * recover a schema from, so there is no correct silent answer.
     *
-    * The MERGED SCHEMA is cached per (root, feature, version, file set):
-    * mergeSchema inference runs a distributed footer-read job per call, so
-    * an indexed query that re-reads the same committed version paid 1-2
-    * Spark jobs per read for a schema that cannot change (a version's file
-    * set is immutable once manifested — see the companion's invalidation
-    * contract). First read infers + caches; repeat reads pass the schema
-    * explicitly and skip the job. Keyed by the exact rel list because a
-    * SUBSET read (scanPruned/readTouched) of a schema-evolved version may
-    * legitimately merge to a narrower schema than the full set. */
-  private def readPaths(feature: String, v: Long, rels: Seq[String]): DataFrame = {
+    * The schema comes from [[schemaOf]]; the read passes it explicitly, so
+    * Spark infers nothing. */
+  private def readPaths(feature: String, v: Long, rels: Seq[String]): DataFrame =
+    spark.read.schema(schemaOf(feature, v, rels)).parquet(rels.map(p => s"$root/$feature/$p"): _*)
+
+  /** The schema a read of the bucket dirs `rels` reports, with no Spark job
+    * when the dirs agree: the one schema of every dir, from
+    * [[BucketedStore.dirSchemaCache]] (each commit seeds the dirs it
+    * writes) or, for an unseeded dir, its footers read on the driver. Dirs
+    * that disagree need Spark's mergeSchema, a distributed footer-read job,
+    * whose result is cached under the dir set — a SUBSET read
+    * (scanPruned/readTouched) of a schema-evolved version may legitimately
+    * merge to a narrower schema than the full set. A dir's files are
+    * immutable once written, so no key holds a version. */
+  private def schemaOf(feature: String, v: Long, rels: Seq[String]): StructType = {
     if (rels.isEmpty)
       throw new IllegalStateException(
         s"feature $feature v$v references no data files (empty write?)")
-    val paths = rels.map(p => s"$root/$feature/$p")
-    val key = (root, feature, v, rels.sorted.mkString(";"))
-    BucketedStore.mergedSchemaCache.get(key) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-      case None =>
-        val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        BucketedStore.mergedSchemaCache.put(key, df.schema)
-        df
+    agreedSchema(feature, rels).getOrElse {
+      val key = (root, feature, rels.sorted.mkString(";"))
+      BucketedStore.mergedSchemaCache.getOrElseUpdate(key, spark.read
+        .option("mergeSchema", "true").parquet(rels.map(p => s"$root/$feature/$p"): _*).schema)
+    }
+  }
+
+  /** The one schema every dir in `rels` has, or None when two disagree (or
+    * one dir's own files do). */
+  private def agreedSchema(feature: String, rels: Seq[String]): Option[StructType] = {
+    val each = rels.distinct.map(r => BucketedStore.dirSchemaCache.get((root, feature, r))
+      .orElse(footerSchema(feature, r)))
+    if (each.forall(_.isDefined) && each.flatten.distinct.size == 1) each.head else None
+  }
+
+  /** A dir's schema from its part files' footers, read on the driver (no
+    * Spark job) and cached; None when the files disagree. */
+  private def footerSchema(feature: String, rel: String): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val converter = new ParquetToSparkSchemaConverter(
+      org.apache.spark.sql.internal.SQLConf.get)
+    val schemas = dataFiles(feature, rel).map { f =>
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      GraftColumn.asNullable(
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta), converter))
+    }.distinct
+    if (schemas.size != 1) None
+    else {
+      BucketedStore.dirSchemaCache.put((root, feature, rel), schemas.head)
+      schemas.headOption
     }
   }
 
@@ -726,6 +788,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     rewritten.write.mode(SaveMode.Overwrite)
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val newRels = touched.toSeq.sorted.map(b => b -> s"files_v$v/__b=$b")
+    seedSchema(feature, v, touched, rewritten.schema)
     writeManifest(feature, v, (manifest -- touched) ++ newRels.map { case (b, r) => b -> Seq(r) })
     // stats: untouched buckets carry forward by reference (their files didn't
     // change); rewritten buckets recompute over the same columns the previous
@@ -765,6 +828,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     bucketed.write.mode(SaveMode.Overwrite)
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val newBuckets = bucketed.select("__b").distinct().collect().map(_.getInt(0))
+    seedSchema(feature, v, newBuckets, bucketed.schema)
     writeManifest(feature, v, manifest ++ newBuckets.map(b =>
       b -> (manifest.getOrElse(b, Seq.empty) :+ s"files_v$v/__b=$b")).toMap)
     val prevStats = readStats(feature, prev)
@@ -812,6 +876,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     bucketed.write.mode(SaveMode.Overwrite)
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val rewritten = bucketed.select("__b").distinct().collect().map(_.getInt(0))
+    seedSchema(feature, v, rewritten, bucketed.schema)
     writeManifest(feature, v, manifest ++ rewritten.map(b =>
       b -> Seq(s"files_v$v/__b=$b")).toMap)
     // ranges are unchanged by compaction: carry the stats sidecar forward
@@ -893,8 +958,19 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   }
 
   /** Point lookup: hash the literal key to its bucket and read ONLY that
-    * bucket's file — a serving-side get that touches 1/numBuckets of the
-    * table regardless of table size. */
+    * bucket's files — a serving-side get that touches 1/numBuckets of the
+    * table regardless of table size.
+    *
+    * When the bucket's dirs agree on one schema, its files are read on the
+    * driver with Spark's own parquet reader (the key pushed down for
+    * row-group skipping) and the matching rows come back as a
+    * `LocalRelation`-backed DataFrame: neither the lookup nor its `collect`
+    * runs a Spark job. A bucket whose dirs disagree (a schema-evolved
+    * multi-dir bucket needs Spark's mergeSchema) is a Spark scan instead.
+    * Either way the result has the bucket's schema and the rows of
+    * `read(...)` where every key column `=` its literal cast to the stored
+    * type — SQL `=`, so a NULL key matches nothing. A bucket dir that is
+    * missing or empty fails loudly. */
   def lookup(feature: String, entityKeys: Seq[String], keyValues: Seq[Any],
              asOfVersion: Option[Long] = None): DataFrame = {
     require(entityKeys.length == keyValues.length)
@@ -908,28 +984,69 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     // scheduler latency computing a hash the driver evaluates in microseconds.
     // xxhash64 hashes by TYPE, so each literal is cast to the STORED key
     // column's type first (an Int passed for a Long column would otherwise
-    // hash differently and silently miss) — types come from one cached
-    // parquet footer read.
-    val schema = keySchema(feature, v, manifest)
-    val types = entityKeys.map(k => schema(k).dataType)
-    val b = bucketOf(keyValues, types)
+    // hash differently and silently miss) — types come from one dir's schema
+    val routing = schemaOf(feature, v, Seq(manifest.values.head.head))
+    val b = bucketOf(keyValues, entityKeys.map(k => routing(k).dataType))
     manifest.get(b) match {
       case None => read(feature, entityKeys, Some(v)).limit(0)
-      case Some(ps) =>
-        val df = readPaths(feature, v, ps)
-        entityKeys.zip(keyValues).foldLeft(df) { case (d, (k, kv)) =>
-          d.filter(col(k) === lit(kv).cast(schema(k).dataType)) }
+      case Some(rels) =>
+        val files = rels.flatMap(dataFiles(feature, _))
+        agreedSchema(feature, rels) match {
+          case Some(schema) =>
+            GraftColumn.localFrame(spark, schema, readMatching(schema, files, entityKeys, keyValues))
+          case None =>
+            val df = readPaths(feature, v, rels)
+            entityKeys.zip(keyValues).foldLeft(df) { case (d, (k, kv)) =>
+              d.filter(col(k) === lit(kv).cast(d.schema(k).dataType)) }
+        }
     }
   }
 
-  // one footer read per (feature, version), then in-memory — the serving
-  // path stays Spark-job-free after the first lookup
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), org.apache.spark.sql.types.StructType]
-  private def keySchema(feature: String, v: Long,
-      manifest: Map[Int, Seq[String]]): org.apache.spark.sql.types.StructType =
-    schemaCache.getOrElseUpdate((feature, v),
-      spark.read.parquet(s"$root/$feature/${manifest.values.head.head}").schema)
+  /** The rows of `files` (all of `schema`) whose key columns equal
+    * `keyValues`, read on the driver by Spark's parquet reader and copied
+    * out of its reused buffers. Keeping a row is the interpreted
+    * `key = CAST(literal AS stored type)`, so a NULL key matches nothing.
+    * The vectorized reader is closed here, also when a read fails; the
+    * row-based one (only for types the vectorized reader lacks) closes at
+    * its end. */
+  private def readMatching(schema: StructType, files: Seq[FileStatus],
+      entityKeys: Seq[String], keyValues: Seq[Any]): Seq[InternalRow] = {
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualTo, Predicate}
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val lits = keyLiterals(keyValues, entityKeys.map(k => schema(k).dataType))
+    val keep = Predicate.createInterpreted(entityKeys.zip(lits).map { case (k, l) =>
+      EqualTo(BoundReference(schema.fieldIndex(k), l.dataType, nullable = true), l)
+    }.reduce[org.apache.spark.sql.catalyst.expressions.Expression](And(_, _)))
+    // parquet's `eq` on NULL means IS NULL, so a NULL literal is not pushed
+    val pushed = entityKeys.zip(lits).collect { case (k, l) if l.value != null =>
+      org.apache.spark.sql.sources.EqualTo(k, CatalystTypeConverters.convertToScala(l.value, l.dataType))
+    }
+    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+      new StructType(), schema, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      GraftColumn.hadoopConf(spark))
+    files.flatMap { f =>
+      val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f),
+        0L, f.getLen, Array.empty[String], f.getModificationTime, f.getLen))
+      try rows.filter(keep.eval).map(_.copy()).toVector
+      finally rows match {
+        case c: AutoCloseable => c.close()
+        case _ =>
+      }
+    }
+  }
+
+  /** Each literal as a Catalyst literal of the stored key column's type. */
+  private def keyLiterals(keyValues: Seq[Any], keyTypes: Seq[DataType]): Seq[CatLit] = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    require(keyValues.length == keyTypes.length)
+    keyValues.zip(keyTypes).map { case (kv, t) =>
+      val l = CatLit(kv)
+      if (l.dataType == t) l else CatLit(Cast(l, t).eval(null), t)
+    }
+  }
 
   /** Driver-side twin of [[bucketCol]]: evaluate pmod(xxhash64(keys), n) on
     * literal values with the catalyst expressions themselves — no Spark job.
@@ -937,15 +1054,9 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * bucket is bit-identical to the executor-side bucketCol routing even
     * when the caller's Scala type differs (Int for a LongType key, ...).
     * Exposed for spec-level routing-equivalence assertions. */
-  private[graft] def bucketOf(keyValues: Seq[Any],
-      keyTypes: Seq[org.apache.spark.sql.types.DataType]): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal => CatLit, Pmod, XxHash64}
-    require(keyValues.length == keyTypes.length)
-    val lits = keyValues.zip(keyTypes).map { case (kv, t) =>
-      val l = CatLit(kv)
-      if (l.dataType == t) l else CatLit(Cast(l, t).eval(null), t)
-    }
-    new Pmod(new XxHash64(lits), CatLit(numBuckets.toLong))
+  private[graft] def bucketOf(keyValues: Seq[Any], keyTypes: Seq[DataType]): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Pmod, XxHash64}
+    new Pmod(new XxHash64(keyLiterals(keyValues, keyTypes)), CatLit(numBuckets.toLong))
       .eval(null).asInstanceOf[Long].toInt
   }
 
@@ -999,6 +1110,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       }
       .filterNot(live)
     dead.foreach(rel => fs.delete(new Path(s"$root/$feature/$rel"), true))
+    BucketedStore.evict(root, feature, horizon, dead.toSet)
     // drop files_vN roots with no remaining bucket DIRS so the layout stays
     // listable at scale (Spark leaves a _SUCCESS marker in every root, so an
     // emptiness check would never fire — the marker goes with the root)
@@ -1166,19 +1278,51 @@ object BucketedStore {
   //    every read re-lists the log dir, so a version committed by another
   //    writer (or a horizon moved by a concurrent vacuum) is visible
   //    immediately.
+  //  * Schemas are keyed without a version: a bucket dir's files never
+  //    change once written, so every version referencing the same dirs
+  //    shares their schema. dirSchemaCache holds one entry per bucket dir
+  //    (each commit seeds the dirs it writes with the written schema; a
+  //    read of an unseeded dir reads its footers on the driver), so a store
+  //    that is never vacuumed grows it by one entry per dir written.
+  //    mergedSchemaCache holds what Spark's mergeSchema inferred for a dir
+  //    set ((root, feature, ";"-joined sorted dirs)) whose dirs disagree —
+  //    only schema-evolved reads add to it.
   //  * vacuum() deletes data files but never rewrites manifests; a read of
-  //    a reclaimed version fails loudly at scan time with or without the
-  //    cache (and resolveVersion's horizon check reads the live marker).
+  //    a reclaimed version fails loudly (resolveVersion's horizon check
+  //    reads the live marker). vacuum also evicts what it reclaimed: the
+  //    manifest and stats entries below the new horizon and every schema
+  //    entry naming a deleted dir, so the caches of a long-lived store stay
+  //    bounded by its retained versions plus the reads since.
   //  * Out of contract: an external process deleting a store root and
   //    recreating different content at the same path while this JVM holds
   //    entries for it. Recreation through THIS JVM's API is covered —
-  //    writeManifest refreshes/invalidates the keys it commits.
+  //    writeManifest refreshes/invalidates the keys it commits, and
+  //    seedSchema the dirs it writes.
   private[core] val manifestCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, Long), Map[Int, Seq[String]]]
   private[core] val statsCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, Long), Map[Int, Map[String, (Double, Double)]]]
+  private[core] val dirSchemaCache =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), StructType]
   private[core] val mergedSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long, String), org.apache.spark.sql.types.StructType]
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), StructType]
+
+  /** Drop what a vacuum of (root, feature) reclaimed from the caches. */
+  private def evict(root: String, feature: String, horizon: Long, deadRels: Set[String]): Unit = {
+    def below(k: (String, String, Long)) = k._1 == root && k._2 == feature && k._3 < horizon
+    manifestCache.keySet.filter(below).foreach(manifestCache.remove)
+    statsCache.keySet.filter(below).foreach(statsCache.remove)
+    dropSchemas(root, feature, deadRels)
+  }
+
+  /** Drop the schema entries of (root, feature) for `rels` and every merged
+    * set naming one of them. */
+  private def dropSchemas(root: String, feature: String, rels: Set[String]): Unit = {
+    rels.foreach(r => dirSchemaCache.remove((root, feature, r)))
+    mergedSchemaCache.keySet
+      .filter(k => k._1 == root && k._2 == feature && k._3.split(';').exists(rels))
+      .foreach(mergedSchemaCache.remove)
+  }
 
   // Checkpoint row layout (the open Delta checkpoint schema, minimal
   // columns): one action per row, the others null. Top-level case classes so

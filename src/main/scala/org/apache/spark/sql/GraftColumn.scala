@@ -1,6 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge from a raw Catalyst Expression to the public Column API (the
   * classic converter is `private[sql]`; this is the one sanctioned seam for
@@ -21,4 +26,19 @@ object GraftColumn {
     * resolves in the analyzer's fixed point like any parsed expression. */
   def resolvedExpr(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** A DataFrame over rows already held on the driver: a `LocalRelation`
+    * plan, so its `collect` runs no Spark job. `rows` must match `schema`. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** A fresh copy of the session's Hadoop configuration with its SQL
+    * settings applied — what Spark's own file scans hand their readers. */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** `schema` with every field, nested ones too, nullable: how Spark
+    * reports the schema of a parquet source. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

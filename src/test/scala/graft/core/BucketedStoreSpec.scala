@@ -44,12 +44,25 @@ class BucketedStoreSpec extends SparkSpec {
     store.write(base, "f", Seq("id"))
     val hit = store.lookup("f", Seq("id"), Seq(42L))
     assert(hit.select("name").as[String].collect().toSeq == Seq("name42"))
-    // reads one bucket: scanned files come from exactly one __b dir
-    val files = hit.inputFiles
-    assert(files.nonEmpty && files.map(_.split("/__b=")(1).split("/")(0)).distinct.length == 1, files.toSeq)
     // lookup after merge sees the update
     store.merge("f", Seq((42L, "FORTY-TWO")).toDF("id", "name"), Seq("id"))
     assert(store.lookup("f", Seq("id"), Seq(42L)).select("name").as[String].head() == "FORTY-TWO")
+    // reads one bucket: with every other bucket's data dir gone, the lookup
+    // still answers — touching any of them would fail, since a missing
+    // bucket dir fails loudly (the last assertion)
+    val keyDirs = manifestOf(store, "f", 1L)(
+      store.bucketOf(Seq(42L), Seq(org.apache.spark.sql.types.LongType))).toSet
+    val others = new java.io.File(store.root, "f").listFiles().toSeq
+      .filter(_.getName.startsWith("files_v"))
+      .flatMap(v => v.listFiles().toSeq.filter(_.isDirectory).map(b => s"${v.getName}/${b.getName}"))
+      .filterNot(keyDirs)
+    assert(others.size >= 15, others)
+    def drop(rel: String) = org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"${store.root}/f/$rel"))
+    others.foreach(drop)
+    assert(store.lookup("f", Seq("id"), Seq(42L)).select("name").as[String].collect().toSeq == Seq("FORTY-TWO"))
+    keyDirs.foreach(drop)
+    val e = intercept[IllegalStateException](store.lookup("f", Seq("id"), Seq(42L)))
+    assert(keyDirs.exists(e.getMessage.contains), e.getMessage)
   }
 
   test("new entities land in their buckets; merge into missing feature fails loudly") {
@@ -108,6 +121,11 @@ class BucketedStoreSpec extends SparkSpec {
     store.write(strs, "fs", Seq("id"))
     assert(store.lookup("fs", Seq("id"), Seq("key42")).select("n").as[Int]
       .collect().toSeq == Seq(42))
+    // the same lookups, and a missing key, run no Spark job and equal
+    // read().where(key = literal) in rows and schema
+    Seq("fi" -> 42, "fi" -> 42L, "fl" -> 42, "fs" -> "key42", "fl" -> 100000L).foreach {
+      case (feature, key) => jobFreeLookup(store, feature, Seq("id"), Seq(key))
+    }
   }
 
   test("scanPrunedMulti: conjunctive 2-column predicate reads fewer files than either alone") {
@@ -674,5 +692,163 @@ class BucketedStoreSpec extends SparkSpec {
     val changed = input.filter(col("o_orderkey") =!= input.select(min("o_orderkey")).collect()(0).getLong(0))
     val r3 = PipelineRunner.runBucketed(feature, changed, store, registry)
     assert(r3.report.nNovel == 1 && r3.report.nRows == r1.report.nRows)
+  }
+
+  /** Spark jobs started while `body` runs. Listener delivery is async, so
+    * two marker jobs bound the window: events arrive in order, so once the
+    * closing marker is seen every job started between them was counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val open = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val closed = scala.concurrent.Promise[Unit]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description")).orNull match {
+          case "jobsDuring:open" => open.set(true)
+          case "jobsDuring:close" => closed.trySuccess(())
+          case _ => if (open.get && !closed.isCompleted) started.incrementAndGet()
+        }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobsDuring:open")
+      val r = body
+      marker("jobsDuring:close")
+      scala.concurrent.Await.result(closed.future, scala.concurrent.duration.Duration(60, "s"))
+      (r, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+
+  /** lookup's rows and schema against `read(...).where(key = literal)`;
+    * returns the lookup frame and the Spark jobs its lookup + collect ran. */
+  private def sameAsRead(store: BucketedStore, feature: String, keys: Seq[String],
+      values: Seq[Any], asOf: Option[Long] = None): (org.apache.spark.sql.DataFrame, Int) = {
+    val ((got, rows), jobs) = jobsDuring {
+      val df = store.lookup(feature, keys, values, asOf)
+      (df, df.collect().toSeq)
+    }
+    val want = store.read(feature, keys, asOf)
+      .where(keys.zip(values).map { case (k, v) => col(k) === lit(v) }.reduce(_ && _))
+    val ctx = s"$feature ${values.mkString(",")} @ $asOf"
+    assert(got.schema == want.schema, s"$ctx: ${got.schema} vs ${want.schema}")
+    assert(rows.map(_.toString).sorted == want.collect().toSeq.map(_.toString).sorted, ctx)
+    (got, jobs)
+  }
+
+  /** [[sameAsRead]], plus: the lookup ran no Spark job and scans no file
+    * through Spark. Returns its rows. */
+  private def jobFreeLookup(store: BucketedStore, feature: String, keys: Seq[String],
+      values: Seq[Any], asOf: Option[Long] = None): Seq[org.apache.spark.sql.Row] = {
+    val (df, jobs) = sameAsRead(store, feature, keys, values, asOf)
+    assert(jobs == 0, s"$feature ${values.mkString(",")}: $jobs Spark jobs")
+    assert(df.inputFiles.isEmpty, "a driver-read lookup scans no files through Spark")
+    df.collect().toSeq
+  }
+
+  /** bucket -> dirs of a committed manifest, parsed from its log file. */
+  private def manifestOf(store: BucketedStore, feature: String, v: Long): Map[Int, Seq[String]] = {
+    val m = scala.io.Source.fromFile(s"${store.root}/$feature/_graft_log/$v.json").mkString
+    "\"([0-9]+)\": \"([^\"]+)\"".r.findAllMatchIn(m)
+      .map(e => e.group(1).toInt -> e.group(2).split(';').toSeq).toMap
+  }
+
+  test("lookup runs no Spark job for NULL keys, time travel, multi-dir buckets and a cold cache") {
+    val store = new BucketedStore(tmpDir("blocal"), numBuckets = 8)
+    store.write((1L to 400L).map(i => (i, s"name$i", i * 0.5)).toDF("id", "name", "score"), "fl", Seq("id"))
+    def names(values: Seq[Any], asOf: Option[Long] = None) =
+      jobFreeLookup(store, "fl", Seq("id"), values, asOf).map(_.getString(1)).sorted
+
+    // stored NULL-key rows (merge's equi-join never matches NULL, so they
+    // accumulate) are still not matched by a NULL key
+    store.merge("fl", Seq((None: Option[Long], "nullkey", 1.0), (Some(7L), "SEVEN", 7.0))
+      .toDF("id", "name", "score"), Seq("id"))
+    assert(store.read("fl", Seq("id")).where(col("id").isNull).count() == 1)
+    assert(names(Seq(null)).isEmpty, "a NULL key matches nothing")
+    // time travel: v0 still has the old row, v1 the merged one
+    assert(names(Seq(7L), asOf = Some(0L)) == Seq("name7"))
+    assert(names(Seq(7L)) == Seq("SEVEN"))
+
+    // multi-dir bucket after appendBucketed: both dirs are read
+    store.appendBucketed("fl", Seq((7L, "seven-b", 7.5), (9001L, "n9001", 1.0))
+      .toDF("id", "name", "score"), Seq("id"))
+    assert(names(Seq(7L)) == Seq("SEVEN", "seven-b"))
+    assert(names(Seq(9001L)) == Seq("n9001"))
+
+    // a cold cache reads the footers on the driver: still no job, and the
+    // driver-read schema equals what Spark infers
+    Seq(BucketedStore.dirSchemaCache, BucketedStore.mergedSchemaCache).foreach(c =>
+      c.keySet.filter(_._1 == store.root).foreach(c.remove))
+    assert(names(Seq(7L)) == Seq("SEVEN", "seven-b"))
+
+    // schema-widened multi-dir bucket: its dirs disagree, so the lookup is
+    // a Spark scan (mergeSchema) with the same answer
+    store.appendBucketed("fl", Seq((7L, "seven-c", 7.7, "wide")).toDF("id", "name", "score", "note"),
+      Seq("id"))
+    val (wide, _) = sameAsRead(store, "fl", Seq("id"), Seq(7L))
+    assert(wide.inputFiles.nonEmpty, "a schema-disagreeing bucket takes the Spark scan")
+    assert(wide.columns.contains("note") && wide.count() == 3)
+  }
+
+  test("schema cache: commit-seeded schemas equal Spark's inference; agreeing dirs read without inference") {
+    val store = new BucketedStore(tmpDir("bseed"), numBuckets = 4)
+    def inferred(feature: String, rels: Seq[String]) =
+      spark.read.option("mergeSchema", "true").parquet(rels.map(r => s"${store.root}/$feature/$r"): _*).schema
+    def manifest(feature: String) = manifestOf(store, feature, store.latestVersion(feature).get).values.toSeq
+    def seededMatch(feature: String): Unit = manifest(feature).flatten.distinct.foreach { rel =>
+      val seeded = BucketedStore.dirSchemaCache.get((store.root, feature, rel))
+      assert(seeded.contains(inferred(feature, Seq(rel))), s"$feature $rel: $seeded")
+    }
+    // merged
+    store.write((1L to 100L).map(i => (i, s"n$i")).toDF("id", "name"), "m", Seq("id"))
+    store.merge("m", Seq((3L, "three")).toDF("id", "name"), Seq("id"))
+    seededMatch("m")
+    // appended: multi-dir buckets whose dirs agree read with no inference job
+    store.write(spark.range(100).select(col("id"), (col("id") * 2).as("v")), "a", Seq("id"))
+    store.appendBucketed("a", spark.range(100, 110).select(col("id"), (col("id") * 2).as("v")), Seq("id"))
+    seededMatch("a")
+    assert(manifest("a").exists(_.size > 1))
+    val (all, jobs) = jobsDuring(store.read("a", Seq("id")))
+    assert(jobs == 0, s"read of agreeing dirs ran $jobs jobs")
+    assert(all.schema == inferred("a", manifest("a").flatten) && all.count() == 110)
+    // schema-widened: the new dirs carry the wider schema, the full read
+    // still merges both
+    store.write((1L to 50L).map(i => (i, i.toDouble)).toDF("id", "v"), "w", Seq("id"))
+    store.merge("w", Seq((2L, 2.5, "x")).toDF("id", "v", "note"), Seq("id"))
+    store.appendBucketed("w", Seq((77L, 7.0, "y")).toDF("id", "v", "note"), Seq("id"))
+    seededMatch("w")
+    val wide = store.read("w", Seq("id"))
+    assert(wide.schema == inferred("w", manifest("w").flatten), wide.schema)
+    assert(wide.where(col("note").isNotNull).count() == 2 && wide.count() == 51)
+  }
+
+  test("vacuum evicts reclaimed versions from the JVM-wide caches") {
+    val store = new BucketedStore(tmpDir("bevict"), numBuckets = 4)
+    store.write(spark.range(200).select(col("id"), col("id").cast("double").as("v")),
+      "t", Seq("id"), statsCols = Seq("v"))
+    (1 to 3).foreach(i => store.merge("t", Seq((i.toLong, i * 10.0)).toDF("id", "v"), Seq("id")))
+    store.versions("t").foreach { v =>
+      assert(store.read("t", Seq("id"), Some(v)).count() == 200)
+      store.scanPruned("t", Seq("id"), "v", 0.0, 5.0, Some(v)).count()
+    }
+    def cached(v: Long) = BucketedStore.manifestCache.contains((store.root, "t", v)) ||
+      BucketedStore.statsCache.contains((store.root, "t", v))
+    assert(cached(0L) && cached(1L))
+    val dead = store.vacuum("t", keepVersions = 1)
+    assert(dead.nonEmpty)
+    val horizon = store.vacuumHorizon("t").get
+    assert(horizon == 3L)
+    assert((0L until horizon).forall(v => !cached(v)), "a reclaimed version is still cached")
+    val named = Seq(BucketedStore.dirSchemaCache, BucketedStore.mergedSchemaCache).flatMap(_.keySet
+      .filter(k => k._1 == store.root && k._2 == "t" && k._3.split(';').exists(dead.toSet)))
+    assert(named.isEmpty, s"schema entries name reclaimed dirs: $named")
+    assert(store.read("t", Seq("id")).count() == 200)
+    assert(store.lookup("t", Seq("id"), Seq(3L)).select("v").as[Double].collect().toSeq == Seq(30.0))
   }
 }
