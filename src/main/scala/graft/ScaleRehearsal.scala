@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal for the similarity/dedup family (the ops whose 100 TB
@@ -28,16 +28,8 @@ object ScaleRehearsal {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val opFilter = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("WARN")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     val docs0 = Tables.load(spark, baseDir, "documents")
     val emb0 = Tables.load(spark, baseDir, "embeddings")

@@ -33,15 +33,7 @@ object ServeLatency {
       return
     }
     val calls = args.headOption.map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = LocalSession("ERROR")
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_servelat").toString
@@ -154,15 +146,7 @@ object ServeLatency {
     * cheap — `newSession()` shares the SparkContext), not more threads on
     * one session; this record is the measured argument. */
   private def concurrent(secondsPerLevel: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = LocalSession("ERROR")
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_concserve").toString
@@ -216,15 +200,7 @@ object ServeLatency {
     * and the post-compaction split show what maintenance costs a live
     * server. */
   private def sustained(seconds: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = LocalSession("ERROR")
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_sustained").toString

@@ -67,12 +67,15 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
 
   def latestVersion(feature: String): Option[Long] = versions(feature).lastOption
 
-  // ---- atomic cross-table cursors -----------------------------------------
-  // A multi-table writer (e.g. the BM25 postings/termdf/stats trio) has no
-  // cross-table transaction in this store; these publish a tiny driver-side
-  // record of "the versions that belong together" ATOMICALLY, so readers pin
-  // a consistent snapshot instead of inferring one from latest-version
-  // stability. Append-only numbered slots; a slot is CLAIMED first with an
+  // ---- atomic cursor records -----------------------------------------------
+  // The store's one durable record of a small position, written and read on
+  // the driver with no Spark job. Three users: the BM25 postings/termdf/stats
+  // trio publishes "the versions that belong together" (readers pin a
+  // consistent snapshot instead of inferring one from latest-version
+  // stability), each fenced stream lineage its last applied batch id
+  // ([[graft.streaming.Fastlane]]), and each change-feed consumer its
+  // committed position ([[advanceCursor]]).
+  // Append-only numbered slots; a slot is CLAIMED first with an
   // exclusive-create lock file (rename alone is NOT a safe claim: local-FS
   // rename silently OVERWRITES an existing destination, so two racing
   // writers would both "succeed" and one committed record would vanish),
@@ -161,6 +164,17 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     val dir = new Path(s"$root/_cursor/$name")
     cursorVersions(dir).lastOption.flatMap(v => readSmall(new Path(dir, v.toString)))
   }
+
+  /** Cursor record name of a per-feature position: `kind` ("fence": a
+    * stream lineage's last applied batch id, keyed by its checkpoint dir;
+    * "cdf": a change-feed consumer's position, keyed by its name) plus the
+    * SHA-256 of (feature, key), so any key becomes one short path segment.
+    * The NUL separator cannot occur in a feature name (a path segment), so
+    * two different (feature, key) pairs digest different inputs. */
+  private[graft] def cursorName(kind: String, feature: String, key: String): String =
+    s"$kind-" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s"$feature\u0000$key".getBytes(StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
 
   private def cursorVersions(dir: Path): Seq[Long] =
     if (!fs.exists(dir)) Seq.empty
@@ -1207,21 +1221,23 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   // ---- incremental CDF consumption ----------------------------------------
   // The consumer side of [[changes]]: a named durable cursor per downstream
   // pipeline, so each poll emits exactly the changes since the consumer's
-  // last COMMITTED position. Two-phase by design — pollChanges never moves
-  // the cursor; the consumer processes the feed, then calls advanceCursor
-  // with the returned toVersion. A crash between the two replays the same
-  // feed on the next poll (at-least-once, the same contract as the
-  // checkpointed ingest loops; pair with idempotent downstream writes).
+  // last COMMITTED position. The position is a cursor record
+  // ([[writeCursor]]: a crashed advance leaves the last complete record
+  // readable, never a torn one). Two-phase by design — pollChanges never
+  // moves the cursor; the consumer processes the feed, then calls
+  // advanceCursor with the returned toVersion. A crash between the two
+  // replays the same feed on the next poll (at-least-once, the same contract
+  // as the checkpointed ingest loops; pair with idempotent downstream writes).
 
-  private def cursorFile(feature: String, cursor: String) = {
+  private def consumerCursor(feature: String, cursor: String): String = {
     require(cursor.nonEmpty && cursor.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"cursor name must be [A-Za-z0-9_-]+, got '$cursor'")
-    new Path(logDir(feature), s"_cursor_$cursor")
+    cursorName("cdf", feature, cursor)
   }
 
   /** Committed position of `cursor` (None = never advanced). */
   def cursorPosition(feature: String, cursor: String): Option[Long] =
-    readSmall(cursorFile(feature, cursor)).map(_.trim.toLong)
+    readCursor(consumerCursor(feature, cursor)).map(_.trim.toLong)
 
   /** Changes since the cursor's committed position, up to the latest
     * version. First poll (no committed position) emits the CURRENT snapshot
@@ -1247,13 +1263,14 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
 
   /** Commit a consumer position. Monotone: moving a cursor backwards is
     * refused (it would silently re-deliver already-committed history —
-    * reset by deleting the cursor file deliberately, not by accident). */
+    * reset by deleting the consumer's record dir under `_cursor/`
+    * deliberately, not by accident). */
   def advanceCursor(feature: String, cursor: String, toVersion: Long): Unit = {
     cursorPosition(feature, cursor).foreach { pos =>
       require(toVersion >= pos,
         s"cursor $cursor at $pos cannot move backwards to $toVersion")
     }
-    writeSmall(cursorFile(feature, cursor), toVersion.toString)
+    writeCursor(consumerCursor(feature, cursor), toVersion.toString)
   }
 
   /** Fraction of the table a merge of `updates` would rewrite (observability

@@ -240,9 +240,10 @@ object Fastlane {
     * categorical, numeric and embedding; global and segmented; flat and
     * time-bucketed): per micro-batch, `builder` profiles ONLY the batch's
     * own rows and [[graft.core.BucketedStore.mergeAdd]] adds them into the
-    * stored profile under the lineage fence — reading and rewriting only
-    * the hash buckets carrying the batch's keys, one store version per
-    * batch, the first batch writing the profile. ONE code path so the
+    * stored profile under the lineage's fence record ([[fencedApply]]) —
+    * reading and rewriting only the hash buckets carrying the batch's
+    * keys, one store version per batch (the fence itself commits no
+    * version), the first batch writing the profile. ONE code path so the
     * loops cannot drift on the merge-add mechanics. */
   private def ingestAdditive(
       stream: DataFrame, checkpointDir: String, trigger: Trigger,
@@ -270,12 +271,12 @@ object Fastlane {
     *
     * Replay contract: foreachBatch is at-least-once, and a blind re-apply
     * would double-count postings/df/stats (appends are not idempotent).
-    * A `<feature>_ingest_cursor` table — ONE ROW PER CHECKPOINT LINEAGE,
-    * merge-upserted — fences each applied batchId: a replayed batch is
-    * skipped, and a second lineage writing the same feature cannot reset
-    * this lineage's fence. Residual double-apply windows: a crash inside
-    * the apply→fence gap, and the operator error of re-running one source
-    * through a FRESH checkpointDir (a new lineage legitimately starts at
+    * Each checkpoint lineage's cursor record ([[fencedApply]]) holds its
+    * last applied batchId: a replayed batch is skipped, and a second
+    * lineage writing the same feature has its own record, so it cannot
+    * reset this lineage's fence. Residual double-apply windows: a crash
+    * inside the apply→fence gap, and the operator error of re-running one
+    * source through a FRESH checkpointDir (a new lineage legitimately starts at
     * batch 0 and re-applies everything — run [[bm25IndexConsistency]] on
     * an audit cadence to catch a double-grown index, and pair downstream
     * corpus readers with exact id dedup as with the sibling ingest ops).
@@ -314,51 +315,31 @@ object Fastlane {
   /** Lineage-scoped at-least-once fence shared by the NON-IDEMPOTENT
     * ingest loops ([[ingestBm25Indexed]] and the twelve profile loops
     * through [[ingestAdditive]] — their applies add counts, so a blind
-    * foreachBatch re-apply double-counts). Runs `body` iff `batchId` is
-    * above this lineage's fence, then advances the fence; a replayed
-    * batch is skipped.
+    * foreachBatch re-apply double-counts). The fence is the store's cursor
+    * record ([[graft.core.BucketedStore.writeCursor]]) named after
+    * (feature, lineage): it holds the lineage's last applied batch id, and
+    * `body` runs iff `batchId` is above it, then the record advances to
+    * `batchId`; a replayed batch is skipped. Reading and writing it are
+    * driver file operations — no Spark job, no store commit.
     *
     * The fence is scoped to the CHECKPOINT LINEAGE: batchIds restart at 0
     * under a fresh checkpointDir, and an unscoped cursor would then
-    * silently DROP legitimate new batches (worse than a replay). ONE
-    * CURSOR ROW PER LINEAGE (keyed merge, not a single overwritten row):
-    * with a single row, two alternating lineages against the same feature
-    * each reset the other's fence to -1 and replay protection evaporates
-    * exactly when two writers make replays likeliest. Note a RESTARTED
-    * lineage (same source, fresh checkpointDir) is a NEW lineage by
-    * construction — it re-applies every batch, so growing one target from
-    * two lineages double-counts; [[bm25IndexConsistency]] (and the
-    * profile monitors' own n-vs-corpus audit) is the cheap detector for
-    * that operator-error class. MAX over the lineage's rows, not
-    * headOption: a cursor table written by the pre-r14 single-row schema
-    * (bucketed on __ck) leaves a legacy row in a bucket the lineage-keyed
-    * merge never rewrites — two rows for one lineage would then resolve
-    * non-deterministically, and the stale one re-opens the double-apply
-    * window. max() is safe in the only direction that matters (never
-    * re-apply an already-applied id). The fence write runs LAST: a crash
-    * inside the apply→fence gap replays the whole batch (the residual
-    * at-least-once window every consumer of these loops must pair with an
-    * audit cadence). */
+    * silently DROP legitimate new batches (worse than a replay), while one
+    * record per lineage keeps two alternating lineages from resetting each
+    * other's fence. A RESTARTED lineage (same source, fresh checkpointDir)
+    * is a NEW lineage by construction — it re-applies every batch, so
+    * growing one target from two lineages double-counts;
+    * [[bm25IndexConsistency]] (and the profile monitors' own n-vs-corpus
+    * audit) is the cheap detector for that operator-error class. The fence
+    * write runs LAST: a crash inside the apply→fence gap replays the whole
+    * batch (the residual at-least-once window every consumer of these loops
+    * must pair with an audit cadence). */
   private def fencedApply(store: graft.core.BucketedStore, feature: String,
-      lineage: String, batchId: Long)(body: => Unit)
-      (implicit spark: SparkSession): Unit = {
-    import spark.implicits._
-    val cursorFeat = s"${feature}_ingest_cursor"
-    val lastApplied =
-      if (store.latestVersion(cursorFeat).isEmpty) -1L
-      else store.read(cursorFeat, Seq("lineage"))
-        .where(col("lineage") === lineage)
-        .agg(max(col("batch_id"))).as[Option[Long]].collect()
-        .headOption.flatten.getOrElse(-1L)
-    if (batchId > lastApplied) {
+      lineage: String, batchId: Long)(body: => Unit): Unit = {
+    val fence = store.cursorName("fence", feature, lineage)
+    if (store.readCursor(fence).forall(applied => batchId > applied.trim.toLong)) {
       body
-      // merge upserts THIS lineage's row only; other lineages' fences
-      // are untouched
-      val fenceRow = Seq((batchId, lineage)).toDF("batch_id", "lineage")
-      if (store.latestVersion(cursorFeat).isEmpty)
-        store.write(fenceRow, cursorFeat, Seq("lineage"))
-      else
-        store.merge(cursorFeat, fenceRow, Seq("lineage"))
+      store.writeCursor(fence, batchId.toString)
     }
   }
 
@@ -374,8 +355,8 @@ object Fastlane {
     * accumulated corpus
     * (spec-asserted), and [[graft.ops.TextOps.tokenDriftFromProfiles]]
     * serves the drift monitor against a reference profile without
-    * re-touching the corpora. Adds are not idempotent → the shared
-    * lineage fence ([[fencedApply]]), same residual windows and audit
+    * re-touching the corpora. Adds are not idempotent → the lineage's
+    * fence record ([[fencedApply]]), same residual windows and audit
     * discipline as the sibling loops (Σn == total tokens ingested is the
     * cheap audit). */
   def ingestTokenProfile(
@@ -428,7 +409,7 @@ object Fastlane {
     * reads only the hash buckets containing the batch's (group, token)
     * keys, and NULL groups add as one group. Stream-grown ≡ batch-built
     * over the accumulated corpus (spec-asserted); adds are not idempotent
-    * → the shared lineage fence ([[fencedApply]]); Σn == total tokens
+    * → the lineage's fence record ([[fencedApply]]); Σn == total tokens
     * ingested is the cheap audit. */
   def ingestTokenProfileByGroup(
       stream: DataFrame, textCol: String, groupCol: String,
@@ -451,7 +432,7 @@ object Fastlane {
     * drift monitor against a reference profile without re-touching the
     * corpora.
     *
-    * Replay contract: adds are not idempotent → the shared lineage fence
+    * Replay contract: adds are not idempotent → the lineage's fence record
     * ([[fencedApply]]); Σn == values ingested is the cheap audit. */
   def ingestNumericProfile(
       stream: DataFrame, valueCol: String,
@@ -475,8 +456,8 @@ object Fastlane {
     * Like every profile loop, `mergeAdd` rewrites only the buckets
     * carrying the batch's own (group, bin) keys — O(batch + touched
     * buckets) for a groups·bins-sized profile. Stream-grown ≡
-    * batch-built (spec-asserted); adds are not idempotent → the shared
-    * lineage fence ([[fencedApply]]); Σn == values ingested is the cheap
+    * batch-built (spec-asserted); adds are not idempotent → the lineage's
+    * fence record ([[fencedApply]]); Σn == values ingested is the cheap
     * audit. */
   def ingestNumericProfileByGroup(
       stream: DataFrame, valueCol: String, groupCol: String,
@@ -505,7 +486,7 @@ object Fastlane {
     * O(batch + touched buckets) via `mergeAdd` — a year-long stored
     * timeline costs a batch only the time buckets the batch itself spans.
     *
-    * Replay contract: adds are not idempotent → the shared lineage fence
+    * Replay contract: adds are not idempotent → the lineage's fence record
     * ([[fencedApply]]); Σn == events ingested is the cheap audit. */
   def ingestBucketCategoryProfile(
       stream: DataFrame, catCol: String, tsCol: String, bucketSec: Long,
@@ -527,8 +508,8 @@ object Fastlane {
     * reads storage instead of re-scanning the events per refresh. Late
     * events fold into their TRUE (group, bucket); per-batch cost is
     * O(batch + touched buckets) via `mergeAdd`. Stream-grown ≡
-    * batch-built (spec-asserted); adds are not idempotent → the shared
-    * lineage fence ([[fencedApply]]); Σn == events ingested is the cheap
+    * batch-built (spec-asserted); adds are not idempotent → the lineage's
+    * fence record ([[fencedApply]]); Σn == events ingested is the cheap
     * audit. */
   def ingestBucketCategoryProfileByGroup(
       stream: DataFrame, catCol: String, tsCol: String, groupCol: String,
@@ -555,7 +536,7 @@ object Fastlane {
     * cost: O(batch + touched buckets) via `mergeAdd` — the
     * bucket-category loop's shape with bins as the categories.
     *
-    * Replay contract: adds are not idempotent → the shared lineage fence
+    * Replay contract: adds are not idempotent → the lineage's fence record
     * ([[fencedApply]]); Σn == values ingested is the cheap audit. */
   def ingestBucketNumericProfile(
       stream: DataFrame, valueCol: String, tsCol: String, bucketSec: Long,
@@ -579,7 +560,7 @@ object Fastlane {
     * distribution shift" reads storage. Late values fold into their TRUE
     * (group, bucket); per-batch cost O(batch + touched buckets) via
     * `mergeAdd`. Stream-grown ≡ batch-built (spec-asserted); adds are
-    * not idempotent → the shared lineage fence; Σn == values ingested is
+    * not idempotent → the lineage's fence record; Σn == values ingested is
     * the cheap audit. */
   def ingestBucketNumericProfileByGroup(
       stream: DataFrame, valueCol: String, tsCol: String, groupCol: String,
@@ -606,8 +587,8 @@ object Fastlane {
     * `mergeAdd` rewrites only the buckets carrying the batch's own keys —
     * O(batch + touched buckets) for a groups·dim·bins-sized profile.
     * Stream-grown ≡
-    * batch-built (spec-asserted); adds are not idempotent → the shared
-    * lineage fence; Σn == dim · (vectors ingested) is the cheap audit. */
+    * batch-built (spec-asserted); adds are not idempotent → the lineage's
+    * fence record; Σn == dim · (vectors ingested) is the cheap audit. */
   def ingestEmbeddingProfileByGroup(
       stream: DataFrame, vecCol: String, groupCol: String,
       store: graft.core.BucketedStore, feature: String,
@@ -633,7 +614,7 @@ object Fastlane {
     * the representation dashboard with zero corpus scans. Per-batch cost:
     * O(batch + touched buckets) via `mergeAdd`.
     *
-    * Replay contract: adds are not idempotent → the shared lineage fence
+    * Replay contract: adds are not idempotent → the lineage's fence record
     * ([[fencedApply]]); Σn == dim · (vectors ingested) is the cheap
     * audit. */
   def ingestBucketEmbeddingProfile(
@@ -703,9 +684,9 @@ object Fastlane {
     * PROFILE table (ids + signatures + shingle sets — no raw text), the
     * batch's banded signatures broadcast into the candidate join, and the
     * profile append is O(admitted batch). The admitted corpus itself is
-    * never rewritten or re-read. Exactly-once: replays re-admit the same
-    * ids; pair downstream readers with exact id dedup, or fence batches via
-    * `batchId` as in [[serve]]. */
+    * never rewritten or re-read. At-least-once: this loop runs no batch
+    * fence, so a replayed batch re-admits the same ids; pair downstream
+    * readers with exact id dedup. */
   def ingestDeduped(
       stream: DataFrame,
       idCol: String, textCol: String,
@@ -826,8 +807,8 @@ object Fastlane {
     * rewrite subsumes that cycle's compaction. `compactEvery = N` folds the
     * appended list dirs back every N batches (0 = leave maintenance to the
     * batch lane).
-    * Exactly-once: replays re-admit the same ids; fence by batchId or pair
-    * readers with exact id dedup, as in [[serve]]. */
+    * At-least-once: this loop runs no batch fence, so a replayed batch
+    * re-admits the same ids; pair downstream readers with exact id dedup. */
   def ingestVectorsIndexed(
       stream: DataFrame,
       idCol: String, vecCol: String,
@@ -905,10 +886,10 @@ object Fastlane {
     * Equivalence (spec-asserted): when batches arrive in id order, the
     * accumulated `corpusDir` equals one [[graft.ops.Dedup.paragraphDedup]]
     * over the batches' union — the store restriction of the global winner
-    * window. Exactly-once: a REPLAYED batch sees its own digests already
-    * admitted and re-emits its documents with empty `clean_text` — pair
-    * downstream readers with exact id dedup keeping the first row per id,
-    * or fence by batchId, as in [[serve]]. */
+    * window. At-least-once: this loop runs no batch fence, so a REPLAYED
+    * batch sees its own digests already admitted and re-emits its
+    * documents with empty `clean_text` — pair downstream readers with
+    * exact id dedup keeping the first row per id. */
   def ingestPassageDeduped(
       stream: DataFrame,
       idCol: String, textCol: String,

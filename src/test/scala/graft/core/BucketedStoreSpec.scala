@@ -527,6 +527,39 @@ class BucketedStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.advanceCursor("f", "consumer_a", 0L))
   }
 
+  test("pollChanges: a crashed advanceCursor leaves the last committed position readable; vacuum reaps its debris") {
+    import org.apache.hadoop.fs.Path
+    val store = new BucketedStore(tmpDir("bpollcrash"), numBuckets = 4)
+    store.write((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), "f", Seq("id")) // v0
+    store.advanceCursor("f", "c", store.pollChanges("f", Seq("id"), "c")._2)
+    store.merge("f", Seq((3L, "UPD"), (30L, "NEW")).toDF("id", "v"), Seq("id")) // v1
+    def rows(feed: org.apache.spark.sql.DataFrame) =
+      feed.select("id", "_change_type").as[(Long, String)].collect().toSet
+    val (feed, to1) = store.pollChanges("f", Seq("id"), "c")
+    // an advance that died after claiming its slot and opening its temp
+    // file: the claim lock and an empty (torn) temp stay behind
+    val dir = new Path(s"${store.root}/_cursor/${store.cursorName("cdf", "f", "c")}")
+    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val slot = hfs.listStatus(dir).map(_.getPath.getName)
+      .filter(_.forall(_.isDigit)).map(_.toLong).max + 1
+    val debris = Seq(new Path(dir, s"$slot.lock"), new Path(dir, s"$slot.tmp.deadbeef"))
+    debris.foreach(hfs.create(_, false).close())
+    // the consumer resumes from its last COMMITTED position
+    assert(store.cursorPosition("f", "c").contains(0L))
+    val (replay, toR) = store.pollChanges("f", Seq("id"), "c")
+    assert(toR == to1 && rows(replay) == rows(feed) && rows(feed).nonEmpty,
+      s"resume must replay the uncommitted feed: ${rows(replay)} vs ${rows(feed)}")
+    // once aged past the reaper's horizon, vacuum clears the debris
+    val old = System.currentTimeMillis() - 48L * 3600 * 1000
+    debris.foreach(hfs.setTimes(_, old, old))
+    store.vacuum("f", keepVersions = 2)
+    assert(debris.forall(!hfs.exists(_)), "vacuum must reap the crashed advance's debris")
+    // and the cursor still advances past the crashed slot
+    store.advanceCursor("f", "c", to1)
+    assert(store.cursorPosition("f", "c").contains(to1))
+    assert(store.pollChanges("f", Seq("id"), "c")._1.count() == 0)
+  }
+
   test("delta checkpoint: 20-version table opens from checkpoint + tail commits only") {
     // checkpoint every 5 commits: a 20-version history must open from the
     // v20 checkpoint + 0 tail commits, not a 21-commit replay

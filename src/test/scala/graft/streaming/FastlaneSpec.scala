@@ -15,6 +15,28 @@ class FastlaneSpec extends SparkSpec {
       .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"),
         count(lit(1)).as("n")))
 
+  /** Run `rerun` so that Spark re-executes the last committed batch of
+    * the checkpoint `ckpt`: its `commits/<id>` entry is deleted first, so
+    * the restarted query replays batch <id> from the logged offsets (the
+    * same batchId over the same rows) — a real replay, which a bare re-run
+    * with no new input is not (the commit log alone would skip it). */
+  private def replayLastBatch(ckpt: String)(rerun: => Unit): Unit = {
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    rerun
+    assert(new java.io.File(commits, last.toString).exists(),
+      s"batch $last of $ckpt was not re-executed")
+  }
+
+  /** The stored rows of a BM25 index's postings, termdf and stats tables. */
+  private def bm25Tables(store: graft.core.BucketedStore, feature: String) =
+    Seq("postings" -> "term", "termdf" -> "term", "stats" -> "__sk").map {
+      case (t, key) => store.read(s"${feature}_$t", Seq(key)).collect()
+        .map(_.toString).sorted.toSeq
+    }
+
   test("fastlane stream: micro-batches upsert into the feature store") {
     val root = tmpDir("fastlane")
     val store = new FeatureStore(root)
@@ -249,11 +271,20 @@ class FastlaneSpec extends SparkSpec {
     // files under the new lineage is the documented at-least-once residual)
     Seq((5L, "honey badgers dig dens"))
       .toDF("doc_id", "text").write.mode("overwrite").json(s"$srcDir/b3")
+    val ckpt2 = tmpDir("bm25s_ckpt2")
     Fastlane.ingestBm25Indexed(stream(), "doc_id", "text", store, "bm",
-      corpusDir, tmpDir("bm25s_ckpt2")).awaitTermination(60000)
+      corpusDir, ckpt2).awaitTermination(60000)
     assert(store.read("bm_postings", Seq("term"))
       .where(col("doc_id") === 5L).count() > 0,
       "fresh-lineage batch was silently dropped by the replay fence")
+    // a forced replay of the fresh lineage's batch is fenced out: the
+    // postings, termdf and stats tables do not grow again
+    val grown = bm25Tables(store, "bm")
+    replayLastBatch(ckpt2) {
+      Fastlane.ingestBm25Indexed(stream(), "doc_id", "text", store, "bm",
+        corpusDir, ckpt2).awaitTermination(60000)
+    }
+    assert(bm25Tables(store, "bm") == grown, "a replayed batch must not re-grow the index")
   }
 
   test("BM25 ingest: per-lineage fences are independent; bm25IndexConsistency flags a double-grown index") {
@@ -279,17 +310,26 @@ class FastlaneSpec extends SparkSpec {
     assert(!bad.getBoolean(3), "double-grown index must audit INCONSISTENT")
     assert(bad.getLong(0) == 4L && bad.getLong(2) == 2L,
       s"stats.n_docs doubled vs distinct corpus ids: $bad")
-    // lineage A continues with a new batch; its fence survives B's writes —
-    // the cursor table now carries ONE ROW PER LINEAGE (the r13 single-row
-    // cursor let each lineage reset the other to -1)
+    // each lineage keeps its own fence: B's run did not reset A's, so a
+    // forced replay of A's last batch leaves the index as it is
+    def replay(ck: String) = replayLastBatch(ck) {
+      Fastlane.ingestBm25Indexed(stream(), "doc_id", "text", store, "bm",
+        corpusDir, ck).awaitTermination(60000)
+    }
+    val afterB = bm25Tables(store, "bm")
+    replay(ckA)
+    assert(bm25Tables(store, "bm") == afterB,
+      "a replay of lineage A's batch after lineage B ran must be fenced out")
+    replay(ckB)
+    assert(bm25Tables(store, "bm") == afterB,
+      "a replay of lineage B's batch must be fenced out")
+    // lineage A continues with a new batch, which its fence admits
     Seq((3L, "dd ee ff")).toDF("doc_id", "text")
       .write.mode("overwrite").json(s"$srcDir/b2")
     Fastlane.ingestBm25Indexed(stream(), "doc_id", "text", store, "bm",
       corpusDir, ckA).awaitTermination(60000)
-    val cursor = store.read("bm_ingest_cursor", Seq("lineage"))
-      .select("lineage", "batch_id").as[(String, Long)].collect().toMap
-    assert(cursor.keySet == Set(ckA, ckB), s"one fence row per lineage: $cursor")
-    assert(cursor(ckA) == 1L && cursor(ckB) == 0L, s"fences independent: $cursor")
+    assert(store.read("bm_postings", Seq("term")).where(col("doc_id") === 3L)
+      .count() == 3L, "lineage A's new batch must be applied once")
     // the trio commit record pins the reader to the last COMPLETE append
     val trio = store.readCursor("bm_bm25_trio")
     assert(trio.isDefined, "writers must publish the trio commit record")
@@ -350,11 +390,13 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("rank").collect().toSeq
     assert(shapeServed.nonEmpty && shapeServed == shapeDirect,
       "profile-served shape drift must equal the direct route")
-    // a REPLAYED run under the same checkpoint lineage is fenced out —
+    // a REPLAYED last batch under the same checkpoint lineage is fenced out —
     // adds are not idempotent, so this is the double-count hole the
-    // lineage cursor closes
-    Fastlane.ingestEmbeddingProfile(stream(), "embedding", store, "eprof", ckpt)
-      .awaitTermination(60000)
+    // lineage's fence record closes
+    replayLastBatch(ckpt) {
+      Fastlane.ingestEmbeddingProfile(stream(), "embedding", store, "eprof", ckpt)
+        .awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -376,6 +418,12 @@ class FastlaneSpec extends SparkSpec {
     def storedRows() = store.read("tprof", Seq("token"))
       .select("token", "n").as[(String, Long)].collect().toSet
     val grown = storedRows()
+    // the lineage's fence is one cursor record holding the last applied
+    // batch id; no fence feature or directory is written into the store
+    assert(store.readCursor(store.cursorName("fence", "tprof", ckpt)).contains("1"))
+    assert(store.versions("tprof_ingest_cursor").isEmpty &&
+      !new java.io.File(s"${store.root}/tprof_ingest_cursor").exists(),
+      "the fence must not be a store feature")
     val union = (b1 ++ b2).toDF("doc_id", "text")
     val oneShot = TextOps.tokenProfile(union, "text")
       .as[(String, Long)].collect().toSet
@@ -393,9 +441,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("rank").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served token drift must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestTokenProfile(stream(), "text", store, "tprof", ckpt)
-      .awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestTokenProfile(stream(), "text", store, "tprof", ckpt)
+        .awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -431,9 +481,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("rank").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served scalar drift must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestNumericProfile(stream(), "v", store, "nprof", ckpt)
-      .awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestNumericProfile(stream(), "v", store, "nprof", ckpt)
+        .awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -473,9 +525,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("g", "rank").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served per-group scalar drift must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestNumericProfileByGroup(stream(), "v", "g", store,
-      "gnprof", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestNumericProfileByGroup(stream(), "v", "g", store,
+        "gnprof", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
     // the maintenance cadence: compaction folds per-batch merge dirs back
     // without changing the profile
@@ -522,9 +576,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("bucket_start").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served timeline must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestBucketCategoryProfile(stream(), "cat", "ts", 3600L,
-      store, "cdt", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestBucketCategoryProfile(stream(), "cat", "ts", 3600L,
+        store, "cdt", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -568,9 +624,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("g", "bucket_start").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served segmented timeline must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestBucketCategoryProfileByGroup(stream(), "cat", "ts", "g",
-      3600L, store, "gcdt", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestBucketCategoryProfileByGroup(stream(), "cat", "ts", "g",
+        3600L, store, "gcdt", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -613,9 +671,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("bucket_start").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served numeric timeline must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestBucketNumericProfile(stream(), "v", "ts", 3600L,
-      store, "bnp", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestBucketNumericProfile(stream(), "v", "ts", 3600L,
+        store, "bnp", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -665,8 +725,8 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("bucket_start").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served embedding timeline must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    ingest()
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt)(ingest())
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -711,9 +771,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("g", "bucket_start").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served segmented numeric timeline must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestBucketNumericProfileByGroup(stream(), "v", "ts", "g",
-      3600L, store, "gbnp", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestBucketNumericProfileByGroup(stream(), "v", "ts", "g",
+        3600L, store, "gbnp", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
@@ -752,9 +814,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("source", "rank").collect().toSeq
     assert(served.nonEmpty && served == direct,
       "profile-served per-group drift must equal the direct route")
-    // a replayed run under the same checkpoint lineage is fenced out
-    Fastlane.ingestTokenProfileByGroup(stream(), "text", "source", store,
-      "gtprof", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestTokenProfileByGroup(stream(), "text", "source", store,
+        "gtprof", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
     // the maintenance cadence: as per-batch merges accumulate bucket dirs,
     // compaction folds them back without changing the profile
@@ -850,9 +914,11 @@ class FastlaneSpec extends SparkSpec {
       .orderBy("label", "rank").collect().toSeq
     assert(shapeServed.nonEmpty && shapeServed == shapeDirect,
       "profile-served per-group shape drift must equal the direct route")
-    // replay fence
-    Fastlane.ingestEmbeddingProfileByGroup(stream(), "embedding", "label",
-      store, "geprof", ckpt).awaitTermination(60000)
+    // a forced replay of the last batch under the same lineage is fenced out
+    replayLastBatch(ckpt) {
+      Fastlane.ingestEmbeddingProfileByGroup(stream(), "embedding", "label",
+        store, "geprof", ckpt).awaitTermination(60000)
+    }
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
