@@ -27,13 +27,15 @@ object BenchConf {
     *    numbers stay comparable — but nothing fixture-sized lives in code.
     *  - Cap 256m = the guide §9 production advisory; with no readable
     *    input the derivation falls back to a production-plausible 64m.
+    *  - The input is every file under `sfDir`, subdirectories included,
+    *    so a directory-per-table layout counts the same as flat files.
     */
   def advisoryFor(sfDir: String, cpus: Int): Long = {
     val inputBytes: Long =
       try {
         val p = new org.apache.hadoop.fs.Path(sfDir)
         val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
+        fs.getContentSummary(p).getLength
       } catch { case scala.util.control.NonFatal(_) => 0L }
     if (inputBytes <= 0L) 64L << 20
     else math.max(1L << 20,

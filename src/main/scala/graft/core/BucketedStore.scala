@@ -3,10 +3,12 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, GraftColumn, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import java.nio.charset.StandardCharsets
+import graft.expressions.{KeySet, NotInKeySet}
 
 /** Bucketed versioned store with FILE-LEVEL incremental MERGE — the
   * Delta-grade upgrade over [[FeatureStore]]'s copy-on-write (SURVEY §4
@@ -698,40 +700,52 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
 
   /** FILE-LEVEL MERGE: upsert `updates` by entity key, rewriting ONLY the
     * buckets the updates hash into; all other buckets carry into the new
-    * version by manifest reference (zero IO). */
+    * version by manifest reference (zero IO).
+    *
+    * Batch-sized: the batch's rows, keys included, are collected to the
+    * driver by ONE execution of `updates`. The duplicate-key check and the
+    * touched-bucket set are computed there, and the same rows are the ones
+    * written, so even a non-deterministic source writes exactly the rows
+    * that were checked. The stored rows of the touched buckets drop the
+    * batch's keys by an anti-join against the driver-held key set
+    * ([[graft.expressions.NotInKeySet]]): a NULL key part never matches,
+    * so NULL-key rows accumulate. A row-sized merge runs the source's own
+    * jobs, its collect and the write — no exchange and no broadcast. */
   def merge(feature: String, updates: DataFrame, entityKeys: Seq[String]): Long = {
     val prev = latestVersion(feature)
       .getOrElse(throw new IllegalArgumentException(s"merge into empty feature $feature; write() first"))
     val manifest = hashManifest(feature, prev, "merge")
 
-    // persisted: the dup-key check, the touched-bucket collect, and the
-    // merged write are all actions over this frame — without the persist an
-    // arbitrary upstream pipeline executes once per action, and a
-    // NON-DETERMINISTIC source could pass the check yet route/write
-    // different rows. Batch-sized by the merge contract.
     val upd = updates.withColumn("__b", bucketCol(entityKeys))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // xxhash64 hashes by type: a key of another type than the stored one
+    // routes to another bucket and would never meet its stored row
+    manifest.values.headOption.foreach { rels =>
+      val stored = schemaOf(feature, prev, rels.take(1))
+      entityKeys.foreach(k => require(
+        DataTypeUtils.sameType(stored(k).dataType, upd.schema(k).dataType),
+        s"merge into $feature: key $k is ${upd.schema(k).dataType.simpleString} in the " +
+          s"batch but ${stored(k).dataType.simpleString} in the store"))
+    }
+    val rows = GraftColumn.collectInternal(upd)
+    val keys = KeySet.of(upd.schema, entityKeys, rows)
     // one-row-per-key upsert contract: a batch with duplicate keys would
     // anti-join away the stored row and append BOTH copies — the silent
-    // version of Delta's "multiple source rows matched" error. ONE agg pass
-    // computes both counts; the struct wrapper keeps countDistinct null-safe
-    // (a bare multi-column countDistinct drops rows with any NULL key).
-    val cnts = upd.agg(count(lit(1)).as("__n"),
-      countDistinct(struct(entityKeys.map(col): _*)).as("__nd")).head()
-    require(cnts.getLong(0) == cnts.getLong(1),
+    // version of Delta's "multiple source rows matched" error
+    require(keys.size == rows.size,
       s"merge batch contains duplicate entity keys for $feature; dedupe the batch first")
-    val touched = upd.select("__b").distinct().collect().map(_.getInt(0)).toSet
+    val bIdx = upd.schema.fieldIndex("__b")
+    val touched = rows.map(_.getInt(bIdx)).toSet
+    val batch = GraftColumn.localFrame(spark, upd.schema, rows)
 
     // current rows of ONLY the touched buckets
     val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
     val merged =
-      if (touchedRels.isEmpty) upd
-      else readPaths(feature, prev, touchedRels).withColumn("__b", bucketCol(entityKeys))
-        .join(upd.select(entityKeys.map(col): _*), entityKeys, "left_anti")
-        .unionByName(upd, allowMissingColumns = true)
+      if (touchedRels.isEmpty) batch
+      else readPaths(feature, prev, touchedRels)
+        .where(GraftColumn.of(NotInKeySet(entityKeys.map(k => GraftColumn.expr(col(k))), keys)))
+        .withColumn("__b", bucketCol(entityKeys))
+        .unionByName(batch, allowMissingColumns = true)
     commitTouched(feature, prev, manifest, touched, merged)
-    } finally upd.unpersist(false)
   }
 
   /** FILE-LEVEL MERGE-ADD for additive profiles: every non-key column of
@@ -747,7 +761,10 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     *
     * NULL keys add as ONE group (SQL `GROUP BY` semantics, the same rule
     * as the profile-served drift reads), unlike [[merge]], whose equi-join
-    * never matches a NULL key and so accumulates NULL-key rows. */
+    * never matches a NULL key and so accumulates NULL-key rows.
+    *
+    * Batch-sized: the batch is persisted, and its rows' bucket ids (one per
+    * row) are collected to the driver for the touched set. */
   def mergeAdd(feature: String, batch: DataFrame, entityKeys: Seq[String]): Long = {
     def summed(rows: DataFrame): DataFrame = {
       val adds = rows.schema.fields.filterNot(f => entityKeys.contains(f.name))
@@ -770,7 +787,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         val bp = batch.withColumn("__b", bucketCol(entityKeys))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val touched = bp.select("__b").distinct().collect().map(_.getInt(0)).toSet
+          val touched = bp.select("__b").collect().map(_.getInt(0)).toSet
           val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
           val rows =
             if (touchedRels.isEmpty) bp.drop("__b")
@@ -794,8 +811,9 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   /** Commit tail of [[merge]] and [[mergeAdd]]: `rewritten` (with `__b`) is
     * the COMPLETE new content of the `touched` buckets. It becomes version
     * prev+1, whose manifest references the untouched buckets' existing
-    * files. Every touched bucket holds at least one batch row, so the
-    * rewritten bucket set IS `touched` — no collect needed. */
+    * files. `touched` is the driver-held bucket set the caller took from
+    * the batch's rows; every touched bucket holds at least one batch row,
+    * so the rewritten bucket set IS `touched` — no collect needed. */
   private def commitTouched(feature: String, prev: Long,
       manifest: Map[Int, Seq[String]], touched: Set[Int], rewritten: DataFrame): Long = {
     val v = prev + 1

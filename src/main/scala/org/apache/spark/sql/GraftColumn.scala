@@ -33,6 +33,19 @@ object GraftColumn {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
+  /** `e` with NaN and -0.0 normalized (nested ones too), as Spark
+    * normalizes join and grouping keys before comparing their bytes. */
+  def normalizedKey(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** `df`'s rows as Catalyst rows: one execution of its plan, run as
+    * `collect` runs it, with no conversion to external `Row`s. */
+  def collectInternal(df: DataFrame): Seq[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect().toSeq)
+  }
+
   /** A fresh copy of the session's Hadoop configuration with its SQL
     * settings applied — what Spark's own file scans hand their readers. */
   def hadoopConf(spark: SparkSession): Configuration =

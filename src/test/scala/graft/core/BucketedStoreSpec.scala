@@ -884,4 +884,141 @@ class BucketedStoreSpec extends SparkSpec {
     assert(store.read("t", Seq("id")).count() == 200)
     assert(store.lookup("t", Seq("id"), Seq(3L)).select("v").as[Double].collect().toSeq == Seq(30.0))
   }
+
+  private def frame(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("a one-row merge into a hash-bucketed feature runs at most 3 Spark jobs") {
+    val store = new BucketedStore(tmpDir("bjobs"), numBuckets = 32)
+    store.write((0L until 1500L).map(k => (k, k * 7, 0L)).toDF("key", "latest", "seq"),
+      "latest", Seq("key"))
+    // the serving shape: one row through a per-key transform with its own
+    // exchange. Jobs: that exchange, the batch collect and the write
+    val serve = Seq((42L, 99L, 1L)).toDF("key", "value", "seq")
+      .groupBy("key").agg(max_by(col("value"), col("seq")).as("latest"), max("seq").as("seq"))
+    val (v1, jobs) = jobsDuring(store.merge("latest", serve, Seq("key")))
+    assert(jobs <= 3, s"one-row merge ran $jobs Spark jobs")
+    // a batch already on the driver costs the write alone
+    val (v2, localJobs) = jobsDuring(
+      store.merge("latest", Seq((7L, 5L, 2L)).toDF("key", "latest", "seq"), Seq("key")))
+    assert(localJobs <= 1, s"one-row local merge ran $localJobs Spark jobs")
+    assert((v1, v2) == (1L, 2L))
+    val cur = store.read("latest", Seq("key"))
+    assert(cur.count() == 1500 && cur.select("key").distinct().count() == 1500)
+    assert(store.lookup("latest", Seq("key"), Seq(42L)).select("latest", "seq")
+      .as[(Long, Long)].collect().toSeq == Seq((99L, 1L)))
+    assert(store.lookup("latest", Seq("key"), Seq(7L)).select("latest", "seq")
+      .as[(Long, Long)].collect().toSeq == Seq((5L, 2L)))
+  }
+
+  test("merge's duplicate-key check rejects exactly what count == countDistinct(struct(keys)) rejects") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = new BucketedStore(tmpDir("bdupkeys"), numBuckets = 4)
+    def check(feature: String, schema: StructType, keys: Seq[String], base: Row)(
+        cases: (Seq[Row], Boolean)*): Unit = {
+      store.write(frame(schema, Seq(base)), feature, keys)
+      cases.foreach { case (rows, dup) =>
+        val df = frame(schema, rows)
+        val cnt = df.agg(count(lit(1)), countDistinct(struct(keys.map(col): _*))).head()
+        assert((cnt.getLong(0) != cnt.getLong(1)) == dup, s"$feature $rows: Spark's counts $cnt")
+        val rejected =
+          try { store.merge(feature, df, keys); false }
+          catch { case _: IllegalArgumentException => true }
+        assert(rejected == dup, s"$feature $rows: rejected=$rejected")
+      }
+    }
+    val composite = StructType(Seq(StructField("a", LongType), StructField("b", StringType),
+      StructField("v", IntegerType)))
+    check("composite", composite, Seq("a", "b"), Row(100L, "base", 0))(
+      Seq(Row(1L, null, 1), Row(1L, null, 2)) -> true,
+      Seq(Row(null, "x", 1), Row(null, "x", 2)) -> true,
+      Seq(Row(null, null, 1), Row(null, null, 2)) -> true,
+      Seq(Row(1L, null, 1), Row(2L, null, 2)) -> false,
+      Seq(Row(1L, null, 1), Row(null, "1", 2), Row(null, null, 3)) -> false)
+    val binary = StructType(Seq(StructField("k", BinaryType), StructField("v", IntegerType)))
+    // distinct arrays, equal content: Row.hashCode hashes an Array[Byte] by
+    // identity, so the check must compare content
+    check("binary", binary, Seq("k"), Row(Array[Byte](9), 0))(
+      Seq(Row(Array[Byte](1, 2), 1), Row(Array[Byte](1, 2), 2)) -> true,
+      Seq(Row(Array[Byte](1, 2), 1), Row(Array[Byte](1, 3), 2)) -> false,
+      Seq(Row(Array.emptyByteArray, 1), Row(null, 2)) -> false)
+    val double = StructType(Seq(StructField("k", DoubleType), StructField("v", IntegerType)))
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    check("double", double, Seq("k"), Row(100.0, 0))(
+      Seq(Row(Double.NaN, 1), Row(Double.NaN, 2)) -> true,
+      Seq(Row(Double.NaN, 1), Row(otherNaN, 2)) -> true,
+      Seq(Row(0.0, 1), Row(-0.0, 2)) -> true,
+      Seq(Row(1.0, 1), Row(2.0, 2)) -> false)
+  }
+
+  test("merge replaces stored rows by the equi-join's key equality; NULL key parts never match") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = new BucketedStore(tmpDir("bkeyeq"), numBuckets = 4)
+    def vs(feature: String) = store.read(feature, Nil).select("v").as[Int].collect().toSeq.sorted
+
+    val double = StructType(Seq(StructField("k", DoubleType), StructField("v", IntegerType)))
+    store.write(frame(double, Seq(Row(Double.NaN, 0), Row(0.0, 0), Row(5.0, 0))), "d", Seq("k"))
+    store.merge("d", frame(double, Seq(
+      Row(java.lang.Double.longBitsToDouble(0x7ff8000000000001L), 1), Row(-0.0, 2))), Seq("k"))
+    assert(vs("d") == Seq(0, 1, 2), "NaN replaces NaN, -0.0 replaces 0.0")
+
+    val binary = StructType(Seq(StructField("k", BinaryType), StructField("v", IntegerType)))
+    store.write(frame(binary, Seq(Row(Array[Byte](1, 2), 0), Row(Array[Byte](3), 0))), "b", Seq("k"))
+    store.merge("b", frame(binary, Seq(Row(Array[Byte](1, 2), 1))), Seq("k"))
+    assert(vs("b") == Seq(0, 1), "a binary key replaces the stored key of equal content")
+
+    val composite = StructType(Seq(StructField("a", LongType), StructField("b", StringType),
+      StructField("v", IntegerType)))
+    store.write(frame(composite, Seq(Row(1L, null, 0), Row(1L, "x", 0))), "c", Seq("a", "b"))
+    store.merge("c", frame(composite, Seq(Row(1L, null, 1), Row(1L, "x", 2))), Seq("a", "b"))
+    assert(vs("c") == Seq(0, 1, 2), "a key with a NULL part accumulates; a full key replaces")
+
+    // a batch whose key type differs from the stored one would route by
+    // another hash: refused rather than written to the wrong bucket
+    val e = intercept[IllegalArgumentException](
+      store.merge("d", Seq((5, 9)).toDF("k", "v"), Seq("k")))
+    assert(e.getMessage.contains("key k is int in the batch but double in the store"), e.getMessage)
+  }
+
+  test("merge keeps the stored column order when the keys are not the leading columns") {
+    val store = new BucketedStore(tmpDir("border"), numBuckets = 8)
+    store.write((1L to 200L).map(k => (s"v$k", k, k * 2)).toDF("name", "id", "n"), "t", Seq("id"))
+    store.merge("t", Seq(("FIVE", 5L, 0L)).toDF("name", "id", "n"), Seq("id"))
+    // every bucket dir, rewritten or not, holds the same footer schema, so
+    // reads agree without a merged-schema inference
+    val dirs = manifestOf(store, "t", 1L).values.flatten.toSeq
+    val footers = dirs.map(r => spark.read.parquet(s"${store.root}/t/$r").schema).distinct
+    assert(footers.size == 1, footers)
+    assert(store.read("t", Seq("id")).columns.toSeq == Seq("name", "id", "n"))
+    assert(store.lookup("t", Seq("id"), Seq(5L)).as[(String, Long, Long)].collect().toSeq ==
+      Seq(("FIVE", 5L, 0L)))
+  }
+
+  test("merge executes its batch once: a batch drawn anew on every execution writes the rows it checked") {
+    val store = new BucketedStore(tmpDir("bonce"), numBuckets = 64)
+    store.write((0L until 1000L).map(k => (k, "old")).toDF("id", "name"), "t", Seq("id"))
+    // rand() is seeded when its column is built, so a re-run draws the same
+    // keys; this draw differs on every execution of the batch's plan
+    val draw = udf(() => scala.util.Random.nextInt(1000).toLong).asNondeterministic()
+    (1 to 3).foreach { i =>
+      val batch = spark.range(6).select(draw().as("id"), lit(s"new$i").as("name"))
+        .dropDuplicates("id")
+      val v = store.merge("t", batch, Seq("id"))
+      val cur = store.read("t", Seq("id"))
+      assert(cur.count() == 1000, s"v$v")
+      assert(cur.select("id").distinct().count() == 1000)
+      assert(cur.where(col("name") === s"new$i").count() >= 1)
+      val referenced = manifestOf(store, "t", v).values.flatten.toSet
+      val written = new java.io.File(s"${store.root}/t/files_v$v").listFiles().toSeq
+        .filter(_.isDirectory)
+        .filter(_.listFiles().exists(_.getName.startsWith("part-")))
+        .map(d => s"files_v$v/${d.getName}")
+      assert(written.nonEmpty && written.forall(referenced), s"v$v wrote $written, manifest $referenced")
+    }
+  }
 }
