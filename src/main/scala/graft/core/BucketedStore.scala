@@ -2,9 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, GraftColumn, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal => CatLit}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import java.nio.charset.StandardCharsets
@@ -130,34 +133,42 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         "too many concurrent writers for the single-writer cursor contract")
   }
 
-  /** Reap crash debris under `_cursor/`: a writer that dies between its
-    * slot claim and the rename leaves `<v>.lock` (and possibly its
-    * writer-unique `<v>.tmp.<nonce>`) behind forever. [[writeCursor]]
-    * already SKIPS such slots (readers tolerate numbering gaps), so the
-    * debris is harmless to correctness — this bounds its accumulation.
-    * Only files older than `olderThanMs` go: a LIVE claim is held for
-    * milliseconds, so the default one-hour horizon cannot touch it.
-    * Runs as part of [[vacuum]] so the standing maintenance cadence
-    * reaps cursor debris for free. Returns the deleted relative paths. */
+  /** Reap crash debris and superseded slots under `_cursor/`. A writer
+    * that dies between its slot claim and the rename leaves `<v>.lock`
+    * (and possibly its writer-unique `<v>.tmp.<nonce>`) behind forever.
+    * [[writeCursor]] already SKIPS such slots (readers tolerate numbering
+    * gaps), so the debris is harmless to correctness — this bounds its
+    * accumulation. Only files older than `olderThanMs` go: a LIVE claim is
+    * held for milliseconds, so the default one-hour horizon cannot touch
+    * it. A complete slot goes once a NEWER complete slot is itself older
+    * than the horizon: the newest slot always stays, and a reader that
+    * listed a slot as the newest reads it well inside the hour its
+    * successor must age first. Runs as part of [[vacuum]] so the standing
+    * maintenance cadence reaps for free. Returns the deleted relative
+    * paths. */
   def reapCursorLocks(olderThanMs: Long = 3600 * 1000L): Seq[String] = {
     val cursorRoot = new Path(s"$root/_cursor")
     if (!fs.exists(cursorRoot)) return Seq.empty
     val horizon = System.currentTimeMillis() - olderThanMs
     fs.listStatus(cursorRoot).toSeq.filter(_.isDirectory).flatMap { d =>
-      fs.listStatus(d.getPath).toSeq
-        .filter { s =>
-          val nm = s.getPath.getName
-          // ".tmp" (no nonce) catches debris from pre-r15 writers
-          (nm.endsWith(".lock") || nm.contains(".tmp.") || nm.endsWith(".tmp")) &&
-            s.getModificationTime < horizon
-        }
-        .flatMap { s =>
-          // only report what was ACTUALLY removed — a failed delete (e.g. a
-          // permission issue on a shared store) must not read as reaped
-          if (fs.delete(s.getPath, false))
-            Some(s"_cursor/${d.getPath.getName}/${s.getPath.getName}")
-          else None
-        }
+      val entries = fs.listStatus(d.getPath).toSeq
+      val debris = entries.filter { s =>
+        val nm = s.getPath.getName
+        // ".tmp" (no nonce) catches debris from older writers
+        (nm.endsWith(".lock") || nm.contains(".tmp.") || nm.endsWith(".tmp")) &&
+          s.getModificationTime < horizon
+      }
+      val slots = entries.filter(_.getPath.getName.forall(_.isDigit))
+        .map(s => s.getPath.getName.toLong -> s)
+      val agedNewest = slots.collect { case (v, s) if s.getModificationTime < horizon => v }.maxOption
+      val superseded = slots.collect { case (v, s) if agedNewest.exists(v < _) => s }
+      (debris ++ superseded).flatMap { s =>
+        // only report what was ACTUALLY removed — a failed delete (e.g. a
+        // permission issue on a shared store) must not read as reaped
+        if (fs.delete(s.getPath, false))
+          Some(s"_cursor/${d.getPath.getName}/${s.getPath.getName}")
+        else None
+      }
     }
   }
 
@@ -431,7 +442,6 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     new Path(s"$root/$feature/_delta_log/_last_checkpoint")
 
   private def writeDeltaCheckpoint(feature: String, v: Long, schemaJson: String): Unit = {
-    import spark.implicits._
     val manifest = readManifest(feature, v)
     val stats = readStats(feature, v)
     val now = System.currentTimeMillis
@@ -458,17 +468,16 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       }
     }
     val rows = Seq(proto, meta) ++ adds
-    // Spark writes a directory; the Delta layout wants ONE file with the
-    // exact checkpoint name — write to a temp dir, move the single part in
-    val tmp = new Path(s"$root/$feature/_delta_log/.ckpt_tmp_$v")
-    rows.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"checkpoint write for $feature v$v produced no part file"))
+    // the Delta layout wants ONE file with the exact checkpoint name: the
+    // driver writer writes a hidden temp file next to it, renamed in whole
+    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[BucketedStore.CkptRow]()
+    val toRow = enc.createSerializer()
+    val tmp = new Path(s"$root/$feature/_delta_log/.$v.checkpoint.${java.util.UUID.randomUUID()}.tmp")
+    val out = driverParquet(enc.schema)._2(tmp)
+    try rows.foreach(r => out.write(toRow(r))) finally out.close()
     val dest = deltaCheckpointFile(feature, v)
     if (fs.exists(dest)) fs.delete(dest, false)
-    fs.rename(part, dest)
-    fs.delete(tmp, true)
+    fs.rename(tmp, dest)
     writeSmall(lastCheckpointFile(feature), s"""{"version":$v,"size":${rows.length}}""")
   }
 
@@ -674,7 +683,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     import org.apache.parquet.hadoop.Footer
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{
-      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
     val conf = spark.sparkContext.hadoopConfiguration
     val converter = new ParquetToSparkSchemaConverter(
       org.apache.spark.sql.internal.SQLConf.get)
@@ -709,8 +718,17 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * that were checked. The stored rows of the touched buckets drop the
     * batch's keys by an anti-join against the driver-held key set
     * ([[graft.expressions.NotInKeySet]]): a NULL key part never matches,
-    * so NULL-key rows accumulate. A row-sized merge runs the source's own
-    * jobs, its collect and the write — no exchange and no broadcast. */
+    * so NULL-key rows accumulate.
+    *
+    * Which path writes: when the touched dirs agree on one schema, the
+    * batch has exactly its column names and types, and the touched part
+    * files hold at most [[BucketedStore.DriverRewriteMaxBytes]], the
+    * touched buckets are rewritten on the driver by Spark's own parquet
+    * reader and writer ([[rewriteOnDriver]]). The driver then holds the
+    * batch and one stored row at a time, and the merge runs no Spark job
+    * beyond the source's own and its collect. Otherwise (schema evolution,
+    * a large bucket) the rewrite is a Spark write: a scan of the touched
+    * files through the key-set filter, unioned with the batch. */
   def merge(feature: String, updates: DataFrame, entityKeys: Seq[String]): Long = {
     val prev = latestVersion(feature)
       .getOrElse(throw new IllegalArgumentException(s"merge into empty feature $feature; write() first"))
@@ -735,17 +753,100 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       s"merge batch contains duplicate entity keys for $feature; dedupe the batch first")
     val bIdx = upd.schema.fieldIndex("__b")
     val touched = rows.map(_.getInt(bIdx)).toSet
-    val batch = GraftColumn.localFrame(spark, upd.schema, rows)
+    driverTarget(feature, manifest, touched, upd.schema) match {
+      case Some((schema, files)) =>
+        commitTouched(feature, prev, manifest, touched)(
+          rewriteOnDriver(schema, files, entityKeys, keys, upd.schema, rows))
+      case None =>
+        val batch = GraftColumn.localFrame(spark, upd.schema, rows)
+        // current rows of ONLY the touched buckets
+        val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
+        val merged =
+          if (touchedRels.isEmpty) batch
+          else readPaths(feature, prev, touchedRels)
+            .where(GraftColumn.of(NotInKeySet(entityKeys.map(k => GraftColumn.expr(col(k))), keys)))
+            .withColumn("__b", bucketCol(entityKeys))
+            .unionByName(batch, allowMissingColumns = true)
+        commitTouched(feature, prev, manifest, touched)(rewriteWithSpark(merged))
+    }
+  }
 
-    // current rows of ONLY the touched buckets
-    val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
-    val merged =
-      if (touchedRels.isEmpty) batch
-      else readPaths(feature, prev, touchedRels)
-        .where(GraftColumn.of(NotInKeySet(entityKeys.map(k => GraftColumn.expr(col(k))), keys)))
-        .withColumn("__b", bucketCol(entityKeys))
-        .unionByName(batch, allowMissingColumns = true)
-    commitTouched(feature, prev, manifest, touched, merged)
+  /** What [[merge]] needs to rewrite the `touched` buckets on the driver,
+    * or None when the rewrite is a Spark write: the stored schema and each
+    * touched bucket's part files. It is None when the touched dirs
+    * disagree on a schema (a merge into new buckets only takes the schema
+    * of the dir its key-type check read), when the batch (`batch`, with
+    * `__b`) lacks exactly that schema's column names and types (schema
+    * evolution), or when the part files exceed
+    * [[BucketedStore.DriverRewriteMaxBytes]] in all. */
+  private def driverTarget(feature: String, manifest: Map[Int, Seq[String]], touched: Set[Int],
+      batch: StructType): Option[(StructType, Map[Int, Seq[FileStatus]])] = {
+    val rels = touched.toSeq.flatMap(manifest.getOrElse(_, Nil))
+    val ref = if (rels.nonEmpty) rels else manifest.values.headOption.toSeq.flatMap(_.take(1))
+    val cols = batch.filterNot(_.name == "__b").map(f => f.name -> f.dataType)
+    val byName = cols.toMap
+    agreedSchema(feature, ref)
+      .filter(s => s.size == cols.size && byName.size == cols.size &&
+        s.forall(f => byName.get(f.name).exists(DataTypeUtils.sameType(_, f.dataType))))
+      .flatMap { schema =>
+        val files = touched.map(b => b -> manifest.getOrElse(b, Nil).flatMap(dataFiles(feature, _))).toMap
+        if (files.values.flatten.map(_.getLen).sum > BucketedStore.DriverRewriteMaxBytes) None
+        else Some((schema, files))
+      }
+  }
+
+  /** The driver rewrite of [[merge]]: one part file per touched bucket
+    * under `dir/__b=<b>`, holding the bucket's stored rows (`files`, read
+    * and written one row at a time) whose key is not in `keys`, then the
+    * batch's `rows` of that bucket reordered by name into `schema`. The
+    * `tracked` stats come from the same rows, NaN excluded as in
+    * [[computeStats]]. */
+  private def rewriteOnDriver(schema: StructType, files: Map[Int, Seq[FileStatus]],
+      entityKeys: Seq[String], keys: KeySet, batch: StructType, rows: Seq[InternalRow])(
+      dir: Path, tracked: Seq[String]): (StructType, Map[Int, Map[String, (Double, Double)]]) = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow}
+    import org.apache.spark.sql.types.DoubleType
+    def ref(c: String) = BoundReference(schema.fieldIndex(c), schema(c).dataType, nullable = true)
+    // as SaveMode.Overwrite: debris of a crashed attempt never enters the version
+    fs.delete(dir, true)
+    val (ext, open) = driverParquet(schema)
+    val notInBatch = NotInKeySet(entityKeys.map(ref), keys)
+    val bIdx = batch.fieldIndex("__b")
+    val order = schema.map(f => batch.fieldIndex(f.name) -> f.dataType)
+    val statCols = tracked.filter(schema.fieldNames.contains)
+    val asDouble = statCols.map(c =>
+      Cast(ref(c), DoubleType, Option(spark.conf.get("spark.sql.session.timeZone"))))
+    val batchOf = rows.groupBy(_.getInt(bIdx))
+    val stats = files.toSeq.sortBy(_._1).map { case (b, stored) =>
+      val lo = Array.fill(statCols.size)(Double.PositiveInfinity)
+      val hi = Array.fill(statCols.size)(Double.NegativeInfinity)
+      val out = open(new Path(dir, s"__b=$b/part-00000-${java.util.UUID.randomUUID()}.c000$ext"))
+      def put(r: InternalRow): Unit = {
+        out.write(r)
+        asDouble.indices.foreach { i =>
+          asDouble(i).eval(r) match {
+            case d: Double if !d.isNaN => lo(i) = math.min(lo(i), d); hi(i) = math.max(hi(i), d)
+            case _ =>
+          }
+        }
+      }
+      try {
+        readMatching(schema, stored, notInBatch, Nil)(put)
+        batchOf.getOrElse(b, Nil).foreach(r =>
+          put(new GenericInternalRow(order.map { case (i, t) => r.get(i, t) }.toArray)))
+      } finally out.close()
+      b -> statCols.indices.filter(i => lo(i) <= hi(i)).map(i => statCols(i) -> (lo(i), hi(i))).toMap
+    }
+    (StructType(schema.fields :+ batch("__b")), stats.toMap)
+  }
+
+  /** The Spark rewrite of [[merge]] and [[mergeAdd]]: `rewritten` (with
+    * `__b`) written partitioned by bucket into `dir`, and the `tracked`
+    * stats by one narrow agg over it. */
+  private def rewriteWithSpark(rewritten: DataFrame)(dir: Path, tracked: Seq[String])
+      : (StructType, Map[Int, Map[String, (Double, Double)]]) = {
+    rewritten.write.mode(SaveMode.Overwrite).partitionBy("__b").parquet(dir.toString)
+    (rewritten.schema, computeStats(rewritten, tracked.filter(rewritten.columns.contains)))
   }
 
   /** FILE-LEVEL MERGE-ADD for additive profiles: every non-key column of
@@ -793,8 +894,8 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
             if (touchedRels.isEmpty) bp.drop("__b")
             else readPaths(feature, prev, touchedRels)
               .unionByName(bp.drop("__b"), allowMissingColumns = true)
-          commitTouched(feature, prev, manifest, touched,
-            summed(rows).withColumn("__b", bucketCol(entityKeys)))
+          commitTouched(feature, prev, manifest, touched)(
+            rewriteWithSpark(summed(rows).withColumn("__b", bucketCol(entityKeys))))
         } finally bp.unpersist(false)
     }
   }
@@ -808,36 +909,40 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     readManifest(feature, prev)
   }
 
-  /** Commit tail of [[merge]] and [[mergeAdd]]: `rewritten` (with `__b`) is
-    * the COMPLETE new content of the `touched` buckets. It becomes version
-    * prev+1, whose manifest references the untouched buckets' existing
-    * files. `touched` is the driver-held bucket set the caller took from
-    * the batch's rows; every touched bucket holds at least one batch row,
-    * so the rewritten bucket set IS `touched` — no collect needed. */
-  private def commitTouched(feature: String, prev: Long,
-      manifest: Map[Int, Seq[String]], touched: Set[Int], rewritten: DataFrame): Long = {
+  /** Commit tail of [[merge]] and [[mergeAdd]]. `rewrite` writes the
+    * COMPLETE new content of the `touched` buckets under the `files_v<v>`
+    * dir it is given and returns the written schema (with `__b`) and the
+    * per-bucket min/max of the stats columns it is given, the ones the
+    * previous version tracked. The content becomes version prev+1, whose
+    * manifest references the untouched buckets' existing files. `touched`
+    * is the driver-held bucket set the caller took from the batch's rows;
+    * every touched bucket holds at least one batch row, so the rewritten
+    * bucket set IS `touched` — no collect needed. [[merge]]'s driver
+    * rewrite holds only the batch and one stored row at a time; the Spark
+    * rewrite holds nothing on the driver but the stats' ≤ numBuckets rows. */
+  private def commitTouched(feature: String, prev: Long, manifest: Map[Int, Seq[String]],
+      touched: Set[Int])(rewrite: (Path, Seq[String]) =>
+        (StructType, Map[Int, Map[String, (Double, Double)]])): Long = {
     val v = prev + 1
-    rewritten.write.mode(SaveMode.Overwrite)
-      .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
-    val newRels = touched.toSeq.sorted.map(b => b -> s"files_v$v/__b=$b")
-    seedSchema(feature, v, touched, rewritten.schema)
-    writeManifest(feature, v, (manifest -- touched) ++ newRels.map { case (b, r) => b -> Seq(r) })
     // stats: untouched buckets carry forward by reference (their files didn't
     // change); rewritten buckets recompute over the same columns the previous
-    // version tracked — one narrow agg over only the rewritten slice
+    // version tracked, over only the rewritten slice
     val prevStats = readStats(feature, prev)
     val trackedCols = prevStats.values.flatMap(_.keys).toSeq.distinct
+    val (schema, recomputed) = rewrite(new Path(s"$root/$feature/files_v$v"), trackedCols)
+    val newRels = touched.toSeq.sorted.map(b => b -> s"files_v$v/__b=$b")
+    seedSchema(feature, v, touched, schema)
+    writeManifest(feature, v, (manifest -- touched) ++ newRels.map { case (b, r) => b -> Seq(r) })
     val stats =
       if (trackedCols.isEmpty) Map.empty[Int, Map[String, (Double, Double)]]
       else {
-        val recomputed = computeStats(rewritten, trackedCols.filter(rewritten.columns.contains))
         val st = (prevStats -- touched) ++ recomputed
         writeStats(feature, v, st)
         st
       }
     // Delta view: rewritten buckets' new files are added, the replaced files
     // removed; untouched buckets carry implicitly
-    writeDeltaLog(feature, v, rewritten.schema.json, newRels.map(_._2),
+    writeDeltaLog(feature, v, schema.json, newRels.map(_._2),
       manifest.filter(t => touched(t._1)).values.flatten.toSeq, stats)
     v
   }
@@ -1025,7 +1130,10 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         val files = rels.flatMap(dataFiles(feature, _))
         agreedSchema(feature, rels) match {
           case Some(schema) =>
-            GraftColumn.localFrame(spark, schema, readMatching(schema, files, entityKeys, keyValues))
+            val (keep, pushed) = keyEquals(schema, entityKeys, keyValues)
+            val rows = Vector.newBuilder[InternalRow]
+            readMatching(schema, files, keep, pushed)(rows += _.copy())
+            GraftColumn.localFrame(spark, schema, rows.result())
           case None =>
             val df = readPaths(feature, v, rels)
             entityKeys.zip(keyValues).foldLeft(df) { case (d, (k, kv)) =>
@@ -1034,40 +1142,63 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     }
   }
 
-  /** The rows of `files` (all of `schema`) whose key columns equal
-    * `keyValues`, read on the driver by Spark's parquet reader and copied
-    * out of its reused buffers. Keeping a row is the interpreted
-    * `key = CAST(literal AS stored type)`, so a NULL key matches nothing.
-    * The vectorized reader is closed here, also when a read fails; the
-    * row-based one (only for types the vectorized reader lacks) closes at
-    * its end. */
-  private def readMatching(schema: StructType, files: Seq[FileStatus],
-      entityKeys: Seq[String], keyValues: Seq[Any]): Seq[InternalRow] = {
-    import org.apache.spark.paths.SparkPath
+  /** The keep predicate of a lookup over rows of `schema` — the
+    * interpreted `key = CAST(literal AS stored type)`, so a NULL key
+    * matches nothing — and the same equalities as parquet filters. */
+  private def keyEquals(schema: StructType, entityKeys: Seq[String],
+      keyValues: Seq[Any]): (Expression, Seq[Filter]) = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualTo, Predicate}
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo}
     val lits = keyLiterals(keyValues, entityKeys.map(k => schema(k).dataType))
-    val keep = Predicate.createInterpreted(entityKeys.zip(lits).map { case (k, l) =>
-      EqualTo(BoundReference(schema.fieldIndex(k), l.dataType, nullable = true), l)
-    }.reduce[org.apache.spark.sql.catalyst.expressions.Expression](And(_, _)))
+    val keep = entityKeys.zip(lits).map { case (k, l) =>
+      EqualTo(BoundReference(schema.fieldIndex(k), l.dataType, nullable = true), l): Expression
+    }.reduce(And(_, _))
     // parquet's `eq` on NULL means IS NULL, so a NULL literal is not pushed
     val pushed = entityKeys.zip(lits).collect { case (k, l) if l.value != null =>
       org.apache.spark.sql.sources.EqualTo(k, CatalystTypeConverters.convertToScala(l.value, l.dataType))
     }
+    (keep, pushed)
+  }
+
+  /** Hands `f` each row of `files` (all of `schema`) that `keep` (bound to
+    * `schema`) holds for, read on the driver by Spark's parquet reader one
+    * row at a time. `f` sees the reader's reused buffer, so it copies what
+    * it holds on to. `pushed` only lets the reader skip row groups; `keep`
+    * decides. The vectorized reader is closed here, also when a read or
+    * `f` fails; the row-based one (only for types the vectorized reader
+    * lacks) closes at its end. */
+  private def readMatching(schema: StructType, files: Seq[FileStatus], keep: Expression,
+      pushed: Seq[Filter])(f: InternalRow => Unit): Unit = {
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.catalyst.expressions.Predicate
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val holds = Predicate.createInterpreted(keep)
     val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), schema, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       GraftColumn.hadoopConf(spark))
-    files.flatMap { f =>
-      val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f),
-        0L, f.getLen, Array.empty[String], f.getModificationTime, f.getLen))
-      try rows.filter(keep.eval).map(_.copy()).toVector
+    files.foreach { file =>
+      val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(file),
+        0L, file.getLen, Array.empty[String], file.getModificationTime, file.getLen))
+      try rows.foreach(r => if (holds.eval(r)) f(r))
       finally rows match {
         case c: AutoCloseable => c.close()
         case _ =>
       }
     }
+  }
+
+  /** Spark's own parquet writer, opened on the driver: `prepareWrite`
+    * configures the job as a Spark write of `schema` does, so a file gets
+    * the same codec, extension and footer metadata. Returns that extension
+    * (".snappy.parquet" by default) and an opener of one file at a path. */
+  private def driverParquet(schema: StructType): (String, Path => OutputWriter) = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val job = Job.getInstance(GraftColumn.hadoopConf(spark))
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    (factory.getFileExtension(ctx), p => factory.newInstance(p.toString, schema, ctx))
   }
 
   /** Each literal as a Catalyst literal of the stored key column's type. */
@@ -1144,8 +1275,9 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     dead.foreach(rel => fs.delete(new Path(s"$root/$feature/$rel"), true))
     BucketedStore.evict(root, feature, horizon, dead.toSet)
     // drop files_vN roots with no remaining bucket DIRS so the layout stays
-    // listable at scale (Spark leaves a _SUCCESS marker in every root, so an
-    // emptiness check would never fire — the marker goes with the root)
+    // listable at scale (a Spark write leaves a _SUCCESS marker in its root,
+    // so an emptiness check would never fire — the marker goes with the
+    // root; a root [[merge]] wrote on the driver has no marker)
     fs.listStatus(featureDir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("files_v"))
       .foreach { vdir =>
@@ -1341,6 +1473,12 @@ object BucketedStore {
     scala.collection.concurrent.TrieMap.empty[(String, String, String), StructType]
   private[core] val mergedSchemaCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), StructType]
+
+  /** Largest sum of part-file bytes in the touched buckets that a [[merge]]
+    * rewrites on the driver. A larger rewrite is a Spark write, the one
+    * path that splits a bucket's rewrite across tasks: a guard against a
+    * large bucket on one driver thread, not a tuned crossover. */
+  private val DriverRewriteMaxBytes = 16L << 20
 
   /** Drop what a vacuum of (root, feature) reclaimed from the caches. */
   private def evict(root: String, feature: String, horizon: Long, deadRels: Set[String]): Unit = {

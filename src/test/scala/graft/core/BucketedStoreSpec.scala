@@ -599,8 +599,12 @@ class BucketedStoreSpec extends SparkSpec {
       .map(_.split("/f/").last).toSet
     assert(live2 == native2)
     // next multiple of 5 rolls the checkpoint forward
-    (1 to 3).foreach(i =>
-      store.merge("f", Seq((900L + i, s"x$i")).toDF("id", "name"), Seq("id"))) // v23..v25
+    (1 to 2).foreach(i =>
+      store.merge("f", Seq((900L + i, s"x$i")).toDF("id", "name"), Seq("id"))) // v23, v24
+    // the checkpoint-writing commit of a local batch runs no Spark job
+    val (_, ckptJobs) = jobsDuring(
+      store.merge("f", Seq((903L, "x3")).toDF("id", "name"), Seq("id")))     // v25
+    assert(ckptJobs == 0, s"checkpoint-writing commit ran $ckptJobs Spark jobs")
     val last2 = scala.io.Source.fromFile(new java.io.File(logDir, "_last_checkpoint")).mkString
     assert(last2.contains("\"version\":25"), last2)
     assert(store.deltaLiveFiles("f")._2 == 0)
@@ -731,9 +735,17 @@ class BucketedStoreSpec extends SparkSpec {
     * two marker jobs bound the window: events arrive in order, so once the
     * closing marker is seen every job started between them was counted. */
   private def jobsDuring[T](body: => T): (T, Int) = {
+    val (r, names) = jobNamesDuring(body)
+    (r, names.size)
+  }
+
+  /** `body`'s result and the names of the Spark jobs it ran, each the
+    * names of its stages ("parquet at BucketedStore.scala:…" for a
+    * Spark-written store file). */
+  private def jobNamesDuring[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val open = new java.util.concurrent.atomic.AtomicBoolean(false)
     val closed = scala.concurrent.Promise[Unit]()
     val listener = new SparkListener {
@@ -741,7 +753,8 @@ class BucketedStoreSpec extends SparkSpec {
         Option(js.properties).map(_.getProperty("spark.job.description")).orNull match {
           case "jobsDuring:open" => open.set(true)
           case "jobsDuring:close" => closed.trySuccess(())
-          case _ => if (open.get && !closed.isCompleted) started.incrementAndGet()
+          case _ => if (open.get && !closed.isCompleted)
+            started.add(js.stageInfos.map(_.name).mkString("; "))
         }
     }
     def marker(name: String): Unit = {
@@ -754,7 +767,7 @@ class BucketedStoreSpec extends SparkSpec {
       val r = body
       marker("jobsDuring:close")
       scala.concurrent.Await.result(closed.future, scala.concurrent.duration.Duration(60, "s"))
-      (r, started.get)
+      (r, started.toArray(Array.empty[String]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -896,15 +909,17 @@ class BucketedStoreSpec extends SparkSpec {
     store.write((0L until 1500L).map(k => (k, k * 7, 0L)).toDF("key", "latest", "seq"),
       "latest", Seq("key"))
     // the serving shape: one row through a per-key transform with its own
-    // exchange. Jobs: that exchange, the batch collect and the write
+    // exchange. Jobs: that exchange and the batch collect; the write runs on
+    // the driver
     val serve = Seq((42L, 99L, 1L)).toDF("key", "value", "seq")
       .groupBy("key").agg(max_by(col("value"), col("seq")).as("latest"), max("seq").as("seq"))
     val (v1, jobs) = jobsDuring(store.merge("latest", serve, Seq("key")))
-    assert(jobs <= 3, s"one-row merge ran $jobs Spark jobs")
-    // a batch already on the driver costs the write alone
+    assert(jobs <= 2, s"one-row merge ran $jobs Spark jobs")
+    // a batch already on the driver runs no job: the touched bucket is
+    // rewritten on the driver
     val (v2, localJobs) = jobsDuring(
       store.merge("latest", Seq((7L, 5L, 2L)).toDF("key", "latest", "seq"), Seq("key")))
-    assert(localJobs <= 1, s"one-row local merge ran $localJobs Spark jobs")
+    assert(localJobs == 0, s"one-row local merge ran $localJobs Spark jobs")
     assert((v1, v2) == (1L, 2L))
     val cur = store.read("latest", Seq("key"))
     assert(cur.count() == 1500 && cur.select("key").distinct().count() == 1500)
@@ -1020,5 +1035,125 @@ class BucketedStoreSpec extends SparkSpec {
         .map(d => s"files_v$v/${d.getName}")
       assert(written.nonEmpty && written.forall(referenced), s"v$v wrote $written, manifest $referenced")
     }
+  }
+
+  /** `before` minus its rows whose key (column `k`) is a non-NULL key of
+    * `batch`, plus `batch`: the merge's answer, as sorted row strings. */
+  private def upserted(before: Seq[org.apache.spark.sql.Row], batch: Seq[org.apache.spark.sql.Row],
+      k: Int): Seq[String] = {
+    val keys = batch.map(_.get(k)).filter(_ != null).toSet
+    (before.filterNot(r => keys(r.get(k))) ++ batch).map(_.toString).sorted
+  }
+
+  test("a row-sized merge rewrites its touched buckets on the driver, one part file each, with Spark's answer") {
+    val store = new BucketedStore(tmpDir("bdriver"), numBuckets = 8)
+    store.write((1L to 400L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "score"),
+      "f", Seq("id"), statsCols = Seq("score"))
+    def rows(v: Long) = store.read("f", Seq("id"), Some(v)).collect().toSeq
+    def bucket(id: Long) = store.bucketOf(Seq(id), Seq(org.apache.spark.sql.types.LongType))
+    // a junk part file where the next version's touched bucket goes, as a
+    // crashed attempt would leave it
+    val junkDir = new java.io.File(s"${store.root}/f/files_v1/__b=${bucket(7L)}")
+    Seq((999999L, "junk", 0.0)).toDF("id", "name", "score").coalesce(1)
+      .write.parquet(s"${store.root}/junk")
+    junkDir.mkdirs()
+    java.nio.file.Files.copy(new java.io.File(s"${store.root}/junk").listFiles()
+      .find(_.getName.startsWith("part-")).get.toPath, new java.io.File(junkDir, "part-junk.parquet").toPath)
+
+    val batches = Seq(
+      Seq((Some(7L), "SEVEN", Double.NaN), (None, "nullkey", 1.0), (Some(1000L), "new", -3.0)),
+      Seq((Some(8L), "EIGHT", 99.0), (None, "nullkey2", 2.0), (Some(7L), "seven", 7.5)))
+      .map(_.toDF("id", "name", "score"))
+    batches.zipWithIndex.foreach { case (batch, i) =>
+      val before = rows(i.toLong)
+      val (v, jobs) = jobsDuring(store.merge("f", batch, Seq("id")))
+      assert(v == i + 1L && jobs == 0, s"v$v ran $jobs Spark jobs")
+      assert(rows(v).map(_.toString).sorted == upserted(before, batch.collect().toSeq, 0), s"v$v")
+      // one part file per rewritten dir, its footer in the stored column order
+      val manifest = manifestOf(store, "f", v)
+      val rewritten = manifest.values.flatten.filter(_.startsWith(s"files_v$v/")).toSeq
+      val touched = batch.collect().map(r =>
+        store.bucketOf(Seq(r.get(0)), Seq(org.apache.spark.sql.types.LongType))).distinct
+      assert(rewritten.size == touched.length, s"v$v")
+      rewritten.foreach { rel =>
+        val parts = new java.io.File(s"${store.root}/f/$rel").listFiles().map(_.getName)
+          .filter(_.startsWith("part-"))
+        assert(parts.length == 1 && parts.head.endsWith(".snappy.parquet"), s"$rel: ${parts.toSeq}")
+        assert(spark.read.parquet(s"${store.root}/f/$rel").schema.fieldNames.toSeq ==
+          Seq("id", "name", "score"), rel)
+      }
+      // the stats sidecar is Spark's per-bucket min/max over the version
+      val sidecar = scala.io.Source.fromFile(s"${store.root}/f/_graft_log/$v.stats.tsv")
+        .getLines().filter(_.nonEmpty).map { l =>
+          val Array(b, c, mn, mx) = l.split('\t'); (b.toInt, c) -> (mn.toDouble, mx.toDouble)
+        }.toMap
+      val clean = when(!isnan(col("score")), col("score"))
+      val want = store.read("f", Seq("id"), Some(v))
+        .withColumn("__b", pmod(xxhash64(col("id")), lit(8)).cast("int"))
+        .groupBy("__b").agg(min(clean), max(clean)).collect()
+        .collect { case r if !r.isNullAt(1) => (r.getInt(0), "score") -> (r.getDouble(1), r.getDouble(2)) }
+        .toMap
+      assert(sidecar == want, s"v$v")
+      // the Delta mirror replays to the manifest's file set
+      val live = manifest.values.flatten.toSeq.flatMap(rel =>
+        new java.io.File(s"${store.root}/f/$rel").listFiles().map(_.getName)
+          .filter(_.startsWith("part-")).map(n => s"$rel/$n")).toSet
+      assert(store.deltaLiveFiles("f")._1 == live, s"v$v")
+    }
+    assert(!junkDir.listFiles().exists(_.getName == "part-junk.parquet"), "the junk file is cleared")
+    assert(store.read("f", Seq("id")).where(col("id") === 999999L).count() == 0)
+    assert(store.read("f", Seq("id")).where(col("id").isNull).count() == 2, "NULL-key rows accumulate")
+  }
+
+  test("a schema-widening merge and a bucket above the driver-rewrite limit take the Spark write with the same answer") {
+    def sparkWrites(names: Seq[String]) = names.count(_.contains("parquet at BucketedStore"))
+    val store = new BucketedStore(tmpDir("bsparkw"), numBuckets = 4)
+    store.write((1L to 200L).map(i => (i, i.toDouble)).toDF("id", "v"), "w", Seq("id"))
+    val before = store.read("w", Seq("id")).collect().toSeq.map(r => (r.getLong(0), r.getDouble(1), null: String))
+    val batch = Seq((5L, 5.5, "x"), (500L, 1.0, "y")).toDF("id", "v", "note")
+    val (_, names) = jobNamesDuring(store.merge("w", batch, Seq("id")))
+    assert(sparkWrites(names) == 1, names)
+    val got = store.read("w", Seq("id")).select("id", "v", "note").collect().toSeq.map(_.toString).sorted
+    assert(got == upserted(before.map(org.apache.spark.sql.Row.fromTuple(_)), batch.collect().toSeq, 0))
+
+    // one bucket of incompressible rows, more part-file bytes than the
+    // driver rewrite takes
+    val big = new BucketedStore(tmpDir("bbig"), numBuckets = 1)
+    val wide = spark.range(0, 100000).select(col("id"),
+      sha2(col("id").cast("string"), 512).as("h"),
+      sha2(concat(col("id").cast("string"), lit("x")), 512).as("h2"))
+    big.write(wide, "b", Seq("id"))
+    val bytes = new java.io.File(s"${big.root}/b/files_v0/__b=0").listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.length).sum
+    assert(bytes > (16L << 20), s"fixture bucket is only $bytes bytes")
+    val upd = Seq((7L, "H", "H2"), (-1L, "N", "N2")).toDF("id", "h", "h2")
+    val (_, bigNames) = jobNamesDuring(big.merge("b", upd, Seq("id")))
+    assert(sparkWrites(bigNames) == 1, bigNames)
+    val want = wide.join(upd.select("id"), Seq("id"), "left_anti").unionByName(upd)
+    val now = big.read("b", Seq("id"))
+    assert(now.count() == 100001)
+    assert(now.exceptAll(want).isEmpty && want.exceptAll(now).isEmpty)
+  }
+
+  test("vacuum prunes a cursor slot once a newer slot has aged; the value stays and a young successor keeps its predecessor") {
+    import org.apache.hadoop.fs.Path
+    val store = new BucketedStore(tmpDir("bprune"), numBuckets = 4)
+    (0 to 3).foreach(i => store.writeCursor("c", s"v$i"))
+    val dir = new Path(s"${store.root}/_cursor/c")
+    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def slots = hfs.listStatus(dir).map(_.getPath.getName).sorted.toSeq
+    val old = System.currentTimeMillis() - 48L * 3600 * 1000
+    Seq("0", "1", "2").foreach(n => hfs.setTimes(new Path(dir, n), old, old))
+    // 0 and 1 have an aged successor; 2's successor 3 is young
+    assert(store.reapCursorLocks().toSet == Set("_cursor/c/0", "_cursor/c/1"))
+    assert(slots == Seq("2", "3") && store.readCursor("c").contains("v3"))
+    // once 3 ages too, vacuum takes 2 and keeps the newest slot
+    hfs.setTimes(new Path(dir, "3"), old, old)
+    store.write(Seq((1L, "a")).toDF("id", "v"), "t", Seq("id"))
+    store.vacuum("t", keepVersions = 1)
+    assert(slots == Seq("3") && store.readCursor("c").contains("v3"))
+    assert(store.reapCursorLocks().isEmpty, "the newest slot always stays")
+    store.writeCursor("c", "v4")
+    assert(store.readCursor("c").contains("v4") && slots == Seq("3", "4"))
   }
 }
