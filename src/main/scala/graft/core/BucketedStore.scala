@@ -720,15 +720,14 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * ([[graft.expressions.NotInKeySet]]): a NULL key part never matches,
     * so NULL-key rows accumulate.
     *
-    * Which path writes: when the touched dirs agree on one schema, the
-    * batch has exactly its column names and types, and the touched part
-    * files hold at most [[BucketedStore.DriverRewriteMaxBytes]], the
-    * touched buckets are rewritten on the driver by Spark's own parquet
-    * reader and writer ([[rewriteOnDriver]]). The driver then holds the
-    * batch and one stored row at a time, and the merge runs no Spark job
-    * beyond the source's own and its collect. Otherwise (schema evolution,
-    * a large bucket) the rewrite is a Spark write: a scan of the touched
-    * files through the key-set filter, unioned with the batch. */
+    * Which path writes: when the touched dirs agree on one schema and the
+    * batch has exactly its column names and types, the touched buckets
+    * are rewritten on the driver by Spark's own parquet reader and writer
+    * ([[rewriteOnDriver]]). The driver then holds the batch and one stored
+    * row at a time, and the merge runs no Spark job beyond the source's
+    * own and its collect. Otherwise (schema evolution, dirs that disagree)
+    * the rewrite is a Spark write: a scan of the touched files through
+    * the key-set filter, unioned with the batch. */
   def merge(feature: String, updates: DataFrame, entityKeys: Seq[String]): Long = {
     val prev = latestVersion(feature)
       .getOrElse(throw new IllegalArgumentException(s"merge into empty feature $feature; write() first"))
@@ -775,10 +774,9 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * or None when the rewrite is a Spark write: the stored schema and each
     * touched bucket's part files. It is None when the touched dirs
     * disagree on a schema (a merge into new buckets only takes the schema
-    * of the dir its key-type check read), when the batch (`batch`, with
-    * `__b`) lacks exactly that schema's column names and types (schema
-    * evolution), or when the part files exceed
-    * [[BucketedStore.DriverRewriteMaxBytes]] in all. */
+    * of the dir its key-type check read), or when the batch (`batch`,
+    * with `__b`) lacks exactly that schema's column names and types
+    * (schema evolution). */
   private def driverTarget(feature: String, manifest: Map[Int, Seq[String]], touched: Set[Int],
       batch: StructType): Option[(StructType, Map[Int, Seq[FileStatus]])] = {
     val rels = touched.toSeq.flatMap(manifest.getOrElse(_, Nil))
@@ -788,11 +786,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     agreedSchema(feature, ref)
       .filter(s => s.size == cols.size && byName.size == cols.size &&
         s.forall(f => byName.get(f.name).exists(DataTypeUtils.sameType(_, f.dataType))))
-      .flatMap { schema =>
-        val files = touched.map(b => b -> manifest.getOrElse(b, Nil).flatMap(dataFiles(feature, _))).toMap
-        if (files.values.flatten.map(_.getLen).sum > BucketedStore.DriverRewriteMaxBytes) None
-        else Some((schema, files))
-      }
+      .map(_ -> touched.map(b => b -> manifest.getOrElse(b, Nil).flatMap(dataFiles(feature, _))).toMap)
   }
 
   /** The driver rewrite of [[merge]]: one part file per touched bucket
@@ -810,7 +804,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     // as SaveMode.Overwrite: debris of a crashed attempt never enters the version
     fs.delete(dir, true)
     val (ext, open) = driverParquet(schema)
-    val notInBatch = NotInKeySet(entityKeys.map(ref), keys)
+    val readStored = matchingReader(schema, NotInKeySet(entityKeys.map(ref), keys), Nil)
     val bIdx = batch.fieldIndex("__b")
     val order = schema.map(f => batch.fieldIndex(f.name) -> f.dataType)
     val statCols = tracked.filter(schema.fieldNames.contains)
@@ -831,7 +825,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         }
       }
       try {
-        readMatching(schema, stored, notInBatch, Nil)(put)
+        readStored(stored, put)
         batchOf.getOrElse(b, Nil).foreach(r =>
           put(new GenericInternalRow(order.map { case (i, t) => r.get(i, t) }.toArray)))
       } finally out.close()
@@ -1132,7 +1126,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
           case Some(schema) =>
             val (keep, pushed) = keyEquals(schema, entityKeys, keyValues)
             val rows = Vector.newBuilder[InternalRow]
-            readMatching(schema, files, keep, pushed)(rows += _.copy())
+            matchingReader(schema, keep, pushed)(files, rows += _.copy())
             GraftColumn.localFrame(spark, schema, rows.result())
           case None =>
             val df = readPaths(feature, v, rels)
@@ -1160,15 +1154,16 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     (keep, pushed)
   }
 
-  /** Hands `f` each row of `files` (all of `schema`) that `keep` (bound to
-    * `schema`) holds for, read on the driver by Spark's parquet reader one
-    * row at a time. `f` sees the reader's reused buffer, so it copies what
-    * it holds on to. `pushed` only lets the reader skip row groups; `keep`
-    * decides. The vectorized reader is closed here, also when a read or
-    * `f` fails; the row-based one (only for types the vectorized reader
-    * lacks) closes at its end. */
-  private def readMatching(schema: StructType, files: Seq[FileStatus], keep: Expression,
-      pushed: Seq[Filter])(f: InternalRow => Unit): Unit = {
+  /** A driver reader of parquet files of `schema`, built once (one reader
+    * function, one predicate) and used for any number of file sets. It
+    * hands `f` each row of `files` that `keep` (bound to `schema`) holds
+    * for, read by Spark's parquet reader one row at a time. `f` sees the
+    * reader's reused buffer, so it copies what it holds on to. `pushed`
+    * only lets the reader skip row groups; `keep` decides. The vectorized
+    * reader is closed here, also when a read or `f` fails; the row-based
+    * one (only for types the vectorized reader lacks) closes at its end. */
+  private def matchingReader(schema: StructType, keep: Expression, pushed: Seq[Filter])
+      : (Seq[FileStatus], InternalRow => Unit) => Unit = {
     import org.apache.spark.paths.SparkPath
     import org.apache.spark.sql.catalyst.expressions.Predicate
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
@@ -1176,7 +1171,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), schema, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       GraftColumn.hadoopConf(spark))
-    files.foreach { file =>
+    (files, f) => files.foreach { file =>
       val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(file),
         0L, file.getLen, Array.empty[String], file.getModificationTime, file.getLen))
       try rows.foreach(r => if (holds.eval(r)) f(r))
@@ -1473,12 +1468,6 @@ object BucketedStore {
     scala.collection.concurrent.TrieMap.empty[(String, String, String), StructType]
   private[core] val mergedSchemaCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), StructType]
-
-  /** Largest sum of part-file bytes in the touched buckets that a [[merge]]
-    * rewrites on the driver. A larger rewrite is a Spark write, the one
-    * path that splits a bucket's rewrite across tasks: a guard against a
-    * large bucket on one driver thread, not a tuned crossover. */
-  private val DriverRewriteMaxBytes = 16L << 20
 
   /** Drop what a vacuum of (root, feature) reclaimed from the caches. */
   private def evict(root: String, feature: String, horizon: Long, deadRels: Set[String]): Unit = {

@@ -1105,7 +1105,7 @@ class BucketedStoreSpec extends SparkSpec {
     assert(store.read("f", Seq("id")).where(col("id").isNull).count() == 2, "NULL-key rows accumulate")
   }
 
-  test("a schema-widening merge and a bucket above the driver-rewrite limit take the Spark write with the same answer") {
+  test("a schema-widening merge takes the Spark write with the same answer") {
     def sparkWrites(names: Seq[String]) = names.count(_.contains("parquet at BucketedStore"))
     val store = new BucketedStore(tmpDir("bsparkw"), numBuckets = 4)
     store.write((1L to 200L).map(i => (i, i.toDouble)).toDF("id", "v"), "w", Seq("id"))
@@ -1115,24 +1115,6 @@ class BucketedStoreSpec extends SparkSpec {
     assert(sparkWrites(names) == 1, names)
     val got = store.read("w", Seq("id")).select("id", "v", "note").collect().toSeq.map(_.toString).sorted
     assert(got == upserted(before.map(org.apache.spark.sql.Row.fromTuple(_)), batch.collect().toSeq, 0))
-
-    // one bucket of incompressible rows, more part-file bytes than the
-    // driver rewrite takes
-    val big = new BucketedStore(tmpDir("bbig"), numBuckets = 1)
-    val wide = spark.range(0, 100000).select(col("id"),
-      sha2(col("id").cast("string"), 512).as("h"),
-      sha2(concat(col("id").cast("string"), lit("x")), 512).as("h2"))
-    big.write(wide, "b", Seq("id"))
-    val bytes = new java.io.File(s"${big.root}/b/files_v0/__b=0").listFiles()
-      .filter(_.getName.startsWith("part-")).map(_.length).sum
-    assert(bytes > (16L << 20), s"fixture bucket is only $bytes bytes")
-    val upd = Seq((7L, "H", "H2"), (-1L, "N", "N2")).toDF("id", "h", "h2")
-    val (_, bigNames) = jobNamesDuring(big.merge("b", upd, Seq("id")))
-    assert(sparkWrites(bigNames) == 1, bigNames)
-    val want = wide.join(upd.select("id"), Seq("id"), "left_anti").unionByName(upd)
-    val now = big.read("b", Seq("id"))
-    assert(now.count() == 100001)
-    assert(now.exceptAll(want).isEmpty && want.exceptAll(now).isEmpty)
   }
 
   test("vacuum prunes a cursor slot once a newer slot has aged; the value stays and a young successor keeps its predecessor") {
