@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import java.nio.charset.StandardCharsets
 import graft.expressions.{KeySet, NotInKeySet}
@@ -723,7 +723,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * Which path writes: when the touched dirs agree on one schema and the
     * batch has exactly its column names and types, the touched buckets
     * are rewritten on the driver by Spark's own parquet reader and writer
-    * ([[rewriteOnDriver]]). The driver then holds the batch and one stored
+    * ([[writeOnDriver]]). The driver then holds the batch and one stored
     * row at a time, and the merge runs no Spark job beyond the source's
     * own and its collect. Otherwise (schema evolution, dirs that disagree)
     * the rewrite is a Spark write: a scan of the touched files through
@@ -734,15 +734,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     val manifest = hashManifest(feature, prev, "merge")
 
     val upd = updates.withColumn("__b", bucketCol(entityKeys))
-    // xxhash64 hashes by type: a key of another type than the stored one
-    // routes to another bucket and would never meet its stored row
-    manifest.values.headOption.foreach { rels =>
-      val stored = schemaOf(feature, prev, rels.take(1))
-      entityKeys.foreach(k => require(
-        DataTypeUtils.sameType(stored(k).dataType, upd.schema(k).dataType),
-        s"merge into $feature: key $k is ${upd.schema(k).dataType.simpleString} in the " +
-          s"batch but ${stored(k).dataType.simpleString} in the store"))
-    }
+    requireStoredKeyTypes("merge", feature, prev, manifest, upd.schema, entityKeys)
     val rows = GraftColumn.collectInternal(upd)
     val keys = KeySet.of(upd.schema, entityKeys, rows)
     // one-row-per-key upsert contract: a batch with duplicate keys would
@@ -754,8 +746,14 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     val touched = rows.map(_.getInt(bIdx)).toSet
     driverTarget(feature, manifest, touched, upd.schema) match {
       case Some((schema, files)) =>
+        val readStored = matchingReader(schema,
+          NotInKeySet(entityKeys.map(k => boundTo(schema, k)), keys), Nil)
+        val batchOf = byBucket(schema, upd.schema, rows)
         commitTouched(feature, prev, manifest, touched)(
-          rewriteOnDriver(schema, files, entityKeys, keys, upd.schema, rows))
+          writeOnDriver(schema, upd.schema("__b"), touched) { (b, put) =>
+            readStored(files(b), put)
+            batchOf.getOrElse(b, Nil).foreach(put)
+          })
       case None =>
         val batch = GraftColumn.localFrame(spark, upd.schema, rows)
         // current rows of ONLY the touched buckets
@@ -770,13 +768,27 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     }
   }
 
-  /** What [[merge]] needs to rewrite the `touched` buckets on the driver,
-    * or None when the rewrite is a Spark write: the stored schema and each
-    * touched bucket's part files. It is None when the touched dirs
-    * disagree on a schema (a merge into new buckets only takes the schema
-    * of the dir its key-type check read), or when the batch (`batch`,
-    * with `__b`) lacks exactly that schema's column names and types
-    * (schema evolution). */
+  /** Refuses a batch (`batch`, the schema of its rows) whose key types
+    * differ from the stored ones: xxhash64 hashes by type, so such a key
+    * routes to another bucket than its stored row and would never meet
+    * it. The stored types come from one dir's schema. */
+  private def requireStoredKeyTypes(op: String, feature: String, prev: Long,
+      manifest: Map[Int, Seq[String]], batch: StructType, entityKeys: Seq[String]): Unit =
+    manifest.values.headOption.foreach { rels =>
+      val stored = schemaOf(feature, prev, rels.take(1))
+      entityKeys.foreach(k => require(
+        DataTypeUtils.sameType(stored(k).dataType, batch(k).dataType),
+        s"$op into $feature: key $k is ${batch(k).dataType.simpleString} in the " +
+          s"batch but ${stored(k).dataType.simpleString} in the store"))
+    }
+
+  /** What [[merge]] and [[mergeAdd]] need to rewrite the `touched`
+    * buckets on the driver, or None when the rewrite is a Spark write: the
+    * stored schema and each touched bucket's part files. It is None when
+    * the touched dirs disagree on a schema (a batch into new buckets only
+    * takes the schema of the dir its key-type check read), or when the
+    * batch (`batch`, with `__b`) lacks exactly that schema's column names
+    * and types (schema evolution). */
   private def driverTarget(feature: String, manifest: Map[Int, Seq[String]], touched: Set[Int],
       batch: StructType): Option[(StructType, Map[Int, Seq[FileStatus]])] = {
     val rels = touched.toSeq.flatMap(manifest.getOrElse(_, Nil))
@@ -789,29 +801,39 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       .map(_ -> touched.map(b => b -> manifest.getOrElse(b, Nil).flatMap(dataFiles(feature, _))).toMap)
   }
 
-  /** The driver rewrite of [[merge]]: one part file per touched bucket
-    * under `dir/__b=<b>`, holding the bucket's stored rows (`files`, read
-    * and written one row at a time) whose key is not in `keys`, then the
-    * batch's `rows` of that bucket reordered by name into `schema`. The
-    * `tracked` stats come from the same rows, NaN excluded as in
-    * [[computeStats]]. */
-  private def rewriteOnDriver(schema: StructType, files: Map[Int, Seq[FileStatus]],
-      entityKeys: Seq[String], keys: KeySet, batch: StructType, rows: Seq[InternalRow])(
+  private def boundTo(schema: StructType, c: String): BoundReference =
+    BoundReference(schema.fieldIndex(c), schema(c).dataType, nullable = true)
+
+  /** The batch's `rows` (of `batch`, with `__b`) by bucket, each reordered
+    * by name into `schema`. */
+  private def byBucket(schema: StructType, batch: StructType,
+      rows: Seq[InternalRow]): Map[Int, Seq[InternalRow]] = {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val bIdx = batch.fieldIndex("__b")
+    val order = schema.map(f => batch.fieldIndex(f.name) -> f.dataType)
+    rows.groupBy(_.getInt(bIdx)).map { case (b, rs) =>
+      b -> rs.map(r => new GenericInternalRow(order.map { case (i, t) => r.get(i, t) }.toArray))
+    }
+  }
+
+  /** The driver writer of [[merge]] and [[mergeAdd]]: one part file per
+    * bucket of `buckets` under `dir/__b=<b>`, holding the rows of `schema`
+    * that `fill(b, put)` puts, written by Spark's own parquet writer
+    * ([[driverParquet]]) as they come. The `tracked` stats come from the
+    * same rows, NaN excluded as in [[computeStats]]. Returns the written
+    * schema (`schema` and the `bucket` field) and the stats. */
+  private def writeOnDriver(schema: StructType, bucket: StructField, buckets: Set[Int])(
+      fill: (Int, InternalRow => Unit) => Unit)(
       dir: Path, tracked: Seq[String]): (StructType, Map[Int, Map[String, (Double, Double)]]) = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.types.DoubleType
-    def ref(c: String) = BoundReference(schema.fieldIndex(c), schema(c).dataType, nullable = true)
     // as SaveMode.Overwrite: debris of a crashed attempt never enters the version
     fs.delete(dir, true)
     val (ext, open) = driverParquet(schema)
-    val readStored = matchingReader(schema, NotInKeySet(entityKeys.map(ref), keys), Nil)
-    val bIdx = batch.fieldIndex("__b")
-    val order = schema.map(f => batch.fieldIndex(f.name) -> f.dataType)
     val statCols = tracked.filter(schema.fieldNames.contains)
     val asDouble = statCols.map(c =>
-      Cast(ref(c), DoubleType, Option(spark.conf.get("spark.sql.session.timeZone"))))
-    val batchOf = rows.groupBy(_.getInt(bIdx))
-    val stats = files.toSeq.sortBy(_._1).map { case (b, stored) =>
+      Cast(boundTo(schema, c), DoubleType, Option(spark.conf.get("spark.sql.session.timeZone"))))
+    val stats = buckets.toSeq.sorted.map { b =>
       val lo = Array.fill(statCols.size)(Double.PositiveInfinity)
       val hi = Array.fill(statCols.size)(Double.NegativeInfinity)
       val out = open(new Path(dir, s"__b=$b/part-00000-${java.util.UUID.randomUUID()}.c000$ext"))
@@ -824,14 +846,10 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
           }
         }
       }
-      try {
-        readStored(stored, put)
-        batchOf.getOrElse(b, Nil).foreach(r =>
-          put(new GenericInternalRow(order.map { case (i, t) => r.get(i, t) }.toArray)))
-      } finally out.close()
+      try fill(b, put) finally out.close()
       b -> statCols.indices.filter(i => lo(i) <= hi(i)).map(i => statCols(i) -> (lo(i), hi(i))).toMap
     }
-    (StructType(schema.fields :+ batch("__b")), stats.toMap)
+    (StructType(schema.fields :+ bucket), stats.toMap)
   }
 
   /** The Spark rewrite of [[merge]] and [[mergeAdd]]: `rewritten` (with
@@ -850,47 +868,132 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * `union(stored touched rows, batch).groupBy(keys).agg(sum(coalesce(c, 0)))`
     * — keys present on either side appear once, rows of other keys in a
     * touched bucket pass through with +0, duplicate keys inside the batch
-    * are summed too. Untouched buckets carry by manifest reference. One
-    * version per call; the first call on a fresh feature writes the summed
-    * batch.
+    * or among a touched bucket's stored rows are summed too. Untouched
+    * buckets carry by manifest reference. One version per call; the first
+    * call on a fresh feature writes the summed batch. A batch key of
+    * another type than the stored key is refused, as in [[merge]].
     *
     * NULL keys add as ONE group (SQL `GROUP BY` semantics, the same rule
     * as the profile-served drift reads), unlike [[merge]], whose equi-join
     * never matches a NULL key and so accumulates NULL-key rows.
     *
-    * Batch-sized: the batch is persisted, and its rows' bucket ids (one per
-    * row) are collected to the driver for the touched set. */
+    * Batch-sized: the batch's rows, with their bucket ids, are collected
+    * to the driver by ONE execution of `batch`. Which path writes: when
+    * the touched dirs agree on one schema and the batch has exactly its
+    * column names and types, each touched bucket is summed on the driver
+    * ([[driverSums]]: its stored rows streamed through the driver parquet
+    * reader, then the batch's rows of that bucket) and written as one part
+    * file by [[writeOnDriver]]; the driver holds the batch and one
+    * bucket's distinct keys at a time, and no Spark job runs beyond the
+    * source's own. Otherwise (schema evolution, dirs that disagree) the
+    * sum is a Spark `groupBy` over the touched files and the collected
+    * rows, written by a Spark write. */
   def mergeAdd(feature: String, batch: DataFrame, entityKeys: Seq[String]): Long = {
     def summed(rows: DataFrame): DataFrame = {
-      val adds = rows.schema.fields.filterNot(f => entityKeys.contains(f.name))
-      require(adds.nonEmpty &&
-        adds.forall(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]),
-        s"mergeAdd into $feature: needs numeric non-key sum columns, got " +
-          adds.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
-      val sums = adds.map(f =>
-        sum(coalesce(col(f.name), lit(0))).cast(f.dataType).as(f.name))
+      val sums = sumColumns(feature, rows.schema, entityKeys)
       rows.groupBy(entityKeys.map(col): _*)
         .agg(sums.head, sums.tail: _*)
         .select(rows.columns.map(col): _*)
     }
+    val sums = sumColumns(feature, batch.schema, entityKeys)
     latestVersion(feature) match {
       case None => write(summed(batch), feature, entityKeys)
       case Some(prev) =>
         val manifest = hashManifest(feature, prev, "mergeAdd")
-        // persisted: the touched-bucket collect and the summed write both
-        // act on the batch — its builder pipeline runs once
-        val bp = batch.withColumn("__b", bucketCol(entityKeys))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val touched = bp.select("__b").collect().map(_.getInt(0)).toSet
-          val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
-          val rows =
-            if (touchedRels.isEmpty) bp.drop("__b")
-            else readPaths(feature, prev, touchedRels)
-              .unionByName(bp.drop("__b"), allowMissingColumns = true)
-          commitTouched(feature, prev, manifest, touched)(
-            rewriteWithSpark(summed(rows).withColumn("__b", bucketCol(entityKeys))))
-        } finally bp.unpersist(false)
+        val bb = batch.withColumn("__b", bucketCol(entityKeys))
+        requireStoredKeyTypes("mergeAdd", feature, prev, manifest, bb.schema, entityKeys)
+        val rows = GraftColumn.collectInternal(bb)
+        val bIdx = bb.schema.fieldIndex("__b")
+        val touched = rows.map(_.getInt(bIdx)).toSet
+        driverTarget(feature, manifest, touched, bb.schema) match {
+          case Some((schema, files)) =>
+            val readStored = matchingReader(schema, CatLit.TrueLiteral, Nil)
+            val batchOf = byBucket(schema, bb.schema, rows)
+            val sumInto = driverSums(schema, entityKeys, sums)
+            commitTouched(feature, prev, manifest, touched)(
+              writeOnDriver(schema, bb.schema("__b"), touched) { (b, put) =>
+                sumInto({ add =>
+                  readStored(files(b), add)
+                  batchOf.getOrElse(b, Nil).foreach(add)
+                }, put)
+              })
+          case None =>
+            val local = GraftColumn.localFrame(spark, bb.schema, rows).drop("__b")
+            val touchedRels = manifest.filter(t => touched(t._1)).values.flatten.toSeq
+            val all =
+              if (touchedRels.isEmpty) local
+              else readPaths(feature, prev, touchedRels).unionByName(local, allowMissingColumns = true)
+            commitTouched(feature, prev, manifest, touched)(
+              rewriteWithSpark(summed(all).withColumn("__b", bucketCol(entityKeys))))
+        }
+    }
+  }
+
+  /** [[mergeAdd]]'s sum columns over rows of `schema`: per non-key column
+    * `c`, `sum(coalesce(c, 0)).cast(type of c).as(c)`, in schema order. */
+  private def sumColumns(feature: String, schema: StructType, entityKeys: Seq[String])
+      : Seq[org.apache.spark.sql.Column] = {
+    val adds = schema.fields.filterNot(f => entityKeys.contains(f.name))
+    require(adds.nonEmpty &&
+      adds.forall(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]),
+      s"mergeAdd into $feature: needs numeric non-key sum columns, got " +
+        adds.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
+    adds.map(f => sum(coalesce(col(f.name), lit(0))).cast(f.dataType).as(f.name)).toSeq
+  }
+
+  /** [[mergeAdd]]'s per-key sums on the driver, over rows of `schema`.
+    * `sums` ([[sumColumns]]) are analysed as Spark analyses them for the
+    * Spark path's `groupBy` (over an empty `LocalRelation`, no job), and
+    * each sum is then updated and evaluated by its Catalyst aggregate's
+    * own buffer, update and result expressions: the same types, ANSI
+    * overflow errors and decimal rules. Rows group by [[KeySet]]'s key
+    * tuples (NULL parts equal, NaN = NaN, 0.0 = -0.0), as Spark's hash
+    * aggregate groups them, and a group's key is written normalized, as
+    * Spark writes a grouped key. The returned function is called per
+    * bucket with that bucket's rows (`rows` hands each to its callback)
+    * and `put`: it holds one row per distinct key, then puts each, as a
+    * row of `schema`, in first-seen order. */
+  private def driverSums(schema: StructType, entityKeys: Seq[String],
+      sums: Seq[org.apache.spark.sql.Column])
+      : ((InternalRow => Unit) => Unit, InternalRow => Unit) => Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{
+      Attribute, AttributeSeq, BindReferences, GenericInternalRow, InterpretedMutableProjection,
+      JoinedRow, SpecificInternalRow, UnsafeRow}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val agg = GraftColumn.localFrame(spark, schema, Nil).agg(sums.head, sums.tail: _*)
+      .queryExecution.analyzed.collectFirst { case a: Aggregate => a }.get
+    val calls = agg.aggregateExpressions.flatMap(_.collect { case a: AggregateExpression => a })
+    val fns = calls.map(_.aggregateFunction.asInstanceOf[DeclarativeAggregate])
+    val buffer = fns.flatMap(_.aggBufferAttributes)
+    def bound(es: Seq[Expression], input: Seq[Attribute]) =
+      BindReferences.bindReferences(es, AttributeSeq(input))
+    val init = InterpretedMutableProjection.createProjection(bound(fns.flatMap(_.initialValues), Nil))
+    val update = InterpretedMutableProjection.createProjection(
+      bound(fns.flatMap(_.updateExpressions), buffer ++ agg.child.output))
+    val result = agg.aggregateExpressions.map(_.name).zip(bound(agg.aggregateExpressions.map(
+      _.transform { case a: AggregateExpression => fns(calls.indexOf(a)).evaluateExpression }),
+      buffer)).toMap
+    val key = KeySet.tuple(schema, entityKeys)
+    val column: Seq[(UnsafeRow, InternalRow) => Any] = schema.fields.toSeq.map { f =>
+      val k = entityKeys.indexOf(f.name)
+      if (k >= 0) (t: UnsafeRow, _: InternalRow) => t.get(k, f.dataType)
+      else { val r = result(f.name); (_: UnsafeRow, buf: InternalRow) => r.eval(buf) }
+    }
+    (rows, put) => {
+      val groups = new java.util.LinkedHashMap[UnsafeRow, InternalRow]()
+      rows { r =>
+        val t = key(r)
+        var buf = groups.get(t)
+        if (buf == null) {
+          buf = new SpecificInternalRow(buffer.map(_.dataType))
+          init.target(buf)(InternalRow.empty)
+          groups.put(t.copy(), buf)
+        }
+        update.target(buf)(new JoinedRow(buf, r))
+      }
+      groups.forEach((t, buf) =>
+        put(new GenericInternalRow(column.map(_(t, buf)).toArray)))
     }
   }
 
@@ -911,9 +1014,13 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * manifest references the untouched buckets' existing files. `touched`
     * is the driver-held bucket set the caller took from the batch's rows;
     * every touched bucket holds at least one batch row, so the rewritten
-    * bucket set IS `touched` — no collect needed. [[merge]]'s driver
-    * rewrite holds only the batch and one stored row at a time; the Spark
-    * rewrite holds nothing on the driver but the stats' ≤ numBuckets rows. */
+    * bucket set IS `touched` — no collect needed. Which `rewrite` runs is
+    * the caller's choice: [[writeOnDriver]], one part file per touched
+    * bucket, which holds the batch and, for [[merge]], one stored row or,
+    * for [[mergeAdd]], one bucket's distinct keys at a time; or
+    * [[rewriteWithSpark]], which holds nothing on the driver but the
+    * stats' ≤ numBuckets rows and writes one part file per (input
+    * partition, bucket). */
   private def commitTouched(feature: String, prev: Long, manifest: Map[Int, Seq[String]],
       touched: Set[Int])(rewrite: (Path, Seq[String]) =>
         (StructType, Map[Int, Map[String, (Double, Double)]])): Long = {

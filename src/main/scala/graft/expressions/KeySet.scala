@@ -22,10 +22,16 @@ object KeySet {
   /** The distinct key tuples of `rows` (rows of `schema`) at columns
     * `keys`; fewer tuples than rows means two rows share a key. */
   def of(schema: StructType, keys: Seq[String], rows: Seq[InternalRow]): KeySet = {
-    val tuple = projection(keys.map(k =>
-      BoundReference(schema.fieldIndex(k), schema(k).dataType, nullable = true)))
-    new KeySet(rows.map(r => tuple(r).copy()).toSet)
+    val key = tuple(schema, keys)
+    new KeySet(rows.map(r => key(r).copy()).toSet)
   }
+
+  /** The normalized key tuple of columns `keys` of rows of `schema`: two
+    * rows share a key exactly when their tuples are equal. The result row
+    * is reused, so a tuple that is kept must be copied. */
+  def tuple(schema: StructType, keys: Seq[String]): UnsafeProjection =
+    projection(keys.map(k =>
+      BoundReference(schema.fieldIndex(k), schema(k).dataType, nullable = true)))
 
   /** The normalized key tuple of `keys`, the same bytes on the driver and
     * in a task. */

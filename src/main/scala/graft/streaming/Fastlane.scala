@@ -244,7 +244,13 @@ object Fastlane {
     * reading and rewriting only the hash buckets carrying the batch's
     * keys, one store version per batch (the fence itself commits no
     * version), the first batch writing the profile. ONE code path so the
-    * loops cannot drift on the merge-add mechanics. */
+    * loops cannot drift on the merge-add mechanics.
+    *
+    * Per-batch cost: the batch's emptiness check and the builder's own
+    * jobs (its exchange and the collect `mergeAdd` makes of its rows).
+    * `mergeAdd` then sums each touched bucket on the driver and writes it
+    * as one part file, with no Spark write job; only a batch that widens
+    * the profile's schema takes a Spark write. */
   private def ingestAdditive(
       stream: DataFrame, checkpointDir: String, trigger: Trigger,
       store: graft.core.BucketedStore, feature: String, keys: Seq[String])(
@@ -349,8 +355,9 @@ object Fastlane {
     * aggregation) and adds them into the stored vocab profile through
     * [[graft.core.BucketedStore.mergeAdd]]. Per-batch IO is O(batch +
     * touched buckets): only the hash buckets containing the batch's
-    * tokens are read and rewritten, counts add as exact integers — a
-    * 10⁸-token vocabulary costs a batch only its own token set. The
+    * tokens are read and rewritten, on the driver ([[ingestAdditive]]),
+    * counts add as exact integers — a 10⁸-token vocabulary costs a batch
+    * only its own token set. The
     * stream-grown profile is BIT-IDENTICAL to one counted over the
     * accumulated corpus
     * (spec-asserted), and [[graft.ops.TextOps.tokenDriftFromProfiles]]
@@ -380,7 +387,8 @@ object Fastlane {
     * [[graft.ops.Similarity.embeddingShapeDriftFromProfiles]] answer both
     * monitors against a reference profile without ever re-touching the
     * corpora. Per-batch cost: O(batch) + a ≤ dim·bins-row
-    * [[graft.core.BucketedStore.mergeAdd]], independent of corpus size.
+    * [[graft.core.BucketedStore.mergeAdd]] summed on the driver
+    * ([[ingestAdditive]]), independent of corpus size.
     *
     * Replay contract: adds are not idempotent, so batches run under the
     * shared lineage fence ([[fencedApply]]) — same residual windows and
@@ -483,7 +491,8 @@ object Fastlane {
     * single batch (spec-asserted).
     * [[graft.ops.Events.categoryDriftTimelineFromProfiles]] then serves
     * the drift dashboard without re-touching the events. Per-batch cost:
-    * O(batch + touched buckets) via `mergeAdd` — a year-long stored
+    * O(batch + touched buckets) via `mergeAdd`, summed on the driver
+    * ([[ingestAdditive]]) — a year-long stored
     * timeline costs a batch only the time buckets the batch itself spans.
     *
     * Replay contract: adds are not idempotent → the lineage's fence record
@@ -507,7 +516,8 @@ object Fastlane {
     * ([[graft.ops.Events.categoryDriftTimelineByGroupFromProfiles]])
     * reads storage instead of re-scanning the events per refresh. Late
     * events fold into their TRUE (group, bucket); per-batch cost is
-    * O(batch + touched buckets) via `mergeAdd`. Stream-grown ≡
+    * O(batch + touched buckets) via `mergeAdd`, summed on the driver
+    * ([[ingestAdditive]]). Stream-grown ≡
     * batch-built (spec-asserted); adds are not idempotent → the lineage's
     * fence record ([[fencedApply]]); Σn == events ingested is the cheap
     * audit. */
@@ -533,7 +543,8 @@ object Fastlane {
     * accumulated events in a single batch (spec-asserted).
     * [[graft.ops.Events.numericDriftTimelineFromProfiles]] then serves
     * the scalar drift dashboard without re-touching the events. Per-batch
-    * cost: O(batch + touched buckets) via `mergeAdd` — the
+    * cost: O(batch + touched buckets) via `mergeAdd`, summed on the
+    * driver ([[ingestAdditive]]) — the
     * bucket-category loop's shape with bins as the categories.
     *
     * Replay contract: adds are not idempotent → the lineage's fence record
@@ -559,7 +570,7 @@ object Fastlane {
     * serves with zero event scans — "when did source X's value
     * distribution shift" reads storage. Late values fold into their TRUE
     * (group, bucket); per-batch cost O(batch + touched buckets) via
-    * `mergeAdd`. Stream-grown ≡ batch-built (spec-asserted); adds are
+    * `mergeAdd`, summed on the driver ([[ingestAdditive]]). Stream-grown ≡ batch-built (spec-asserted); adds are
     * not idempotent → the lineage's fence record; Σn == values ingested is
     * the cheap audit. */
   def ingestBucketNumericProfileByGroup(
@@ -612,7 +623,8 @@ object Fastlane {
     * single batch (spec-asserted).
     * [[graft.ops.Events.embeddingDriftTimelineFromProfiles]] then serves
     * the representation dashboard with zero corpus scans. Per-batch cost:
-    * O(batch + touched buckets) via `mergeAdd`.
+    * O(batch + touched buckets) via `mergeAdd`, summed on the driver
+    * ([[ingestAdditive]]).
     *
     * Replay contract: adds are not idempotent → the lineage's fence record
     * ([[fencedApply]]); Σn == dim · (vectors ingested) is the cheap

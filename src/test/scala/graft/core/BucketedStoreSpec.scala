@@ -731,47 +731,6 @@ class BucketedStoreSpec extends SparkSpec {
     assert(r3.report.nNovel == 1 && r3.report.nRows == r1.report.nRows)
   }
 
-  /** Spark jobs started while `body` runs. Listener delivery is async, so
-    * two marker jobs bound the window: events arrive in order, so once the
-    * closing marker is seen every job started between them was counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val (r, names) = jobNamesDuring(body)
-    (r, names.size)
-  }
-
-  /** `body`'s result and the names of the Spark jobs it ran, each the
-    * names of its stages ("parquet at BucketedStore.scala:…" for a
-    * Spark-written store file). */
-  private def jobNamesDuring[T](body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val open = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val closed = scala.concurrent.Promise[Unit]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.job.description")).orNull match {
-          case "jobsDuring:open" => open.set(true)
-          case "jobsDuring:close" => closed.trySuccess(())
-          case _ => if (open.get && !closed.isCompleted)
-            started.add(js.stageInfos.map(_.name).mkString("; "))
-        }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobsDuring:open")
-      val r = body
-      marker("jobsDuring:close")
-      scala.concurrent.Await.result(closed.future, scala.concurrent.duration.Duration(60, "s"))
-      (r, started.toArray(Array.empty[String]).toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
-
   /** lookup's rows and schema against `read(...).where(key = literal)`;
     * returns the lookup frame and the Spark jobs its lookup + collect ran. */
   private def sameAsRead(store: BucketedStore, feature: String, keys: Seq[String],
@@ -1045,6 +1004,44 @@ class BucketedStoreSpec extends SparkSpec {
     (before.filterNot(r => keys(r.get(k))) ++ batch).map(_.toString).sorted
   }
 
+  /** The files and sidecars of version `v` of `feature` (keys `keys`,
+    * `nb` buckets), rewritten on the driver for `batch`: one dir per
+    * bucket the batch touches, each holding one `.snappy.parquet` part
+    * file whose footer has the stored `columns` in order; the stats
+    * sidecar, when `statCol` is tracked, is Spark's per-bucket min/max
+    * over the version, NaN excluded; the Delta mirror replays to the
+    * manifest's file set. */
+  private def assertDriverWritten(store: BucketedStore, feature: String, v: Long,
+      keys: Seq[String], nb: Int, batch: org.apache.spark.sql.DataFrame, columns: Seq[String],
+      statCol: Option[String]): Unit = {
+    val bucket = pmod(xxhash64(keys.map(col): _*), lit(nb)).cast("int")
+    val manifest = manifestOf(store, feature, v)
+    val rewritten = manifest.values.flatten.filter(_.startsWith(s"files_v$v/")).toSeq
+    assert(rewritten.size == batch.select(bucket).distinct().count(), s"$feature v$v")
+    rewritten.foreach { rel =>
+      val parts = new java.io.File(s"${store.root}/$feature/$rel").listFiles().map(_.getName)
+        .filter(_.startsWith("part-"))
+      assert(parts.length == 1 && parts.head.endsWith(".snappy.parquet"), s"$rel: ${parts.toSeq}")
+      assert(spark.read.parquet(s"${store.root}/$feature/$rel").schema.fieldNames.toSeq == columns, rel)
+    }
+    statCol.foreach { c =>
+      val sidecar = scala.io.Source.fromFile(s"${store.root}/$feature/_graft_log/$v.stats.tsv")
+        .getLines().filter(_.nonEmpty).map { l =>
+          val Array(b, c, mn, mx) = l.split('\t'); (b.toInt, c) -> (mn.toDouble, mx.toDouble)
+        }.toMap
+      val clean = when(!isnan(col(c)), col(c))
+      val want = store.read(feature, keys, Some(v)).withColumn("__b", bucket)
+        .groupBy("__b").agg(min(clean), max(clean)).collect()
+        .collect { case r if !r.isNullAt(1) => (r.getInt(0), c) -> (r.getDouble(1), r.getDouble(2)) }
+        .toMap
+      assert(sidecar == want, s"$feature v$v")
+    }
+    val live = manifest.values.flatten.toSeq.flatMap(rel =>
+      new java.io.File(s"${store.root}/$feature/$rel").listFiles().map(_.getName)
+        .filter(_.startsWith("part-")).map(n => s"$rel/$n")).toSet
+    assert(store.deltaLiveFiles(feature)._1 == live, s"$feature v$v")
+  }
+
   test("a row-sized merge rewrites its touched buckets on the driver, one part file each, with Spark's answer") {
     val store = new BucketedStore(tmpDir("bdriver"), numBuckets = 8)
     store.write((1L to 400L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "score"),
@@ -1069,36 +1066,7 @@ class BucketedStoreSpec extends SparkSpec {
       val (v, jobs) = jobsDuring(store.merge("f", batch, Seq("id")))
       assert(v == i + 1L && jobs == 0, s"v$v ran $jobs Spark jobs")
       assert(rows(v).map(_.toString).sorted == upserted(before, batch.collect().toSeq, 0), s"v$v")
-      // one part file per rewritten dir, its footer in the stored column order
-      val manifest = manifestOf(store, "f", v)
-      val rewritten = manifest.values.flatten.filter(_.startsWith(s"files_v$v/")).toSeq
-      val touched = batch.collect().map(r =>
-        store.bucketOf(Seq(r.get(0)), Seq(org.apache.spark.sql.types.LongType))).distinct
-      assert(rewritten.size == touched.length, s"v$v")
-      rewritten.foreach { rel =>
-        val parts = new java.io.File(s"${store.root}/f/$rel").listFiles().map(_.getName)
-          .filter(_.startsWith("part-"))
-        assert(parts.length == 1 && parts.head.endsWith(".snappy.parquet"), s"$rel: ${parts.toSeq}")
-        assert(spark.read.parquet(s"${store.root}/f/$rel").schema.fieldNames.toSeq ==
-          Seq("id", "name", "score"), rel)
-      }
-      // the stats sidecar is Spark's per-bucket min/max over the version
-      val sidecar = scala.io.Source.fromFile(s"${store.root}/f/_graft_log/$v.stats.tsv")
-        .getLines().filter(_.nonEmpty).map { l =>
-          val Array(b, c, mn, mx) = l.split('\t'); (b.toInt, c) -> (mn.toDouble, mx.toDouble)
-        }.toMap
-      val clean = when(!isnan(col("score")), col("score"))
-      val want = store.read("f", Seq("id"), Some(v))
-        .withColumn("__b", pmod(xxhash64(col("id")), lit(8)).cast("int"))
-        .groupBy("__b").agg(min(clean), max(clean)).collect()
-        .collect { case r if !r.isNullAt(1) => (r.getInt(0), "score") -> (r.getDouble(1), r.getDouble(2)) }
-        .toMap
-      assert(sidecar == want, s"v$v")
-      // the Delta mirror replays to the manifest's file set
-      val live = manifest.values.flatten.toSeq.flatMap(rel =>
-        new java.io.File(s"${store.root}/f/$rel").listFiles().map(_.getName)
-          .filter(_.startsWith("part-")).map(n => s"$rel/$n")).toSet
-      assert(store.deltaLiveFiles("f")._1 == live, s"v$v")
+      assertDriverWritten(store, "f", v, Seq("id"), 8, batch, Seq("id", "name", "score"), Some("score"))
     }
     assert(!junkDir.listFiles().exists(_.getName == "part-junk.parquet"), "the junk file is cleared")
     assert(store.read("f", Seq("id")).where(col("id") === 999999L).count() == 0)
@@ -1137,5 +1105,122 @@ class BucketedStoreSpec extends SparkSpec {
     assert(store.reapCursorLocks().isEmpty, "the newest slot always stays")
     store.writeCursor("c", "v4")
     assert(store.readCursor("c").contains("v4") && slots == Seq("3", "4"))
+  }
+
+  /** The Spark path's answer to a mergeAdd of `batch` into the rows
+    * `before` (keys `keys`, `nb` buckets) as sorted row strings of
+    * `columns`: the rows of the buckets the batch touches and the batch,
+    * grouped by key with every other column `sum(coalesce(c, 0))` cast to
+    * its type; the other buckets' rows as they are. */
+  private def sparkAdded(before: org.apache.spark.sql.DataFrame, batch: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], nb: Int, columns: Seq[String]): Seq[String] = {
+    val bucket = pmod(xxhash64(keys.map(col): _*), lit(nb)).cast("int")
+    val touched = batch.select(bucket).distinct().as[Int].collect().toSeq
+    val all = before.where(bucket.isin(touched: _*)).unionByName(batch, allowMissingColumns = true)
+    val sums = all.schema.fields.filterNot(f => keys.contains(f.name)).map(f =>
+      sum(coalesce(col(f.name), lit(0))).cast(f.dataType).as(f.name))
+    all.groupBy(keys.map(col): _*).agg(sums.head, sums.tail.toSeq: _*)
+      .unionByName(before.where(!bucket.isin(touched: _*)), allowMissingColumns = true)
+      .select(columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+  }
+
+  test("a row-sized mergeAdd sums its touched buckets on the driver, one part file each, with Spark's answer") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = new BucketedStore(tmpDir("baddrv"), numBuckets = 8)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("n", LongType),
+      StructField("s", DoubleType)))
+    // first made by write(): key 1 is stored twice, and one key is NULL
+    store.write(frame(schema, (1L to 300L).map(i => Row(i, i, i * 0.5)) ++
+      Seq(Row(1L, 10L, 0.25), Row(null, 1L, 1.0))), "f", Seq("id"), statsCols = Seq("s"))
+    val batches = Seq(
+      Seq(Row(1L, 1L, 0.5), Row(5L, 2L, 1.0), Row(5L, 3L, 2.0), Row(null, 1L, 1.5),
+        Row(null, 2L, 2.0), Row(1000L, 4L, -3.0), Row(7L, 1L, Double.NaN)),
+      Seq(Row(8L, 1L, 99.0), Row(null, 1L, 1.0), Row(1000L, 1L, 1.0)))
+      .map(frame(schema, _))
+    val cols = Seq("id", "n", "s")
+    batches.zipWithIndex.foreach { case (batch, i) =>
+      val before = store.read("f", Seq("id"), Some(i.toLong))
+      val want = sparkAdded(before, batch, Seq("id"), 8, cols)
+      val (v, jobs) = jobsDuring(store.mergeAdd("f", batch, Seq("id")))
+      assert(v == i + 1L && jobs == 0, s"v$v ran $jobs Spark jobs")
+      assert(store.read("f", Seq("id"), Some(v)).select(cols.map(col): _*).collect()
+        .map(_.toString).sorted.toSeq == want, s"v$v")
+      assertDriverWritten(store, "f", v, Seq("id"), 8, batch, cols, Some("s"))
+    }
+    val cur = store.read("f", Seq("id"))
+    assert(cur.where(col("id").isNull).select("n").as[Long].collect().toSeq == Seq(5L),
+      "NULL keys add as one group")
+    assert(cur.where(col("id") === 1L).select("n", "s").as[(Long, Double)].collect().toSeq ==
+      Seq((12L, 1.25)), "the stored duplicate folds with the batch's add")
+    assert(cur.where(col("id") === 5L).select("n").as[Long].collect().toSeq == Seq(10L),
+      "in-batch duplicates are summed")
+
+    // Double keys group as Spark groups them: NaN = NaN, 0.0 = -0.0
+    val dbl = StructType(Seq(StructField("k", DoubleType), StructField("n", LongType)))
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    store.write(frame(dbl, Seq(Row(Double.NaN, 1L), Row(0.0, 1L), Row(5.0, 1L))), "d", Seq("k"))
+    val dBatch = frame(dbl, Seq(Row(otherNaN, 2L), Row(-0.0, 3L), Row(Double.NaN, 4L)))
+    val dWant = sparkAdded(store.read("d", Seq("k")), dBatch, Seq("k"), 8, Seq("k", "n"))
+    val (dv, dJobs) = jobsDuring(store.mergeAdd("d", dBatch, Seq("k")))
+    assert(dJobs == 0, s"$dJobs Spark jobs")
+    val dGot = store.read("d", Seq("k")).collect().map(_.toString).sorted.toSeq
+    assert(dGot == dWant && dGot == Seq("[0.0,4]", "[5.0,1]", "[NaN,7]"), dGot)
+    assertDriverWritten(store, "d", dv, Seq("k"), 8, dBatch, Seq("k", "n"), None)
+
+    // a Long sum past Long.MaxValue fails under ANSI and commits no version;
+    // the next add clears what the failed attempt left
+    val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      store.write(Seq((1L, Long.MaxValue - 1), (2L, 5L)).toDF("id", "n"), "o", Seq("id"))
+      val e = intercept[Exception](store.mergeAdd("o", Seq((1L, 5L)).toDF("id", "n"), Seq("id")))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e)
+      assert(store.versions("o") == Seq(0L), "a failed add commits no version")
+      assert(store.mergeAdd("o", Seq((1L, -5L), (2L, 1L)).toDF("id", "n"), Seq("id")) == 1L)
+      assert(store.read("o", Seq("id")).as[(Long, Long)].collect().toSet ==
+        Set((1L, Long.MaxValue - 6), (2L, 6L)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+  }
+
+  test("mergeAdd refuses a batch key of another type than the stored key") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val store = new BucketedStore(tmpDir("baddkey"), numBuckets = 8)
+    store.mergeAdd("p", (0L until 100L).map(k => (k, 1L)).toDF("token", "n"), Seq("token"))
+    store.mergeAdd("p", Seq((1L, 1L)).toDF("token", "n"), Seq("token"))
+    // an Int key hashes as an int: it routes to another bucket than the Long key
+    val k = (0 until 100).find(i =>
+      store.bucketOf(Seq(i), Seq(IntegerType)) != store.bucketOf(Seq(i.toLong), Seq(LongType))).get
+    val e = intercept[IllegalArgumentException](
+      store.mergeAdd("p", Seq((k, 5L)).toDF("token", "n"), Seq("token")))
+    assert(e.getMessage.contains("key token is int in the batch but bigint in the store"), e.getMessage)
+    assert(store.versions("p") == Seq(0L, 1L))
+    assert(store.read("p", Seq("token")).where(col("token") === k).select("n").as[Long]
+      .collect().toSeq == Seq(1L))
+  }
+
+  test("a one-row local mergeAdd runs no Spark job") {
+    val store = new BucketedStore(tmpDir("badd1"), numBuckets = 16)
+    store.mergeAdd("p", (0L until 500L).map(k => (k, 1L)).toDF("token", "n"), Seq("token"))
+    val (v, jobs) = jobsDuring(store.mergeAdd("p", Seq((42L, 2L)).toDF("token", "n"), Seq("token")))
+    assert(v == 1L && jobs == 0, s"v$v ran $jobs Spark jobs")
+    assert(store.lookup("p", Seq("token"), Seq(42L)).select("n").as[Long].collect().toSeq == Seq(3L))
+    assert(store.read("p", Seq("token")).count() == 500)
+  }
+
+  test("a schema-widening mergeAdd takes the Spark write with the same answer") {
+    val store = new BucketedStore(tmpDir("baddw"), numBuckets = 4)
+    store.write((1L to 200L).map(i => (i, i)).toDF("id", "n"), "w", Seq("id"))
+    val before = store.read("w", Seq("id"))
+    // one extra additive column
+    val batch = Seq((5L, 2L, 1L), (5L, 1L, 2L), (500L, 1L, 7L)).toDF("id", "n", "m")
+    val want = sparkAdded(before, batch, Seq("id"), 4, Seq("id", "n", "m"))
+    val (v, names) = jobNamesDuring(store.mergeAdd("w", batch, Seq("id")))
+    // the batch is collected from its local relation with no job and not
+    // persisted: the only jobs are the write's exchange and its file write
+    assert(v == 1L && names.nonEmpty && names.size <= 2 && !names.exists(_.contains("collect at")),
+      names)
+    assert(store.read("w", Seq("id")).select("id", "n", "m").collect().map(_.toString).sorted.toSeq == want)
   }
 }

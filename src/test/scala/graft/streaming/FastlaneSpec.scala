@@ -449,6 +449,29 @@ class FastlaneSpec extends SparkSpec {
     assert(storedRows() == grown, "replayed batches must not double-count")
   }
 
+  test("ingestTokenProfile: a steady-state micro-batch sums into its touched buckets on the driver, one part file each") {
+    val srcDir = tmpDir("tjobs_src")
+    val store = new graft.core.BucketedStore(tmpDir("tjobs_store"), numBuckets = 8)
+    val ckpt = tmpDir("tjobs_ckpt")
+    def stream() = spark.readStream
+      .schema("doc_id LONG, text STRING").json(s"$srcDir/*")
+    Seq((1L, "x x y"), (2L, "y z top")).toDF("doc_id", "text")
+      .write.mode("overwrite").json(s"$srcDir/b1")
+    Fastlane.ingestTokenProfile(stream(), "text", store, "tprof", ckpt)
+      .awaitTermination(60000)
+    Seq((3L, "z z w x"), (4L, "top w")).toDF("doc_id", "text")
+      .write.mode("overwrite").json(s"$srcDir/b2")
+    val (_, names) = jobNamesDuring(
+      Fastlane.ingestTokenProfile(stream(), "text", store, "tprof", ckpt).awaitTermination(60000))
+    // the batch's emptiness check and its profile's exchange and collect;
+    // the store runs no job of its own
+    assert(names.size <= 3, names)
+    assert(store.versions("tprof") == Seq(0L, 1L))
+    val dirs = new java.io.File(s"${store.root}/tprof/files_v1").listFiles().filter(_.isDirectory)
+    assert(dirs.nonEmpty && dirs.forall(_.listFiles().count(_.getName.startsWith("part-")) == 1),
+      dirs.map(d => d.getName -> d.list().toSeq).toSeq)
+  }
+
   test("ingestNumericProfile: stream-grown scalar profile bit-identical to one-shot; profile-served drift == direct; replay fenced") {
     import graft.ops.Stats
     val srcDir = tmpDir("nprof_src")
