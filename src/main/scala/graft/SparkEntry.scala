@@ -9144,7 +9144,7 @@ object SparkEntry {
     implicit val s: SparkSession = spark
     val dir = "/root/testdata/sf0.001"
     val root = java.nio.file.Files.createTempDirectory("graft_entry").toString
-    val store = new core.FeatureStore(root)
+    val store = new core.BucketedStore(root, numBuckets = 16)
     val registry = new core.Registry(root)
     val feature = core.FeatureDef(
       name = "customer_order_stats",
@@ -9156,13 +9156,13 @@ object SparkEntry {
           max(col("o_orderdate")).as("last_order")))
     val input = T(spark, dir, "customer")
       .join(T(spark, dir, "orders"), col("c_custkey") === col("o_custkey"))
-    val r1 = core.PipelineRunner.run(feature, input, store, registry,
+    val r1 = core.PipelineRunner.runBucketed(feature, input, store, registry,
       checks = Seq(core.Checks.notNull("c_custkey"), core.Checks.unique(Seq("c_custkey"))))
     // rerun must be a record-level memo hit — fail the smoke loudly if not
-    val r2 = core.PipelineRunner.run(feature, input, store, registry)
+    val r2 = core.PipelineRunner.runBucketed(feature, input, store, registry)
     require(!r1.memoHit && r2.memoHit && r2.report.nNovel == 0,
       s"memoization contract violated: r1=${r1.report.nNovel} novel, r2=${r2.report.nNovel} novel")
-    store.read(feature.name)
+    store.read(feature.name, feature.entityKeys)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =

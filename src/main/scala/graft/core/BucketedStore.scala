@@ -13,15 +13,25 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import java.nio.charset.StandardCharsets
 import graft.expressions.{KeySet, NotInKeySet}
 
-/** Bucketed versioned store with FILE-LEVEL incremental MERGE — the
-  * Delta-grade upgrade over [[FeatureStore]]'s copy-on-write (SURVEY §4
-  * marks data-skipping/file-level ops as the deferred CUSTOM piece).
+/** The engine's versioned feature store: Delta-lite over plain Parquet
+  * with FILE-LEVEL incremental MERGE (the reference stores features in
+  * Delta Lake via delta-rs — reference: README.md:15; SURVEY §4 marks
+  * data-skipping/file-level ops as the deferred CUSTOM piece). Works on any
+  * Hadoop FS (local, HDFS, s3a). Single-writer-per-feature is assumed (the
+  * reference's orchestrator serializes materializations too).
   *
   * Layout:
   * {{{
-  *   root/<feature>/b=K/v<N>.parquet        // one file per (bucket, write)
-  *   root/<feature>/_graft_log/N.json       // manifest: bucket -> file
+  *   root/<feature>/files_v<N>/__b=K/part-*   // bucket K's files written by version N
+  *   root/<feature>/_graft_log/N.stats.tsv    // sidecar: per-bucket min/max
+  *   root/<feature>/_graft_log/N.zorder       // sidecar: cluster cols (clustered only)
+  *   root/<feature>/_graft_log/N.json         // manifest: bucket -> dirs
   * }}}
+  *
+  * Commit protocol: a version's data files and sidecars are written
+  * first and its manifest LAST — `N.json` is the commit point, so readers
+  * (which resolve the latest manifested version) never see a version
+  * whose sidecars a crash left unwritten.
   *
   * Rows are routed to `numBuckets` stable hash-buckets of the entity key.
   * A MERGE reads ONLY the buckets that updates touch, rewrites those as new
@@ -212,18 +222,31 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         .map(m => m.group(1).toInt -> m.group(2).split(';').toSeq).toMap
     })
 
-  private def writeManifest(feature: String, v: Long, manifest: Map[Int, Seq[String]]): Unit = {
-    val json = manifest.toSeq.sortBy(_._1)
-      .map { case (b, ps) => s""""$b": "${ps.mkString(";")}"""" }.mkString("{", ", ", "}")
-    val out = fs.create(new Path(logDir(feature), s"$v.json"), true)
-    out.write(json.getBytes(StandardCharsets.UTF_8)); out.close()
-    // committing v through THIS JVM refreshes every cache entry the new
-    // version touches — covers the root-recreated-in-place edge (a fresh
-    // store at a previously-used root restarts at v=0 and overwrites any
-    // stale entries as it commits; [[seedSchema]] does the same for the
-    // dirs the commit wrote)
+  /** Commit version `v`: first its sidecars — the stats TSV when `stats`
+    * is non-empty, the cluster columns when `clusterCols` is — then its
+    * manifest, the commit point. A crash before the manifest leaves `v`
+    * uncommitted, and the retry overwrites what the crash left. A sidecar
+    * of `v` this commit does not write is removed: a crashed earlier
+    * attempt at the same `v` can have left one, and the manifest would
+    * adopt it.
+    *
+    * Committing v through THIS JVM refreshes every cache entry the new
+    * version touches — covers the root-recreated-in-place edge (a fresh
+    * store at a previously-used root restarts at v=0 and overwrites any
+    * stale entries as it commits; [[seedSchema]] does the same for the
+    * dirs the commit wrote). */
+  private def commit(feature: String, v: Long, manifest: Map[Int, Seq[String]],
+      stats: Map[Int, Map[String, (Double, Double)]], clusterCols: Seq[String] = Nil): Unit = {
+    if (stats.isEmpty) fs.delete(statsFile(feature, v), false)
+    else writeSmall(statsFile(feature, v), stats.toSeq.sortBy(_._1).flatMap { case (b, cols) =>
+      cols.toSeq.sortBy(_._1).map { case (c, (mn, mx)) => s"$b\t$c\t$mn\t$mx" }
+    }.mkString("\n"))
+    if (clusterCols.isEmpty) fs.delete(layoutFile(feature, v), false)
+    else writeSmall(layoutFile(feature, v), clusterCols.mkString("\t"))
+    writeSmall(new Path(logDir(feature), s"$v.json"), manifest.toSeq.sortBy(_._1)
+      .map { case (b, ps) => s""""$b": "${ps.mkString(";")}"""" }.mkString("{", ", ", "}"))
     BucketedStore.manifestCache.put((root, feature, v), manifest)
-    BucketedStore.statsCache.remove((root, feature, v))
+    BucketedStore.statsCache.put((root, feature, v), stats)
     ()
   }
 
@@ -263,18 +286,6 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
           .map { case (b, rows) => b -> rows.map(r => r._2 -> r._3).toMap }
       }
     })
-
-  private def writeStats(feature: String, v: Long,
-                         stats: Map[Int, Map[String, (Double, Double)]]): Unit = {
-    if (stats.isEmpty) return
-    val txt = stats.toSeq.sortBy(_._1).flatMap { case (b, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, (mn, mx)) => s"$b\t$c\t$mn\t$mx" }
-    }.mkString("\n")
-    val out = fs.create(statsFile(feature, v), true)
-    out.write(txt.getBytes(StandardCharsets.UTF_8)); out.close()
-    BucketedStore.statsCache.put((root, feature, v), stats)
-    ()
-  }
 
   /** One narrow agg pass over the already-bucketed frame: per-bucket min/max
     * of each stats column, collected to the driver (≤ numBuckets rows). */
@@ -525,9 +536,8 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val buckets = bucketed.select("__b").distinct().collect().map(_.getInt(0))
     seedSchema(feature, v, buckets, bucketed.schema)
-    writeManifest(feature, v, buckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap)
     val st = computeStats(bucketed, statsCols)
-    writeStats(feature, v, st)
+    commit(feature, v, buckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap, st)
     // a full write REPLACES the table: previous version's files are removed
     // from the Delta view (they stay on disk for native time travel)
     val prevFiles =
@@ -624,11 +634,8 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val buckets = bucketed.select("__b").distinct().collect().map(_.getInt(0))
     seedSchema(feature, v, buckets, bucketed.schema)
-    writeManifest(feature, v, buckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap)
     val st = computeStats(bucketed, (clusterCols ++ statsCols).distinct)
-    writeStats(feature, v, st)
-    val lay = fs.create(layoutFile(feature, v), true)
-    lay.write(clusterCols.mkString("\t").getBytes(StandardCharsets.UTF_8)); lay.close()
+    commit(feature, v, buckets.map(b => b -> Seq(s"files_v$v/__b=$b")).toMap, st, clusterCols)
     val prevFiles =
       if (v == 0L) Seq.empty else readManifest(feature, v - 1).values.flatten.toSeq
     writeDeltaLog(feature, v, bucketed.schema.json,
@@ -1033,14 +1040,10 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     val (schema, recomputed) = rewrite(new Path(s"$root/$feature/files_v$v"), trackedCols)
     val newRels = touched.toSeq.sorted.map(b => b -> s"files_v$v/__b=$b")
     seedSchema(feature, v, touched, schema)
-    writeManifest(feature, v, (manifest -- touched) ++ newRels.map { case (b, r) => b -> Seq(r) })
     val stats =
       if (trackedCols.isEmpty) Map.empty[Int, Map[String, (Double, Double)]]
-      else {
-        val st = (prevStats -- touched) ++ recomputed
-        writeStats(feature, v, st)
-        st
-      }
+      else (prevStats -- touched) ++ recomputed
+    commit(feature, v, (manifest -- touched) ++ newRels.map { case (b, r) => b -> Seq(r) }, stats)
     // Delta view: rewritten buckets' new files are added, the replaced files
     // removed; untouched buckets carry implicitly
     writeDeltaLog(feature, v, schema.json, newRels.map(_._2),
@@ -1067,8 +1070,6 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val newBuckets = bucketed.select("__b").distinct().collect().map(_.getInt(0))
     seedSchema(feature, v, newBuckets, bucketed.schema)
-    writeManifest(feature, v, manifest ++ newBuckets.map(b =>
-      b -> (manifest.getOrElse(b, Seq.empty) :+ s"files_v$v/__b=$b")).toMap)
     val prevStats = readStats(feature, prev)
     val tracked = prevStats.values.flatMap(_.keys).toSeq.distinct
     val stats =
@@ -1086,9 +1087,10 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
             })
           }.toMap
         }.toMap
-        writeStats(feature, v, widened)
         widened
       }
+    commit(feature, v, manifest ++ newBuckets.map(b =>
+      b -> (manifest.getOrElse(b, Seq.empty) :+ s"files_v$v/__b=$b")).toMap, stats)
     // append = pure adds in the Delta view; nothing is removed
     writeDeltaLog(feature, v, bucketed.schema.json,
       newBuckets.map(b => s"files_v$v/__b=$b").toSeq, Seq.empty, stats)
@@ -1115,11 +1117,10 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
       .partitionBy("__b").parquet(s"$root/$feature/files_v$v")
     val rewritten = bucketed.select("__b").distinct().collect().map(_.getInt(0))
     seedSchema(feature, v, rewritten, bucketed.schema)
-    writeManifest(feature, v, manifest ++ rewritten.map(b =>
-      b -> Seq(s"files_v$v/__b=$b")).toMap)
     // ranges are unchanged by compaction: carry the stats sidecar forward
     val prevStats = readStats(feature, prev)
-    writeStats(feature, v, prevStats)
+    commit(feature, v, manifest ++ rewritten.map(b =>
+      b -> Seq(s"files_v$v/__b=$b")).toMap, prevStats)
     // compaction changes no logical rows — dataChange:false keeps Delta
     // streaming readers from reprocessing the folded files as new data
     writeDeltaLog(feature, v, bucketed.schema.json,
@@ -1565,7 +1566,7 @@ object BucketedStore {
   //  * Out of contract: an external process deleting a store root and
   //    recreating different content at the same path while this JVM holds
   //    entries for it. Recreation through THIS JVM's API is covered —
-  //    writeManifest refreshes/invalidates the keys it commits, and
+  //    commit refreshes the keys it commits, and
   //    seedSchema the dirs it writes.
   private[core] val manifestCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, Long), Map[Int, Seq[String]]]

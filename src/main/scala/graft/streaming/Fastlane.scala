@@ -1,61 +1,31 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, count_distinct, lit, max}
+import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.Path
-import graft.core.{FeatureDef, FeatureStore, Versioning}
+import graft.core.{FeatureDef, Versioning}
 
 /** Fastlane (serving) mode: the reference's single-row low-latency path
   * (reference: README.md:47-55 — "processing a single row — fastlane
   * (serving)", persistent cluster vs per-feature batch cluster).
   *
   * The SAME `FeatureDef.transform` that runs in batch runs here over a
-  * Structured Streaming micro-batch — pipeline code is mode-agnostic by
-  * construction (the reference's design goal). Each micro-batch is
-  * MERGE-upserted into the feature store keyed on the entity, so the stored
-  * table always holds the latest feature value per entity — the
-  * exactly-once-ish contract is idempotent upsert by
-  * (entityKey, __data_hash).
+  * Structured Streaming micro-batch or a single mini-frame — pipeline code
+  * is mode-agnostic by construction (the reference's design goal). The one
+  * serving lane is [[serveBucketed]] (streaming) / [[serveOnceBucketed]]
+  * (one frame): each batch is MERGE-upserted into the
+  * [[graft.core.BucketedStore]] keyed on the entity, rewriting only the
+  * buckets it touches, so the stored table always holds the latest feature
+  * value per entity — the exactly-once-ish contract is idempotent upsert by
+  * (entityKey, __data_hash). The rest of the object is the monitoring and
+  * ingest loops that keep profiles, indexes and deduped corpora current.
   */
 object Fastlane {
 
-  /** Attach a streaming source to a feature pipeline and upsert each
-    * micro-batch into the store. Caller owns query lifecycle (await/stop). */
-  def serve(
-      feature: FeatureDef,
-      stream: DataFrame,
-      store: FeatureStore,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow())
-      (implicit spark: SparkSession): StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val out = Versioning.withSystemColumns(feature.transform(batch), feature)
-          store.merge(feature.name, out, feature.entityKeys,
-            Map("feature" -> feature.name, "mode" -> "fastlane", "batch_id" -> batchId.toString))
-          ()
-        }
-      }
-      .start()
-  }
-
-  /** Warm-session single-row path: run one mini-frame through the identical
-    * pipeline synchronously (lowest-latency serving without a stream). */
-  def serveOnce(feature: FeatureDef, rows: DataFrame, store: FeatureStore)
-               (implicit spark: SparkSession): Long = {
-    val out = Versioning.withSystemColumns(feature.transform(rows), feature)
-    store.merge(feature.name, out, feature.entityKeys,
-      Map("feature" -> feature.name, "mode" -> "fastlane_once"))
-  }
-
-  /** Streaming [[serve]] over the FILE-LEVEL store: each micro-batch
-    * MERGE-upserts through [[graft.core.BucketedStore.merge]], so the
-    * per-batch write cost is |touched buckets|/numBuckets of the table
-    * instead of a full copy-on-write — the serving loop whose steady-state
+  /** Streaming serving lane: each micro-batch goes through
+    * [[serveOnceBucketed]], so the per-batch write cost is |touched
+    * buckets|/numBuckets of the table — the serving loop whose steady-state
     * cost is independent of table size. First batch bootstraps the
     * feature; replays of a bootstrapped batch fall through to merge, which
     * is idempotent per (entityKey, __data_hash). */
@@ -78,136 +48,12 @@ object Fastlane {
       .start()
   }
 
-  /** Warm SERVING SESSION for the copy-on-write route — [[serveOnce]]
-    * with the per-call overheads a long-lived server need not pay twice.
-    * [[serveOnce]] spends most of its wall on fixed per-call costs, not
-    * data: (a) the manifest listings to re-discover the current version,
-    * (b) a SECOND scheduler job per call to materialize the broadcast
-    * side of the anti-join MERGE, and (c) with AQE on, each exchange
-    * stage of these row-sized plans scheduled as its own job. The
-    * session removes all three: the current table is re-anchored on the
-    * version its own write just committed through an UNCHECKED read
-    * (single-writer per feature is already the store's contract; the one
-    * remaining listing per call is `write`'s version allocation — the
-    * commit protocol itself), the merge is ONE fused action — union +
-    * per-key update-wins window filter inside the write job, no
-    * broadcast build — and AQE is pinned off on the session's own
-    * dedicated clone (adaptive re-planning buys nothing on serving-sized
-    * frames and costs a scheduler round per stage). Results are IDENTICAL to
-    * [[serveOnce]]'s merge (update rows replace current rows per entity
-    * key, unmatched — including NULL-KEY rows, which an equi-join merge
-    * never matches — carry over; spec-asserted), and every call still
-    * commits a durable store version.
-    *
-    * Session isolation: the AQE pin is a session-level conf, so pinning
-    * it on the CALLER's SparkSession would make every unrelated query
-    * planned concurrently on that session plan without AQE (the r17
-    * footgun). The constructor therefore CLONES a dedicated serving
-    * session (`spark.newSession()` — same SparkContext, cached data and
-    * UDF/extension registrations, isolated SQLConf), copies the caller's
-    * runtime conf onto it so tuning carries over, and pins AQE off on the
-    * CLONE once — concurrent queries on the caller's session always plan
-    * with their own settings, and the pin needs no per-call save/restore.
-    * Incoming row frames are re-bound onto the serving session (their
-    * ANALYZED plan transplants — resolution already happened against the
-    * caller's catalog), so the whole serve plan executes under the clone.
-    * `serve` is synchronized: the session holds mutable `current` state
-    * and commits versions serially by contract, so a server thread pool
-    * can share one instance safely (calls serialize; run multiple
-    * sessions for parallel serving of DIFFERENT features). */
-  final class ServingSession(feature: FeatureDef, store: FeatureStore)
-      (implicit spark: SparkSession) {
-    import org.apache.spark.sql.expressions.Window
-    private val (serving: SparkSession, skippedKeys: Seq[String]) = {
-      val s = spark.newSession()
-      val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-      // carry the caller's runtime tuning onto the clone (newSession starts
-      // from the context defaults, not the caller's runtime sets); static
-      // or unsettable keys are skipped — they can't differ at runtime —
-      // but each skip is RECORDED and logged once, so a tunable key that
-      // fails to carry over (leaving the clone diverged from the caller's
-      // tuning) is diagnosable instead of silent
-      spark.conf.getAll.foreach { case (k, v) =>
-        try { if (s.conf.get(k, null) != v) s.conf.set(k, v) }
-        catch { case scala.util.control.NonFatal(_) => skipped += k }
-      }
-      if (skipped.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(classOf[ServingSession]).warn(
-          s"ServingSession: ${skipped.size} caller conf key(s) could not " +
-            s"be copied onto the serving clone (static/unsettable): " +
-            s"${skipped.sorted.mkString(", ")}")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      (s, skipped.toSeq)
-    }
-    /** Conf keys the clone could NOT adopt from the caller (static or
-      * otherwise unsettable at runtime) — logged once at construction,
-      * exposed so callers (and the spec) can audit the carry-over. */
-    def skippedConfKeys: Seq[String] = skippedKeys
-    // the store re-bound to the serving session: FeatureStore plans its
-    // reads/writes on the session it was constructed with, and the AQE pin
-    // only helps if THOSE plans run under the clone
-    private val servingStore = new FeatureStore(store.root)(serving)
-    /** Transplant a caller-session frame onto the serving session: the
-      * analyzed plan is session-independent (resolution already ran), only
-      * the planner/conf binding changes. */
-    private def onServing(df: DataFrame): DataFrame =
-      if (df.sparkSession eq serving) df
-      else new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](
-        serving.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        df.queryExecution.analyzed,
-        org.apache.spark.sql.Encoders.row(df.schema))
-    // the current table, re-anchored after each commit on the version this
-    // session itself wrote — the checked read's manifest listing happens
-    // once here, never per call
-    private var current: Option[DataFrame] =
-      servingStore.latestVersion(feature.name)
-        .map(v => servingStore.readCommitted(feature.name, v))
-
-    /** Serve one mini-frame: transform, merge, commit — ONE Spark action.
-      * Returns the new store version. The merge plan: union(current,
-      * update) → coalesce(1) → per-key update-wins window → filter. The
-      * single partition SATISFIES the window's clustering requirement, so
-      * no exchange is planned and no broadcast is built — and one output
-      * task writes one file, which is the right shape for this route: the
-      * COW rewrite-per-call contract already bounds the table to serving
-      * size (the bucketed / append routes are the scale paths), so
-      * multi-task parallelism buys nothing and per-file committer
-      * overhead dominates. Measured on the ServeLatency harness the
-      * p50 sits within ~1.2× of the bare scan+write floor. */
-    def serve(rows: DataFrame): Long = synchronized {
-      val out = Versioning.withSystemColumns(
-        feature.transform(onServing(rows)), feature)
-      val merged = current match {
-        case None => out
-        case Some(cur) =>
-          val keyCols = feature.entityKeys.map(col)
-          val w = Window.partitionBy(keyCols: _*)
-          // a NULL-key current row is kept unconditionally: the
-          // anti-join merge's equi-join never matches NULL keys, while
-          // the window would group NULLs together and drop them
-          val anyNullKey = keyCols.map(_.isNull).reduce(_ || _)
-          cur.withColumn("__upd", lit(0))
-            .unionByName(out.withColumn("__upd", lit(1)),
-              allowMissingColumns = true)
-            .coalesce(1)
-            .withColumn("__anyUpd", max(col("__upd")).over(w))
-            .where(col("__upd") === 1 || col("__anyUpd") === 0 || anyNullKey)
-            .drop("__upd", "__anyUpd")
-      }
-      val v = servingStore.write(merged, feature.name,
-        Map("mode" -> "fastlane_session", "operation" -> "merge"))
-      current = Some(servingStore.readCommitted(feature.name, v))
-      v
-    }
-  }
-
-  /** [[serveOnce]] over the FILE-LEVEL store: the FeatureStore route
-    * rewrites the WHOLE table per upsert (copy-on-write), so its serving
-    * latency grows with table size; the bucketed merge rewrites only the
-    * 1/numBuckets bucket the served key hashes into — the serving write
-    * whose cost is independent of table size. First call bootstraps the
-    * feature (merge requires a base version; bootstrapping here keeps
-    * checkpoint-replay semantics identical to [[serveAppend]]'s). */
+  /** Serve one mini-frame synchronously: transform, system columns, then
+    * a FILE-LEVEL merge that rewrites only the bucket(s) the served keys
+    * hash into — the serving write whose cost is independent of table
+    * size. The first call bootstraps the feature with a full write (merge
+    * requires a base version), so a stream's first batch and its
+    * checkpoint replays need no special case. Returns the new version. */
   def serveOnceBucketed(feature: FeatureDef, rows: DataFrame,
                         store: graft.core.BucketedStore)
                        (implicit spark: SparkSession): Long = {
@@ -946,37 +792,5 @@ object Fastlane {
       flagged.unpersist(false)
       flagged0.unpersist(false)
     }
-  }
-
-  /** High-frequency serving: O(batch) delta append per micro-batch instead of
-    * the O(table) copy-on-write MERGE — the write cost no longer grows with
-    * table size. Read the serving state with
-    * `store.readCurrent(feature, keys)`; run `store.compact` periodically
-    * (e.g. from the batch lane) to fold deltas. */
-  def serveAppend(
-      feature: FeatureDef,
-      stream: DataFrame,
-      store: FeatureStore,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow())
-      (implicit spark: SparkSession): StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val out = Versioning.withSystemColumns(feature.transform(batch), feature)
-          // first batch of a brand-new feature bootstraps the base version
-          // (appendDelta requires one and would otherwise fail this batch on
-          // every checkpoint replay, permanently wedging the query)
-          if (store.latestVersion(feature.name).isEmpty)
-            store.write(out, feature.name,
-              Map("feature" -> feature.name, "mode" -> "fastlane_append_bootstrap",
-                "batch_id" -> batchId.toString))
-          else store.appendDelta(feature.name, out)
-          ()
-        }
-      }
-      .start()
   }
 }

@@ -26,27 +26,27 @@ class FeatureContainerSpec extends SparkSpec {
 
   test("container feature: struct sub-features materialize, memoize, and query by dot path") {
     val root = tmpDir("container")
-    val store = new FeatureStore(root)
+    val store = new BucketedStore(root, numBuckets = 16)
     val registry = new Registry(root)
     val input = Tables.load(spark, sfDir, "customer")
       .join(Tables.load(spark, sfDir, "orders"), col("c_custkey") === col("o_custkey"))
 
-    val r1 = PipelineRunner.run(container, input, store, registry)
+    val r1 = PipelineRunner.runBucketed(container, input, store, registry)
     assert(!r1.memoHit && r1.report.nNovel > 0)
     // sub-feature access by dot path
-    val t = store.read(container.name)
+    val t = store.read(container.name, container.entityKeys)
     val row = t.select(col("c_custkey"), col("order_stats.n_orders"),
       col("order_stats.spend"), col("recency.last"))
       .orderBy("c_custkey").limit(1).collect()(0)
     assert(row.getLong(1) > 0 && row.getDouble(2) > 0)
 
     // struct payloads hash stably: rerun is a record-level memo hit
-    val r2 = PipelineRunner.run(container, input, store, registry)
+    val r2 = PipelineRunner.runBucketed(container, input, store, registry)
     assert(r2.memoHit && r2.report.nNovel == 0)
 
     // changing ONE sub-feature of ONE entity recomputes exactly that record
     val drop = input.select(min("o_orderkey")).collect()(0).getLong(0)
-    val r3 = PipelineRunner.run(container, input.filter(col("o_orderkey") =!= drop),
+    val r3 = PipelineRunner.runBucketed(container, input.filter(col("o_orderkey") =!= drop),
       store, registry)
     assert(r3.report.nNovel == 1)
   }

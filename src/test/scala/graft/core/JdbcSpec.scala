@@ -36,16 +36,19 @@ class JdbcSpec extends SparkSpec {
     val url = s"jdbc:derby:${tmpDir("derby")}/catdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-    val store = new FeatureStore(tmpDir("jdbc_store"))
+    val store = new BucketedStore(tmpDir("jdbc_store"), numBuckets = 16)
     val registry = new JdbcRegistry(url, "graft_runs", props)
     val feature = FeatureDef("cnt_by_seg", Seq("c_mktsegment"), "v1",
       df => df.groupBy("c_mktsegment").agg(count(lit(1)).as("n")))
     val input = graft.Tables.load(spark, sfDir, "customer")
-    val r1 = PipelineRunner.run(feature, input, store, registry)
+    val up = Seq("customer-v1")
+    val r1 = PipelineRunner.runBucketed(feature, input, store, registry, upstreamDataVersions = up)
     assert(!r1.memoHit && r1.report.status == "ok")
-    // second run: the fingerprint/memo machinery reads back THROUGH JDBC
-    val r2 = PipelineRunner.run(feature, input, store, registry)
+    // second run: the fingerprint short-circuit reads the last run back
+    // THROUGH JDBC
+    val r2 = PipelineRunner.runBucketed(feature, input, store, registry, upstreamDataVersions = up)
     assert(r2.memoHit && r2.report.nNovel == 0)
+    assert(r2.report.fingerprint == r1.report.fingerprint)
     assert(registry.runs(Some("cnt_by_seg")).count() == 2)
   }
 }

@@ -6,81 +6,60 @@ import org.apache.spark.sql.functions._
 class StoreSpec extends SparkSpec {
   import spark.implicits._
 
+  private def rows(store: BucketedStore, asOf: Option[Long] = None) =
+    store.read("f", Seq("id"), asOf).as[(Int, String)].collect().sortBy(_._1).toSeq
+
   test("versioned writes + time travel") {
-    val store = new FeatureStore(tmpDir("store"))
-    val v0 = store.write(Seq((1, "a"), (2, "b")).toDF("id", "x"), "f")
-    val v1 = store.write(Seq((1, "a2"), (2, "b"), (3, "c")).toDF("id", "x"), "f")
+    val store = new BucketedStore(tmpDir("store"), numBuckets = 4)
+    val v0 = store.write(Seq((1, "a"), (2, "b")).toDF("id", "x"), "f", Seq("id"))
+    val v1 = store.write(Seq((1, "a2"), (2, "b"), (3, "c")).toDF("id", "x"), "f", Seq("id"))
     assert(v0 == 0 && v1 == 1)
-    assert(store.read("f").count() == 3)
-    assert(store.read("f", asOfVersion = Some(0)).count() == 2)
-    assert(store.read("f", Some(0)).filter($"id" === 1 && $"x" === "a").count() == 1)
+    assert(rows(store) == Seq((1, "a2"), (2, "b"), (3, "c")))
+    assert(rows(store, Some(0)) == Seq((1, "a"), (2, "b")))
     assert(store.versions("f") == Seq(0L, 1L))
-    assert(store.manifest("f", 1).contains("\"version\": \"1\""))
   }
 
   test("merge upserts by key and keeps unmatched rows") {
-    val store = new FeatureStore(tmpDir("store"))
-    store.write(Seq((1, "a"), (2, "b")).toDF("id", "x"), "f")
+    val store = new BucketedStore(tmpDir("store"), numBuckets = 4)
+    store.write(Seq((1, "a"), (2, "b")).toDF("id", "x"), "f", Seq("id"))
     store.merge("f", Seq((2, "B!"), (3, "c")).toDF("id", "x"), Seq("id"))
-    val out = store.read("f").as[(Int, String)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq((1, "a"), (2, "B!"), (3, "c")))
+    assert(rows(store) == Seq((1, "a"), (2, "B!"), (3, "c")))
     // time travel still sees the pre-merge state
-    assert(store.read("f", Some(0)).count() == 2)
+    assert(rows(store, Some(0)) == Seq((1, "a"), (2, "b")))
   }
 
-  test("reading a missing feature fails; readOrEmpty yields empty frame") {
-    val store = new FeatureStore(tmpDir("store"))
-    intercept[IllegalArgumentException](store.read("nope"))
-    val empty = store.readOrEmpty("nope",
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType))))
-    assert(empty.count() == 0)
+  test("reading a missing feature or version fails") {
+    val store = new BucketedStore(tmpDir("store"), numBuckets = 4)
+    intercept[IllegalArgumentException](store.read("nope", Seq("id")))
+    store.write(Seq((1, "a")).toDF("id", "x"), "f", Seq("id"))
+    intercept[java.io.FileNotFoundException](store.read("f", Seq("id"), Some(5)))
   }
 
   test("vacuum keeps the newest versions and removes the rest") {
-    val store = new FeatureStore(tmpDir("store"))
-    import spark.implicits._
-    (0 until 4).foreach(i => store.write(Seq((i, s"v$i")).toDF("id", "x"), "f"))
-    val dropped = store.vacuum("f", keepLast = 2)
-    assert(dropped == Seq(0L, 1L))
-    assert(store.versions("f") == Seq(2L, 3L))
-    assert(store.read("f").as[(Int, String)].head() == ((3, "v3")))
-    intercept[IllegalArgumentException](store.read("f", Some(0)))
-  }
-
-  test("append-delta: O(batch) upserts overlay the base, compact folds them") {
-    val store = new FeatureStore(tmpDir("store"))
-    import spark.implicits._
-    store.write(Seq((1, "a"), (2, "b")).toDF("id", "x"), "f")
-    store.appendDelta("f", Seq((2, "B1"), (3, "c")).toDF("id", "x"))
-    store.appendDelta("f", Seq((2, "B2")).toDF("id", "x"))  // later delta wins
-    val cur = store.readCurrent("f", Seq("id")).as[(Int, String)].collect().sortBy(_._1).toSeq
-    assert(cur == Seq((1, "a"), (2, "B2"), (3, "c")))
-    // base version unchanged until compaction (time travel intact)
-    assert(store.read("f").count() == 2)
-    val v = store.compact("f", Seq("id"))
-    assert(v == 1L)
-    assert(store.readCurrent("f", Seq("id")).count() == 3)
-    assert(store.read("f", Some(0)).count() == 2)
-    // post-compact: no deltas left, readCurrent == read
-    assert(store.read("f").as[(Int, String)].collect().sortBy(_._1).toSeq == cur)
+    val store = new BucketedStore(tmpDir("store"), numBuckets = 4)
+    (0 until 4).foreach(i => store.write(Seq((i, s"v$i")).toDF("id", "x"), "f", Seq("id")))
+    val dropped = store.vacuum("f", keepVersions = 2)
+    assert(dropped.map(_.takeWhile(_ != '/')).distinct.sorted == Seq("files_v0", "files_v1"))
+    assert(rows(store) == Seq((3, "v3")))
+    assert(rows(store, Some(2)) == Seq((2, "v2")))
+    intercept[IllegalStateException](store.read("f", Seq("id"), Some(0)))
   }
 
   test("review workflow: pending -> decide -> approved-only serving gate") {
-    import spark.implicits._
-    val store = new FeatureStore(tmpDir("store"))
+    val store = new BucketedStore(tmpDir("store"), numBuckets = 4)
+    def scored(asOf: Option[Long] = None) = store.read("scored", Seq("id"), asOf)
     val stamped = Review.stampPending(Seq((1, 0.9), (2, 0.2), (3, 0.7)).toDF("id", "score"))
-    store.write(stamped, "scored")
-    assert(Review.pendingQueue(store.read("scored")).count() == 3)
+    store.write(stamped, "scored", Seq("id"))
+    assert(Review.pendingQueue(scored()).count() == 3)
     // reviewer approves high scores, rejects the low one
     val decided = Review.decide(
-      Review.decide(store.read("scored"), col("score") >= 0.5, Review.Approved),
+      Review.decide(scored(), col("score") >= 0.5, Review.Approved),
       col("score") < 0.5, Review.Rejected)
-    store.write(decided, "scored")
-    val served = Review.approvedOnly(store.read("scored")).select("id").as[Int].collect().sorted
+    store.write(decided, "scored", Seq("id"))
+    val served = Review.approvedOnly(scored()).select("id").as[Int].collect().sorted
     assert(served.toSeq == Seq(1, 3))
-    assert(Review.stats(store.read("scored")) == Map("approved" -> 2L, "rejected" -> 1L))
+    assert(Review.stats(scored()) == Map("approved" -> 2L, "rejected" -> 1L))
     // pre-review state still time-travelable
-    assert(Review.pendingQueue(store.read("scored", Some(0))).count() == 3)
+    assert(Review.pendingQueue(scored(Some(0))).count() == 3)
   }
 }

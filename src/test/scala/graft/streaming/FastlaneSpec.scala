@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.core.{FeatureDef, FeatureStore}
+import graft.core.{BucketedStore, FeatureDef}
 import org.apache.spark.sql.functions._
 
 class FastlaneSpec extends SparkSpec {
@@ -39,7 +39,7 @@ class FastlaneSpec extends SparkSpec {
 
   test("fastlane stream: micro-batches upsert into the feature store") {
     val root = tmpDir("fastlane")
-    val store = new FeatureStore(root)
+    val store = new BucketedStore(root, numBuckets = 16)
     val srcDir = tmpDir("fastlane_src")
 
     // batch 1 lands before the stream starts (AvailableNow drains it)
@@ -49,120 +49,27 @@ class FastlaneSpec extends SparkSpec {
     val stream = spark.readStream
       .schema("user_id LONG, value DOUBLE")
       .json(s"$srcDir/*")
-    val q = Fastlane.serve(feature, stream, store, tmpDir("fastlane_ckpt"))
+    val q = Fastlane.serveBucketed(feature, stream, store, tmpDir("fastlane_ckpt"))
     q.awaitTermination(60000)
 
-    val out = store.read(feature.name)
+    val out = store.read(feature.name, feature.entityKeys)
       .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
     assert(out == Map(1L -> 12.5, 2L -> 5.0))
 
-    // fastlane single-row (warm session) path: upsert user 2
-    Fastlane.serveOnce(feature, Seq((2L, 100.0)).toDF("user_id", "value"), store)
-    val out2 = store.read(feature.name)
+    // fastlane single-row path: upsert user 2
+    Fastlane.serveOnceBucketed(feature, Seq((2L, 100.0)).toDF("user_id", "value"), store)
+    val out2 = store.read(feature.name, feature.entityKeys)
       .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
     assert(out2 == Map(1L -> 12.5, 2L -> 100.0))
     // history preserved: pre-upsert version still readable (time travel)
     assert(store.versions(feature.name).size >= 2)
-  }
-
-  test("ServingSession: fused one-action merge == serveOnce route, call by call; versions committed per call") {
-    // two stores, same seed; one served through serveOnce, one through a
-    // warm session — tables must match after every call (update rows
-    // replace, unmatched carry over, duplicate-key update frames keep
-    // both rows, exactly the merge contract)
-    val rootA = tmpDir("sess_a"); val rootB = tmpDir("sess_b")
-    val storeA = new FeatureStore(rootA); val storeB = new FeatureStore(rootB)
-    val seed = Seq((1L, 10.0), (2L, 5.0)).toDF("user_id", "value")
-    Fastlane.serveOnce(feature, seed, storeA)
-    Fastlane.serveOnce(feature, seed, storeB)
-    val session = new Fastlane.ServingSession(feature, storeB)
-    def table(st: FeatureStore) = st.read(feature.name)
-      .select("user_id", "sum_value", "n")
-      .as[(Option[Long], Double, Long)].collect().sortBy(r => (r._1, r._2))
-      .toList
+    // a NULL entity key never matches a stored row: served twice, the
+    // NULL-key row accumulates instead of being replaced
     val nullKey = Seq((0L, 7.0)).toDF("user_id", "value")
       .withColumn("user_id", lit(null).cast("long"))
-    val calls = Seq(
-      Seq((2L, 100.0)).toDF("user_id", "value"), // update an existing key
-      Seq((3L, 7.0)).toDF("user_id", "value"),   // insert a new key
-      Seq((1L, 1.0), (1L, 2.0), (4L, 4.0))       // multi-row frame, dup key
-        .toDF("user_id", "value"),
-      // NULL entity key, TWICE: an equi-join merge never matches NULL
-      // keys, so both routes must ACCUMULATE the null-key rows
-      nullKey, nullKey
-    )
-    for ((df, i) <- calls.zipWithIndex) {
-      Fastlane.serveOnce(feature, df, storeA)
-      session.serve(df)
-      assert(table(storeB) == table(storeA),
-        s"session diverged from serveOnce after call $i")
-    }
-    // the null-key convention is the accumulate one (not silently replaced)
-    assert(table(storeA).count(_._1.isEmpty) == 2,
-      s"null-key rows must accumulate: ${table(storeA)}")
-    // every call committed a durable, time-travelable version
-    assert(storeB.versions(feature.name).size == 1 + calls.size)
-    // a session starting on an EMPTY feature bootstraps like serveOnce
-    val rootC = tmpDir("sess_c"); val storeC = new FeatureStore(rootC)
-    new Fastlane.ServingSession(feature, storeC)
-      .serve(Seq((9L, 3.0)).toDF("user_id", "value"))
-    assert(storeC.read(feature.name).count() == 1L)
-  }
-
-  test("ServingSession: AQE pin is isolated to the session's clone — the caller session plans with AQE mid-serve") {
-    val caller = spark
-    caller.conf.set("spark.sql.adaptive.enabled", "true")
-    val root = tmpDir("sess_aqe"); val store = new FeatureStore(root)
-    // the transform runs INSIDE serve: a concurrent query planned on the
-    // CALLER's session at that moment must still see AQE on — the r17
-    // shape pinned the shared conf and this probe would have read "false"
-    var aqeDuringServe: Option[String] = None
-    val probing = FeatureDef(
-      name = "aqe_probe",
-      entityKeys = Seq("user_id"),
-      codeVersion = "v1",
-      transform = df => {
-        aqeDuringServe = Some(caller.conf.get("spark.sql.adaptive.enabled"))
-        df.groupBy("user_id").agg(sum(col("value")).as("sum_value"))
-      })
-    val session = new Fastlane.ServingSession(probing, store)
-    session.serve(Seq((1L, 2.0)).toDF("user_id", "value"))
-    session.serve(Seq((1L, 5.0), (2L, 1.0)).toDF("user_id", "value"))
-    assert(aqeDuringServe.contains("true"),
-      s"caller-session AQE leaked during serve: $aqeDuringServe")
-    // and after: the caller conf was never touched
-    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
-    // served results land correctly (the serve plan ran on the clone)
-    val out = store.read(probing.name)
-      .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
-    assert(out == Map(1L -> 5.0, 2L -> 1.0))
-  }
-
-  test("ServingSession: an unsettable caller conf key is skipped, REPORTED, and does not break construction") {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // smuggle a STATIC key with a clone-divergent value into the caller's
-    // session conf via SQLConf (the RuntimeConfig wrapper would reject the
-    // set; the copy loop then hits it and must skip-and-record, not die)
-    classic.sessionState.conf.setConfString("spark.sql.extensions",
-      "graft.test.BogusExtensions")
-    try {
-      val root = tmpDir("sess_skip"); val store = new FeatureStore(root)
-      val feature = FeatureDef(
-        name = "skip_probe",
-        entityKeys = Seq("user_id"),
-        codeVersion = "v1",
-        transform = df => df.groupBy("user_id")
-          .agg(sum(col("value")).as("sum_value")))
-      val session = new Fastlane.ServingSession(feature, store)
-      // the static key failed to copy but construction survived, and the
-      // failure is auditable instead of silent
-      assert(session.skippedConfKeys.contains("spark.sql.extensions"),
-        s"skipped keys: ${session.skippedConfKeys}")
-      session.serve(Seq((1L, 2.0)).toDF("user_id", "value"))
-      val out = store.read(feature.name)
-        .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
-      assert(out == Map(1L -> 2.0))
-    } finally classic.sessionState.conf.unsetConf("spark.sql.extensions")
+    Fastlane.serveOnceBucketed(feature, nullKey, store)
+    Fastlane.serveOnceBucketed(feature, nullKey, store)
+    assert(store.read(feature.name, feature.entityKeys).where(col("user_id").isNull).count() == 2)
   }
 
   test("ingestDeduped: streaming near-dup gate admits only novel docs across batches") {
@@ -1107,46 +1014,48 @@ class FastlaneSpec extends SparkSpec {
     assert(near3 == 6L)
   }
 
+  /** The upsert contract as a frame: the stored rows whose key `batch`
+    * does not carry, plus the batch's rows. */
+  private def upserted(stored: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame) =
+    stored.join(batch.select(feature.entityKeys.map(col): _*), feature.entityKeys, "left_anti")
+      .unionByName(batch)
+
+  private def state(df: org.apache.spark.sql.DataFrame) = df
+    .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
+
   test("serveBucketed: streaming micro-batches merge file-level; state matches the flat streaming route") {
-    val flat = new FeatureStore(tmpDir("fsbflat"))
-    val bucketed = new graft.core.BucketedStore(tmpDir("fsbbuck"), numBuckets = 16)
+    val bucketed = new BucketedStore(tmpDir("fsbbuck"), numBuckets = 16)
     val srcDir = tmpDir("fsb_src")
-    val ck1 = tmpDir("fsb_ck1"); val ck2 = tmpDir("fsb_ck2")
+    val ck = tmpDir("fsb_ck")
     def stream() = spark.readStream.schema("user_id LONG, value DOUBLE").json(s"$srcDir/*")
-    // batch 1 bootstraps; batch 2 merges (same checkpoints across restarts)
-    Seq((1L, 10.0), (2L, 5.0)).toDF("user_id", "value")
-      .write.mode("overwrite").json(s"$srcDir/b1")
-    Fastlane.serve(feature, stream(), flat, ck1).awaitTermination(60000)
-    Fastlane.serveBucketed(feature, stream(), bucketed, ck2).awaitTermination(60000)
-    Seq((1L, 2.5), (3L, 7.0)).toDF("user_id", "value")
-      .write.mode("overwrite").json(s"$srcDir/b2")
-    Fastlane.serve(feature, stream(), flat, ck1).awaitTermination(60000)
-    Fastlane.serveBucketed(feature, stream(), bucketed, ck2).awaitTermination(60000)
-    def state(df: org.apache.spark.sql.DataFrame) = df
-      .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
-    assert(state(bucketed.read(feature.name, feature.entityKeys)) ==
-      state(flat.readCurrent(feature.name, feature.entityKeys)))
+    // batch 1 bootstraps; batch 2 merges (same checkpoint across restarts)
+    val b1 = Seq((1L, 10.0), (2L, 5.0)).toDF("user_id", "value")
+    val b2 = Seq((1L, 2.5), (3L, 7.0)).toDF("user_id", "value")
+    b1.write.mode("overwrite").json(s"$srcDir/b1")
+    Fastlane.serveBucketed(feature, stream(), bucketed, ck).awaitTermination(60000)
+    b2.write.mode("overwrite").json(s"$srcDir/b2")
+    Fastlane.serveBucketed(feature, stream(), bucketed, ck).awaitTermination(60000)
+    // the state a flat stream of upserts reaches: batch 2 replaces its keys
+    val expected = upserted(feature.transform(b1), feature.transform(b2))
+    assert(state(bucketed.read(feature.name, feature.entityKeys)) == state(expected))
+    assert(state(expected) == Map(1L -> 2.5, 2L -> 5.0, 3L -> 7.0))
     // two stream batches -> bootstrap version + one merge version
     assert(bucketed.versions(feature.name).size == 2)
   }
 
   test("serveOnceBucketed: file-level serving merge rewrites ONE bucket, matches the copy-on-write route") {
-    val flat = new FeatureStore(tmpDir("fsrvflat"))
-    val bucketed = new graft.core.BucketedStore(tmpDir("fsrvbuck"), numBuckets = 16)
-    // seed both stores with the same 200-entity state
+    val bucketed = new BucketedStore(tmpDir("fsrvbuck"), numBuckets = 16)
+    // a 200-entity state, then one served row
     val seed = (1L to 200L).map(i => (i, i * 1.0)).toDF("user_id", "value")
-    Fastlane.serveOnce(feature, seed, flat)
     Fastlane.serveOnceBucketed(feature, seed, bucketed) // bootstrap write
-    // serve the same single row through both routes
     val one = Seq((42L, 99.0)).toDF("user_id", "value")
-    Fastlane.serveOnce(feature, one, flat)
     val vPrev = bucketed.latestVersion(feature.name).get
     Fastlane.serveOnceBucketed(feature, one, bucketed)
-    // identical serving state
-    def state(df: org.apache.spark.sql.DataFrame) = df
-      .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
-    assert(state(bucketed.read(feature.name, feature.entityKeys)) ==
-      state(flat.readCurrent(feature.name, feature.entityKeys)))
+    // the state a copy-on-write upsert of the whole table reaches
+    val expected = upserted(feature.transform(seed), feature.transform(one))
+    assert(state(bucketed.read(feature.name, feature.entityKeys)) == state(expected))
+    assert(state(expected)(42L) == 99.0 && state(expected).size == 200)
     // the bucketed merge rewrote exactly ONE bucket: the new version's file
     // set differs from the previous version's by one bucket dir
     val newFiles = bucketed.read(feature.name, feature.entityKeys).inputFiles.toSet
@@ -1156,43 +1065,19 @@ class FastlaneSpec extends SparkSpec {
     assert((prevFiles & newFiles).nonEmpty, "untouched buckets must carry by reference")
   }
 
-  test("serveAppend bootstraps a brand-new feature, then delta-appends; readCurrent sees both") {
-    val store = new FeatureStore(tmpDir("fappend"))
-    val srcDir = tmpDir("fappend_src")
-    val ckpt = tmpDir("fappend_ckpt")
-    // batch 1 against an EMPTY feature: must bootstrap the base version
-    // instead of failing appendDelta on every checkpoint replay
-    Seq((1L, 10.0), (2L, 5.0)).toDF("user_id", "value")
-      .write.mode("overwrite").json(s"$srcDir/b1")
-    Fastlane.serveAppend(feature,
-      spark.readStream.schema("user_id LONG, value DOUBLE").json(s"$srcDir/*"),
-      store, ckpt).awaitTermination(60000)
-    val v1 = store.readCurrent(feature.name, feature.entityKeys)
-      .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
-    assert(v1 == Map(1L -> 10.0, 2L -> 5.0))
-    // batch 2: O(batch) delta append, merged view through readCurrent
-    Seq((1L, 2.5), (3L, 7.0)).toDF("user_id", "value")
-      .write.mode("overwrite").json(s"$srcDir/b2")
-    Fastlane.serveAppend(feature,
-      spark.readStream.schema("user_id LONG, value DOUBLE").json(s"$srcDir/*"),
-      store, ckpt).awaitTermination(60000)
-    val v2 = store.readCurrent(feature.name, feature.entityKeys)
-      .select("user_id", "sum_value").as[(Long, Double)].collect().toMap
-    assert(v2 == Map(1L -> 2.5, 2L -> 5.0, 3L -> 7.0))
-  }
-
   test("same transform in batch and fastlane produces identical results") {
-    val rootA = tmpDir("modeA"); val rootB = tmpDir("modeB")
-    val storeA = new FeatureStore(rootA); val storeB = new FeatureStore(rootB)
+    val storeA = new BucketedStore(tmpDir("modeA"), numBuckets = 16)
+    val storeB = new BucketedStore(tmpDir("modeB"), numBuckets = 16)
     val data = Seq((1L, 1.0), (1L, 2.0), (2L, 3.0)).toDF("user_id", "value")
-    // batch
-    storeA.write(feature.transform(data), feature.name)
-    // fastlane warm path
-    Fastlane.serveOnce(feature, data, storeB)
-    val a = storeA.read(feature.name).select("user_id", "sum_value", "n")
-      .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
-    val b = storeB.read(feature.name).select("user_id", "sum_value", "n")
-      .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
-    assert(a == b)
+    // batch lane
+    graft.core.PipelineRunner.runBucketed(feature, data, storeA,
+      new graft.core.Registry(storeA.root))
+    // fastlane
+    Fastlane.serveOnceBucketed(feature, data, storeB)
+    def rows(st: BucketedStore) = st.read(feature.name, feature.entityKeys)
+      .select("user_id", "sum_value", "n", "__data_hash", "__code_version")
+      .as[(Long, Double, Long, Long, String)].collect().sortBy(_._1).toSeq
+    assert(rows(storeA) == rows(storeB))
+    assert(rows(storeA).map(r => (r._1, r._2, r._3)) == Seq((1L, 3.0, 2L), (2L, 3.0, 1L)))
   }
 }
