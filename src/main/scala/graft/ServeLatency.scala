@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * the p50 into a 500k-row feature (SPARK_GRAFT_SERVE_BIG_N), and next to
   * them the full batch-lane cost ([[core.PipelineRunner.runBucketed]]: memo
   * anti-join, merge, checks, report) on the same one-row frame — the gap
-  * between the two is what the fastlane exists to avoid.
+  * between the two is what the fastlane exists to avoid. The read side
+  * is timed next to them: p50/p95/p99 over `calls` point lookups
+  * ([[core.BucketedStore.lookup]], collected) on the same 1k-row feature.
   *
   * Usage: runMain graft.ServeLatency [calls]  (default 100)
-  * Prints two JSON lines, {"metric":"serve_latency", ...} and
+  * Prints three JSON lines, {"metric":"serve_latency", ...},
+  * {"metric":"lookup_latency", ...} and
   * {"metric":"serve_latency_large_table", ...}.
   *
   * `--sustained [seconds]` (default 120): the THROUGHPUT record — drive the
@@ -81,6 +84,15 @@ object ServeLatency {
       core.PipelineRunner.runBucketed(feature, oneRow(2000000L + i), store, registry); ()
     }.sorted
     println(s"""{"metric":"serve_latency","calls":$calls,"p50_ms":${fmt(p50)},"p95_ms":${fmt(p95)},"p99_ms":${fmt(p99)},"batch_p50_ms":${fmt(batch(batch.size / 2))},"batch_min_ms":${fmt(batch.head)}}""")
+
+    // point lookups on the same feature, half on keys the serves just wrote
+    def lookup(i: Long): Unit = {
+      val key = if (i % 2 == 0) 4000000L + i % calls + 1 else i % 1000 + 1
+      store.lookup(feature.name, feature.entityKeys, Seq(key)).collect(); ()
+    }
+    timed(100)(lookup)
+    val (l50, l95, l99) = pcts(timed(calls)(lookup))
+    println(s"""{"metric":"lookup_latency","calls":$calls,"p50_ms":${fmt(l50)},"p95_ms":${fmt(l95)},"p99_ms":${fmt(l99)}}""")
 
     // at a LARGE stored table the merge still rewrites one bucket
     // (1/numBuckets of the table) per call, so the p50 should stay near

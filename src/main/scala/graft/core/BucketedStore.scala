@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, GraftColumn, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal => CatLit}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import java.nio.charset.StandardCharsets
@@ -754,7 +753,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     driverTarget(feature, manifest, touched, upd.schema) match {
       case Some((schema, files)) =>
         val readStored = matchingReader(schema,
-          NotInKeySet(entityKeys.map(k => boundTo(schema, k)), keys), Nil)
+          NotInKeySet(entityKeys.map(k => boundTo(schema, k)), keys))
         val batchOf = byBucket(schema, upd.schema, rows)
         commitTouched(feature, prev, manifest, touched)(
           writeOnDriver(schema, upd.schema("__b"), touched) { (b, put) =>
@@ -914,7 +913,7 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         val touched = rows.map(_.getInt(bIdx)).toSet
         driverTarget(feature, manifest, touched, bb.schema) match {
           case Some((schema, files)) =>
-            val readStored = matchingReader(schema, CatLit.TrueLiteral, Nil)
+            val readStored = matchingReader(schema, CatLit.TrueLiteral)
             val batchOf = byBucket(schema, bb.schema, rows)
             val sumInto = driverSums(schema, entityKeys, sums)
             commitTouched(feature, prev, manifest, touched)(
@@ -1201,11 +1200,15 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     * table regardless of table size.
     *
     * When the bucket's dirs agree on one schema, its files are read on the
-    * driver with Spark's own parquet reader (the key pushed down for
-    * row-group skipping) and the matching rows come back as a
+    * driver with Spark's own parquet reader ([[matchingReader]], built once
+    * per store and schema) and the matching rows come back as a
     * `LocalRelation`-backed DataFrame: neither the lookup nor its `collect`
-    * runs a Spark job. A bucket whose dirs disagree (a schema-evolved
-    * multi-dir bucket needs Spark's mergeSchema) is a Spark scan instead.
+    * runs a Spark job. The key is not pushed down as a parquet filter: the
+    * filter would be baked into the reader, so each key would rebuild it,
+    * and it skips nothing here, since a hash bucket's files are not sorted
+    * by key (every row group's min/max spans nearly the bucket's key
+    * range). A bucket whose dirs disagree (a schema-evolved multi-dir
+    * bucket needs Spark's mergeSchema) is a Spark scan instead.
     * Either way the result has the bucket's schema and the rows of
     * `read(...)` where every key column `=` its literal cast to the stored
     * type — SQL `=`, so a NULL key matches nothing. A bucket dir that is
@@ -1232,9 +1235,8 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
         val files = rels.flatMap(dataFiles(feature, _))
         agreedSchema(feature, rels) match {
           case Some(schema) =>
-            val (keep, pushed) = keyEquals(schema, entityKeys, keyValues)
             val rows = Vector.newBuilder[InternalRow]
-            matchingReader(schema, keep, pushed)(files, rows += _.copy())
+            matchingReader(schema, keyEquals(schema, entityKeys, keyValues))(files, rows += _.copy())
             GraftColumn.localFrame(spark, schema, rows.result())
           case None =>
             val df = readPaths(feature, v, rels)
@@ -1244,41 +1246,70 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
     }
   }
 
-  /** The keep predicate of a lookup over rows of `schema` — the
+  /** The keep predicate of a lookup over rows of `schema`: the
     * interpreted `key = CAST(literal AS stored type)`, so a NULL key
-    * matches nothing — and the same equalities as parquet filters. */
+    * matches nothing. */
   private def keyEquals(schema: StructType, entityKeys: Seq[String],
-      keyValues: Seq[Any]): (Expression, Seq[Filter]) = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      keyValues: Seq[Any]): Expression = {
     import org.apache.spark.sql.catalyst.expressions.{And, EqualTo}
     val lits = keyLiterals(keyValues, entityKeys.map(k => schema(k).dataType))
-    val keep = entityKeys.zip(lits).map { case (k, l) =>
+    entityKeys.zip(lits).map { case (k, l) =>
       EqualTo(BoundReference(schema.fieldIndex(k), l.dataType, nullable = true), l): Expression
     }.reduce(And(_, _))
-    // parquet's `eq` on NULL means IS NULL, so a NULL literal is not pushed
-    val pushed = entityKeys.zip(lits).collect { case (k, l) if l.value != null =>
-      org.apache.spark.sql.sources.EqualTo(k, CatalystTypeConverters.convertToScala(l.value, l.dataType))
-    }
-    (keep, pushed)
   }
 
-  /** A driver reader of parquet files of `schema`, built once (one reader
-    * function, one predicate) and used for any number of file sets. It
-    * hands `f` each row of `files` that `keep` (bound to `schema`) holds
-    * for, read by Spark's parquet reader one row at a time. `f` sees the
-    * reader's reused buffer, so it copies what it holds on to. `pushed`
-    * only lets the reader skip row groups; `keep` decides. The vectorized
-    * reader is closed here, also when a read or `f` fails; the row-based
-    * one (only for types the vectorized reader lacks) closes at its end. */
-  private def matchingReader(schema: StructType, keep: Expression, pushed: Seq[Filter])
+  // ---- driver parquet I/O --------------------------------------------------
+  // Building Spark's parquet reader function broadcasts the whole Hadoop
+  // conf, and building its writer factory copies the conf into a new Job,
+  // so both are built once per store instance and schema and reused by
+  // every lookup, merge, mergeAdd and checkpoint. An entry remembers the
+  // `spark.conf.getAll` snapshot it was built under; a call that sees
+  // another snapshot rebuilds and replaces it, so a changed SQL setting
+  // (`spark.hadoop.*` set through `spark.conf` included) is honoured. Edits
+  // made directly to `sparkContext.hadoopConfiguration` after first use are
+  // not seen, as Hadoop's FileSystem cache does not see them for `fs`
+  // either. Both maps stay bounded by the schemas the instance reads or
+  // writes. The reader function and writer factory are stateless per call
+  // (Spark calls them from concurrent tasks), so one entry serves the
+  // concurrent merge-adds of several features.
+
+  private type Snapshot[T] = (Map[String, String], T)
+  private val driverReaders =
+    new java.util.concurrent.ConcurrentHashMap[StructType, Snapshot[PartitionedFile => Iterator[InternalRow]]]()
+  private val driverWriters =
+    new java.util.concurrent.ConcurrentHashMap[StructType, Snapshot[(String, Path => OutputWriter)]]()
+
+  /** `cache`'s entry for `schema` if it was built under the current
+    * session conf, else `build`, stored in its place. */
+  private def underSessionConf[T](cache: java.util.concurrent.ConcurrentHashMap[StructType, Snapshot[T]],
+      schema: StructType)(build: => T): T = {
+    val conf = spark.conf.getAll
+    cache.compute(schema, (_, old) => if (old != null && old._1 == conf) old else conf -> build)._2
+  }
+
+  /** A driver reader of parquet files of `schema`, used for any number of
+    * file sets. It hands `f` each row of `files` that `keep` (bound to
+    * `schema`) holds for, read by Spark's parquet reader one row at a time.
+    * `f` sees the reader's reused buffer, so it copies what it holds on to.
+    * The reader function is the store's cached one for `schema` (see the
+    * section comment); the interpreted predicate holds mutable state, so
+    * it is built per call. The vectorized reader is closed here, also when
+    * a read or `f` fails; the row-based one (only for types the vectorized
+    * reader lacks, or when the session turns vectorized reads off) closes
+    * at its end. */
+  private def matchingReader(schema: StructType, keep: Expression)
       : (Seq[FileStatus], InternalRow => Unit) => Unit = {
     import org.apache.spark.paths.SparkPath
     import org.apache.spark.sql.catalyst.expressions.Predicate
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     val holds = Predicate.createInterpreted(keep)
-    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-      new StructType(), schema, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      GraftColumn.hadoopConf(spark))
+    // a JobConf, because the driver's own broadcast hands the reader back
+    // this very object, and the task context the reader opens per file
+    // copies any other Configuration (a JobConf it takes as is). Nothing
+    // mutates it per file: with no pushed filters the reader only reads it
+    val readFile = underSessionConf(driverReaders, schema)(
+      new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        new org.apache.hadoop.mapred.JobConf(GraftColumn.hadoopConf(spark))))
     (files, f) => files.foreach { file =>
       val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(file),
         0L, file.getLen, Array.empty[String], file.getModificationTime, file.getLen))
@@ -1293,16 +1324,19 @@ final class BucketedStore(val root: String, val numBuckets: Int = 64,
   /** Spark's own parquet writer, opened on the driver: `prepareWrite`
     * configures the job as a Spark write of `schema` does, so a file gets
     * the same codec, extension and footer metadata. Returns that extension
-    * (".snappy.parquet" by default) and an opener of one file at a path. */
-  private def driverParquet(schema: StructType): (String, Path => OutputWriter) = {
-    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-    val job = Job.getInstance(GraftColumn.hadoopConf(spark))
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
-    (factory.getFileExtension(ctx), p => factory.newInstance(p.toString, schema, ctx))
-  }
+    * (".snappy.parquet" by default) and an opener of one file at a path.
+    * Both are the store's cached ones for `schema`, built under the
+    * current session conf (see the section comment). */
+  private def driverParquet(schema: StructType): (String, Path => OutputWriter) =
+    underSessionConf(driverWriters, schema) {
+      import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+      import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+      val job = Job.getInstance(GraftColumn.hadoopConf(spark))
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+      (factory.getFileExtension(ctx), p => factory.newInstance(p.toString, schema, ctx))
+    }
 
   /** Each literal as a Catalyst literal of the stored key column's type. */
   private def keyLiterals(keyValues: Seq[Any], keyTypes: Seq[DataType]): Seq[CatLit] = {

@@ -776,6 +776,7 @@ class BucketedStoreSpec extends SparkSpec {
       .toDF("id", "name", "score"), Seq("id"))
     assert(store.read("fl", Seq("id")).where(col("id").isNull).count() == 1)
     assert(names(Seq(null)).isEmpty, "a NULL key matches nothing")
+    assert(names(Seq(401L)).isEmpty, "a missing key matches nothing")
     // time travel: v0 still has the old row, v1 the merged one
     assert(names(Seq(7L), asOf = Some(0L)) == Seq("name7"))
     assert(names(Seq(7L)) == Seq("SEVEN"))
@@ -799,6 +800,48 @@ class BucketedStoreSpec extends SparkSpec {
     val (wide, _) = sameAsRead(store, "fl", Seq("id"), Seq(7L))
     assert(wide.inputFiles.nonEmpty, "a schema-disagreeing bucket takes the Spark scan")
     assert(wide.columns.contains("note") && wide.count() == 3)
+  }
+
+  test("lookups and one-row merges build the driver parquet reader once, not once per call") {
+    val store = new BucketedStore(tmpDir("bcast"), numBuckets = 8)
+    store.write((1L to 400L).map(i => (i, s"name$i", i * 0.5)).toDF("id", "name", "score"), "fb", Seq("id"))
+    // the first lookup builds the reader (one Hadoop-conf broadcast); the
+    // other 19 reuse it. Building it per call broadcast the conf each time
+    val (found, lookups) = broadcastsDuring((1L to 20L).map(k =>
+      store.lookup("fb", Seq("id"), Seq(k * 13)).collect().map(_.getString(1)).toSeq))
+    assert(found == (1L to 20L).map(k => Seq(s"name${k * 13}")))
+    assert(lookups <= 1, s"20 lookups created $lookups broadcasts")
+    // a merge reads the touched bucket through the same cached reader, so
+    // its only broadcasts are the task binaries of the stages it submits
+    // (the source's exchange and its collect)
+    def serve(k: Long) = Seq((k, s"s$k", 1.0)).toDF("id", "name", "score")
+      .groupBy("id").agg(max("name").as("name"), max("score").as("score"))
+    store.merge("fb", serve(1000L), Seq("id"))
+    val ((_, merges), stages) = stagesDuring(broadcastsDuring((1L to 5L).foreach(k =>
+      store.merge("fb", serve(k), Seq("id")))))
+    assert(merges <= stages, s"5 one-row merges created $merges broadcasts for $stages stages")
+    assert(store.lookup("fb", Seq("id"), Seq(3L)).collect().map(_.getString(1)).toSeq == Seq("s3"))
+  }
+
+  test("the cached driver reader follows the session conf: a changed SQL setting rebuilds it") {
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    val store = new BucketedStore(tmpDir("bconf"), numBuckets = 4)
+    store.write((1L to 100L).map(i => (i, s"name$i")).toDF("id", "name"), "fc", Seq("id"))
+    def look(): Seq[String] = store.lookup("fc", Seq("id"), Seq(42L)).collect().map(_.getString(1)).toSeq
+    assert(look() == Seq("name42"))
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      // the row-based reader, built under the new conf: one new broadcast,
+      // then reused
+      val (rows, rebuilt) = broadcastsDuring(look())
+      assert(rebuilt == 1, s"a changed conf created $rebuilt broadcasts")
+      assert(rows == Seq("name42"))
+      assert(broadcastsDuring(look()) == (Seq("name42"), 0L))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("schema cache: commit-seeded schemas equal Spark's inference; agreeing dirs read without inference") {
