@@ -30,6 +30,9 @@ import os
 import subprocess
 import sys
 
+# the recorder's stackdepth in the usage above
+STACK_DEPTH = 512
+
 # (category, frame patterns): a pattern matches a substring of `class.method`
 CATEGORIES = [
     ("hadoop-conf broadcast", ["SerializableConfiguration$.broadcast", "SparkContext.broadcast"]),
@@ -49,11 +52,11 @@ CATEGORIES = [
 ]
 
 
-def events(path, kind, depth):
+def events(path, kind):
     """Each `kind` event of the recording as (fields, frames, truncated):
     its one-line fields as raw text, its stack leaf first as `class.method`,
-    and whether `jfr` cut the stack at `depth`."""
-    p = subprocess.Popen(["jfr", "print", "--stack-depth", str(depth), "--events", kind, path],
+    and whether `jfr` cut the stack at `STACK_DEPTH`."""
+    p = subprocess.Popen(["jfr", "print", "--stack-depth", str(STACK_DEPTH), "--events", kind, path],
                          stdout=subprocess.PIPE, text=True)
     fields, frames, cut, in_stack = {}, [], False, False
     for line in p.stdout:
@@ -83,17 +86,17 @@ def quoted(value):
     return value.split('"')[1] if value and value.count('"') >= 2 else None
 
 
-def category(frames, cats):
-    for name, patterns in cats:
+def category(frames):
+    for name, patterns in CATEGORIES:
         if any(p in f for f in frames for p in patterns):
             return name
     return "other"
 
 
-def sample_table(path, thread, callers, cats, depth):
+def sample_table(path, thread, callers):
     per_op = {c: collections.Counter() for c in callers}
     total = truncated = 0
-    for fields, frames, cut in events(path, "jdk.ExecutionSample", depth):
+    for fields, frames, cut in events(path, "jdk.ExecutionSample"):
         if not (quoted(fields.get("sampledThread")) or "").startswith(thread):
             continue
         total += 1
@@ -103,7 +106,7 @@ def sample_table(path, thread, callers, cats, depth):
         for c in callers:
             at = [i for i, f in enumerate(frames) if f == c]
             if at:
-                per_op[c][category(frames[:at[-1]], cats)] += 1
+                per_op[c][category(frames[:at[-1]])] += 1
     print(f"samples on threads {thread!r}*: {total} ({truncated} with a truncated stack)")
     for c in callers:
         n = sum(per_op[c].values())
@@ -112,10 +115,10 @@ def sample_table(path, thread, callers, cats, depth):
             print(f"  {k:6d}  {k / n:5.2f}  {name}")
 
 
-def process_table(path, callers, depth):
+def process_table(path, callers):
     by = collections.Counter()
     per_op = collections.Counter()
-    for fields, frames, _ in events(path, "jdk.ProcessStart", depth):
+    for fields, frames, _ in events(path, "jdk.ProcessStart"):
         cmd = (quoted(fields.get("command")) or "").split()
         thread = quoted(fields.get("eventThread"))
         caller = next((f for f in frames if f.startswith(("graft.", "perfbench."))), f"thread {thread}")
@@ -138,17 +141,13 @@ def main():
                     help="the frame of one operation, e.g. graft.core.BucketedStore.lookup (a Scala object's "
                          "method is Object$.method, e.g. graft.streaming.Fastlane$.serveOnceBucketed); "
                          "repeatable")
-    ap.add_argument("--category", action="append", default=[], metavar="NAME=PAT[,PAT]",
-                    help="a category tried before the built-in ones; repeatable")
-    ap.add_argument("--stack-depth", type=int, default=512)
     a = ap.parse_args()
     if not os.path.exists(a.recording):
         sys.exit(f"jfr_breakdown: no such recording {a.recording}")
-    cats = [(n, p.split(",")) for n, p in (c.split("=", 1) for c in a.category)] + CATEGORIES
     callers = a.caller or ["graft.core.BucketedStore.lookup", "graft.core.BucketedStore.merge",
                            "graft.core.BucketedStore.mergeAdd"]
-    sample_table(a.recording, a.thread, callers, cats, a.stack_depth)
-    process_table(a.recording, callers, a.stack_depth)
+    sample_table(a.recording, a.thread, callers)
+    process_table(a.recording, callers)
 
 
 if __name__ == "__main__":
